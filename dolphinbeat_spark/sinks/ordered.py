@@ -11,8 +11,9 @@ Spark restatement used here (SURVEY.md §7.2 step 4):
 - ordering: within each micro-batch, sort by the TOTAL key
   (log_name, log_pos, op-type rank, row_index) — see
   :func:`total_order_cols` — and coalesce to ONE partition before
-  writing; order only at the sink boundary, full parallelism upstream
-  (§7.4 risk note).
+  writing (the protobuf sink instead sorts its parallel-encoded chunks
+  on the driver); order only at the sink boundary, full parallelism
+  upstream (§7.4 risk note).
 - seq: deterministic ``base_seq(batch) + row_number`` where the base
   is persisted per batch id. Structured Streaming replays a failed
   batch with the same batch_id and the same data, so a replay
@@ -35,20 +36,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+#: binlog-semantic rank of the op types that could ever share a
+#: (log_name, log_pos): gtid/begin precede the row images, commit
+#: follows them, and a rotate ending a file at position P comes after
+#: everything that ended at P — never the accident of alphabetical
+#: order (which would sort 'commit' before 'insert'). Every other op
+#: type (insert/update/delete/query/ddl/ddl_failed) ranks 3.
+OP_RANK = {"gtid": 1, "begin": 2, "commit": 4, "rotate": 5}
+
+
 def op_type_rank() -> "F.Column":
-    """Explicit binlog-semantic rank for op types that could ever share
-    a (log_name, log_pos): gtid/begin precede the row images, commit
-    follows them, and a rotate ending a file at position P comes after
-    everything that ended at P — never the accident of alphabetical
-    order (which would sort 'commit' before 'insert')."""
-    return (
-        F.when(F.col("op_type") == "gtid", 1)
-        .when(F.col("op_type") == "begin", 2)
-        .when(F.col("op_type") == "commit", 4)
-        .when(F.col("op_type") == "rotate", 5)
-        .otherwise(3)  # insert/update/delete/query/ddl/ddl_failed
-        .cast("int")
-    )
+    """:data:`OP_RANK` as a column."""
+    rank = F.lit(3)
+    for op, r in OP_RANK.items():
+        rank = F.when(F.col("op_type") == op, r).otherwise(rank)
+    return rank.cast("int")
 
 
 def total_order_cols() -> list:
@@ -404,49 +406,108 @@ def pack_multirow_events(envelope: DataFrame) -> DataFrame:
 
 
 def encode_ops_distributed(envelope: DataFrame, registry) -> DataFrame:
-    """Envelope rows → protobuf Payload chunks, Arrow-batched and
-    distributed (``Payload``'s repeated field makes each op's tagged
-    bytes independently encodable; the payload body is their plain
-    concatenation). Sort keys ride along so the caller can impose the
-    K1 total order AFTER the parallel encode."""
-    import pandas as pd
+    """Envelope rows → protobuf Payload chunks, encoded in parallel:
+    ``mapInArrow`` over every input partition (``Payload``'s repeated
+    field makes each op's tagged bytes independently encodable; the
+    payload body is their plain concatenation). Sort keys ride along
+    so the caller can impose the K1 total order AFTER the parallel
+    encode (:func:`ordered_chunks`). Each task serializes a TableDef
+    once per (db, table, schema_version)
+    (:class:`~dolphinbeat_spark.sinks.wire_protocol.OperationEncoder`)."""
+    import pyarrow as pa
 
     from dolphinbeat_spark.sinks import wire_protocol as wp
 
-    row_ops = {"insert", "update", "delete"}
-
     def encode(batches):
-        for pdf in batches:
-            chunks = []
-            for row in pdf.to_dict("records"):
-                td = None
-                if row["op_type"] in row_ops:
-                    td = registry.get(
-                        row.get("db"), row.get("table"),
-                        wp.as_int(row.get("schema_version")) or None,
-                    )
-                chunks.append(wp.payload_chunk(wp.encode_operation(row, td)))
-            yield pd.DataFrame(
-                {
-                    "log_name": pdf["log_name"],
-                    "log_pos": pdf["log_pos"],
-                    "op_type": pdf["op_type"],
-                    "row_index": (
-                        pdf["row_index"].fillna(0)
-                        if "row_index" in pdf.columns
-                        else 0
-                    ),
-                    "chunk": chunks,
-                }
+        enc = wp.OperationEncoder(registry)
+        for batch in batches:
+            rows = _encoder_rows(batch)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([r.get("log_name") for r in rows], pa.string()),
+                    pa.array([r.get("log_pos") for r in rows], pa.int64()),
+                    pa.array([r["op_type"] for r in rows], pa.string()),
+                    pa.array([r.get("row_index") or 0 for r in rows], pa.int32()),
+                    pa.array([wp.payload_chunk(enc(r)) for r in rows], pa.binary()),
+                ],
+                names=["log_name", "log_pos", "op_type", "row_index", "chunk"],
             )
 
-    return envelope.mapInPandas(
+    return envelope.mapInArrow(
         encode,
         schema=(
             "log_name string, log_pos long, op_type string, "
             "row_index int, chunk binary"
         ),
     )
+
+
+def _encoder_rows(batch) -> list[dict]:
+    """A RecordBatch as row dicts for the wire encoder, converted
+    column-wise through numpy (an order of magnitude faster than
+    ``Array.to_pylist``). Integer NULLs read as 0: the encoder writes
+    both as the proto3 default. Map columns are read from each
+    MapArray's flat keys/items/offsets — one dict per non-empty cell,
+    instead of pandas' per-cell conversion."""
+    import pyarrow as pa
+
+    cols = []
+    for arr in batch.columns:
+        if pa.types.is_map(arr.type):
+            offs = arr.offsets.to_numpy().tolist()
+            keys, items = _pylist(arr.keys), _pylist(arr.items)
+            cells = [
+                dict(zip(keys[a:b], items[a:b])) if b > a else None
+                for a, b in zip(offs, offs[1:])
+            ]
+            if arr.null_count:
+                cells = [c if ok else None
+                         for c, ok in zip(cells, _pylist(arr.is_valid()))]
+        else:
+            cells = _pylist(arr)
+        cols.append(cells)
+    names = batch.schema.names
+    return [dict(zip(names, vals)) for vals in zip(*cols)]
+
+
+def _pylist(arr) -> list:
+    """One Arrow column as Python values (integer NULLs as 0)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = arr.type
+    if pa.types.is_integer(t):
+        return pc.fill_null(arr, 0).to_numpy().tolist()
+    if pa.types.is_string(t) or pa.types.is_boolean(t):
+        return arr.to_numpy(zero_copy_only=False).tolist()
+    return arr.to_pylist()  # nested: the progress struct, packed rows
+
+
+def ordered_chunks(encoded) -> list[bytes]:
+    """The chunks of a collected :func:`encode_ops_distributed` table
+    (``pyarrow.Table``) in the K1 total order of
+    :func:`total_order_cols`: ascending, NULLs first, and ties kept in
+    arrival order (a stable sort over the partitions in order — what
+    Spark's sort of the partitions coalesced into one gives)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rank = pa.array(
+        [OP_RANK.get(t, 3) for t in encoded.column("op_type").to_pylist()],
+        pa.int32(),
+    )
+    keys = pa.table({
+        "log_name": encoded.column("log_name"),
+        "log_pos": encoded.column("log_pos"),
+        "rank": rank,
+        "row_index": encoded.column("row_index"),
+    })
+    order = pc.sort_indices(
+        keys,
+        sort_keys=[(k, "ascending") for k in keys.column_names],
+        null_placement="at_start",
+    )
+    return encoded.column("chunk").take(order).to_pylist()
 
 
 def decode_protobuf_messages(messages: DataFrame, value_col: str = "value") -> DataFrame:
@@ -609,6 +670,14 @@ class ProtobufKafkaSink(SeqStampedSink):
     same batch + same recorded base_seq → byte-identical messages, so
     at-least-once transport + client seq-dedup = exactly-once.
 
+    Nothing collapses to one partition: ops encode in the batch's own
+    partitions (one task per archived file on a file-source replay)
+    and the driver sorts the encoded chunks by the total order before
+    framing them, so the batch's encoded bytes are what the driver
+    holds — the memory bound of the produce loop. The batch itself is
+    materialized once before the encode (``localCheckpoint``: lost
+    executors fail the batch, and Structured Streaming replays it).
+
     ``produce(seq, value_bytes)`` is injectable (tests capture bytes;
     production wraps a kafka client's produce)."""
 
@@ -644,14 +713,17 @@ class ProtobufKafkaSink(SeqStampedSink):
         from dolphinbeat_spark.sinks import wire_protocol as wp
 
         base = self._base_seq(batch_id)
-        # encode in parallel FIRST (CPU-heavy part), then collapse only
-        # the already-encoded bytes through the K1 single-partition
-        # total-order boundary for the produce loop
+        # decode the batch first (one job), then encode in parallel —
+        # one task per partition — and pay the K1 total order once, on
+        # the driver, over the encoded chunks the produce loop holds in
+        # memory anyway. Two jobs, not one pipelined stage: a stage with
+        # a Python source AND a Python encode holds two Python workers
+        # per task; apart, the decode's workers serve the encode
+        batch_df = batch_df.localCheckpoint()
         if self.pack_rows:
             batch_df = pack_multirow_events(batch_df)
-        encoded = encode_ops_distributed(batch_df, self.registry)
-        ordered = encoded.coalesce(1).sortWithinPartitions(*total_order_cols())
-        chunks = [bytes(r["chunk"]) for r in ordered.toLocalIterator()]
+        encoded = encode_ops_distributed(batch_df, self.registry).toArrow()
+        chunks = ordered_chunks(encoded)
         msgs = wp.build_messages(
             chunks,
             base,

@@ -28,12 +28,13 @@ reference's .proto can read these bytes, and :class:`OperationDecoder`
 below is the Python port of the reference client's decode loop for the
 round-trip tests.
 
-Scale note: per-op encoding is distributed (Arrow-batched pandas UDF —
-``Payload``'s repeated field means the payload body is the plain
-concatenation of each op's tagged bytes, which makes op encoding
-embarrassingly parallel); only grouping/compression/produce run on the
-driver, on the already-encoded bytes, inside the K1 single-partition
-ordering boundary the reference itself imposes (kafka.go:91-95).
+Scale note: per-op encoding is distributed (``mapInArrow`` over every
+input partition — ``Payload``'s repeated field means the payload body
+is the plain concatenation of each op's tagged bytes, which makes op
+encoding embarrassingly parallel); only the total-order sort,
+grouping, compression and produce run on the driver, on the
+already-encoded bytes — the K1 single-ordered-stream boundary the
+reference itself imposes (kafka.go:91-95).
 """
 
 from __future__ import annotations
@@ -46,10 +47,15 @@ from dataclasses import dataclass, field
 # ---------------------------------------------------------------------------
 
 _MASK64 = (1 << 64) - 1
+#: every one-byte varint — each field tag of this schema (field numbers
+#: up to 15) and most lengths — served without building bytes
+_SMALL_VARINT = tuple(bytes([i]) for i in range(128))
 
 
 def _uvarint(n: int) -> bytes:
     """Base-128 varint of an unsigned (or two's-complement) integer."""
+    if 0 <= n < 128:
+        return _SMALL_VARINT[n]
     n &= _MASK64
     out = bytearray()
     while True:
@@ -211,13 +217,24 @@ def encode_column(value: str | None, is_null: bool) -> bytes:
 
 def encode_row(before: list[tuple[str | None, bool]] | None,
                after: list[tuple[str | None, bool]] | None) -> bytes:
-    # Row: before=1 repeated Column, after=2 repeated Column
-    out = bytearray()
-    for v, isn in before or ():
-        out += f_bytes(1, encode_column(v, isn), emit_empty=True)
-    for v, isn in after or ():
-        out += f_bytes(2, encode_column(v, isn), emit_empty=True)
-    return bytes(out)
+    # Row: before=1 repeated Column, after=2 repeated Column. The
+    # encode_column cases inlined — the encoder's innermost loop: NULL
+    # is the 2-byte Column {is_null: 1}, an empty value the empty
+    # Column, any other value {value: v}
+    out = []
+    add = out.append
+    for tag, image in ((b"\x0a", before), (b"\x12", after)):
+        null_col, empty_col = tag + b"\x02\x08\x01", tag + b"\x00"
+        for v, isn in image or ():
+            if isn:
+                add(null_col)
+            elif v and isinstance(v, str):
+                data = v.encode("utf-8")
+                col = b"\x12" + _uvarint(len(data)) + data
+                add(tag + _uvarint(len(col)) + col)
+            else:
+                add(empty_col)
+    return b"".join(out)
 
 
 def encode_table_def(table_def) -> bytes:
@@ -276,6 +293,47 @@ def encode_operation(row: dict, table_def=None) -> bytes:
     registry's TableDef for row ops (column ORDER defines the repeated
     Column order, exactly as the reference emits positional columns).
     """
+    if table_def is not None:
+        table_def = (table_def.column_names(), encode_table_def(table_def))
+    return _encode_operation(row, table_def)
+
+
+_ROW_OPS = frozenset({"insert", "update", "delete"})
+
+
+class OperationEncoder:
+    """:func:`encode_operation` over a stream of envelope rows, looking
+    each row op's TableDef up in ``registry`` and serializing it once
+    per (db, table, schema_version) instead of once per op. A row
+    without a schema_version resolves at the registry's current
+    version, so a DDL applied to ``registry`` later is a new key —
+    never a stale hit."""
+
+    def __init__(self, registry):
+        self.registry = registry
+        self._defs: dict[tuple, tuple | None] = {}
+
+    def table_def(self, db, table, schema_version) -> tuple | None:
+        """(column names, serialized TableDef) or None when unknown."""
+        key = (db, table, as_int(schema_version) or self.registry.version)
+        if key not in self._defs:
+            td = self.registry.get(db, table, key[2])
+            self._defs[key] = (
+                None if td is None else (td.column_names(), encode_table_def(td))
+            )
+        return self._defs[key]
+
+    def __call__(self, row: dict) -> bytes:
+        td = None
+        if row["op_type"] in _ROW_OPS:
+            td = self.table_def(row.get("db"), row.get("table"), row.get("schema_version"))
+        return _encode_operation(row, td)
+
+
+
+def _encode_operation(row: dict, table_def: tuple | None) -> bytes:
+    """encode_operation with the TableDef already serialized:
+    ``table_def`` is (column names, TableDef bytes) for row ops."""
     op_type = row["op_type"]
     code = OP_TYPE_CODE[op_type]
     # OperationHeader: server_id=1, type=2, timestamp=3, log_pos=4
@@ -302,11 +360,11 @@ def encode_operation(row: dict, table_def=None) -> bytes:
     elif op_type in ("query", "ddl"):
         out += f_str(11, row.get("db"))
         out += f_str(12, row.get("statement"))
-    elif op_type in ("insert", "update", "delete"):
+    elif op_type in _ROW_OPS:
         if table_def is None:
             raise ValueError(f"row op {op_type} needs a TableDef for column order")
-        cols = table_def.column_names()
-        out += f_bytes(13, encode_table_def(table_def), emit_empty=True)
+        cols, td_bytes = table_def
+        out += f_bytes(13, td_bytes, emit_empty=True)
         packed = row.get("__rows")
         if packed is not None and not (isinstance(packed, float) and packed != packed):
             # multi-row packing: one Operation carries EVERY row image

@@ -146,6 +146,17 @@ class SchemaOnlyQueryEvent(QueryEvent):
     envelope already carried it when the position was first read)."""
 
 
+class SeekRotateEvent(RotateEvent):
+    """The rotate a file replay opens every file with (log_pos 0, like
+    the artificial rotate a MySQL dump thread sends when it opens a
+    binlog): it names the file the following events belong to, so
+    decode stamps them and range-checks them with that ``log_name``.
+    Decode state only — no op (a file's own tail rotate is the op)."""
+
+    def __init__(self, file_name: str):
+        super().__init__(0, 0, file_name, 4)
+
+
 class PreviousGtidsEvent(_Event):
     """The gtid set executed before this file began (5.6+ writes one
     right after the FDE). Not an envelope op (adapt returns None for
@@ -645,15 +656,30 @@ def parse_binlog_events(data: bytes):
     events reference. Unknown event types are skipped by size — the
     contract real replicas follow (a binlog contains many bookkeeping
     events a CDC consumer ignores)."""
+    dec = BinlogEventDecoder()
+    for pos, _etype, esize, _log_pos in walk_event_headers(data):
+        yield from dec.feed(data[pos:pos + esize], at=pos)
+
+
+#: (type, size, log_pos) out of a 19-byte v4 event header
+_HEADER = struct.Struct("<4xB4xII")
+
+
+def walk_event_headers(data: bytes):
+    """(offset, type, size, log_pos) of every event in one binlog
+    file's bytes, read from the 19-byte headers alone — no body is
+    decoded. Raises BinlogFormatError on a bad magic or an event that
+    runs past the end of the bytes; a tail shorter than one header is
+    ignored (a file still being written)."""
     if data[:4] != BINLOG_MAGIC:
         raise BinlogFormatError("not a binlog file (bad magic)")
-    pos = 4
-    dec = BinlogEventDecoder()
-    while pos + 19 <= len(data):
-        esize = struct.unpack_from("<I", data, pos + 9)[0]
-        if esize < 19 or pos + esize > len(data):
+    pos, n = 4, len(data)
+    unpack = _HEADER.unpack_from
+    while pos + 19 <= n:
+        etype, esize, log_pos = unpack(data, pos)
+        if esize < 19 or pos + esize > n:
             raise BinlogFormatError(f"truncated event at offset {pos}")
-        yield from dec.feed(data[pos:pos + esize], at=pos)
+        yield pos, etype, esize, log_pos
         pos += esize
 
 
@@ -926,6 +952,88 @@ def _decode_body(etype, ts, _server_id, log_pos, body, tables):
 # --- replay provider: recorded files through the live reader classes --------
 
 
+#: event types whose body decodes to an event; the rest (FDE,
+#: TABLE_MAP, bookkeeping) only move decoder state or are skipped
+_EVENT_TYPES = frozenset({
+    EV_QUERY, EV_ROTATE, EV_XID, EV_GTID, EV_PREVIOUS_GTIDS,
+    EV_MARIADB_GTID, EV_MARIADB_GTID_LIST, EV_TRANSACTION_PAYLOAD,
+    EV_WRITE_ROWS_V1, EV_UPDATE_ROWS_V1, EV_DELETE_ROWS_V1,
+    EV_WRITE_ROWS_V2, EV_UPDATE_ROWS_V2, EV_DELETE_ROWS_V2,
+    EV_PARTIAL_UPDATE_ROWS,
+})
+#: bodies decoded below a seek offset: the FDE (checksum algorithm) and
+#: QUERY (DDL). MySQL never writes DDL inside a compressed
+#: TRANSACTION_PAYLOAD (statement events are excluded from compression),
+#: so payloads below the seek stay undecoded
+_SCHEMA_TYPES = frozenset({EV_FORMAT_DESCRIPTION, EV_QUERY})
+#: ... plus TABLE_MAP in the seek file itself: a seek can land between
+#: a transaction's TABLE_MAP and its rows events (a transaction never
+#: spans files, so earlier files' maps are never needed)
+_SEEK_FILE_SCHEMA_TYPES = _SCHEMA_TYPES | {EV_TABLE_MAP}
+
+
+def series_files(path: str | Path) -> list[Path]:
+    """The archived files at ``path`` in replay order: one file, or a
+    directory's files in lexical order (the binlog naming convention)."""
+    path = Path(path)
+    if path.is_dir():
+        files = sorted(p for p in path.iterdir() if p.is_file())
+        if not files:
+            raise FileNotFoundError(f"no binlog files in {path}")
+        return files
+    return [path]
+
+
+def replay_series(paths: list[Path], start: tuple[str, int]):
+    """Lazy event stream over archived files for a seek to ``start``
+    (file, pos): every event whose (file, log_pos) lies past it,
+    decoded, and below it only the schema history — DDL as
+    :class:`SchemaOnlyQueryEvent`, found by walking event headers and
+    decoding no other bodies. Each file opens with a
+    :class:`SeekRotateEvent` naming it, and is read only when the
+    consumer pulls past that marker, so a consumer that stops at its
+    range end never reads the files after it. A file missing its tail
+    rotate (server crash) gets a synthetic one when a file follows."""
+    for i, p in enumerate(paths):
+        name = p.name
+        yield SeekRotateEvent(name)
+        data = p.read_bytes()
+        dec = BinlogEventDecoder()
+        schema_types = _SEEK_FILE_SCHEMA_TYPES if name == start[0] else _SCHEMA_TYPES
+        last_type = None
+        for pos, etype, esize, log_pos in walk_event_headers(data):
+            if etype in _EVENT_TYPES:
+                last_type = etype
+            if (name, log_pos) > start:
+                yield from dec.feed(data[pos:pos + esize], at=pos)
+            elif etype in schema_types:
+                # at/below the seek: replay DDL apply-only (registry
+                # mutation, no re-emission) — without it a resumed
+                # executor decodes rows with positional col_0..N names
+                for e in dec.feed(data[pos:pos + esize], at=pos):
+                    if isinstance(e, QueryEvent) and e.query not in ("BEGIN", "COMMIT"):
+                        yield SchemaOnlyQueryEvent(
+                            e.timestamp, e.packet.log_pos, e.schema, e.query
+                        )
+        if i + 1 < len(paths) and last_type != EV_ROTATE and (name, len(data)) > start:
+            yield RotateEvent(0, len(data), paths[i + 1].name, 4)
+
+
+def split_range_by_file(path: str, start: dict, end: dict) -> list[tuple[dict, dict]]:
+    """Cut a batch's offset range (start, end] at the end of every
+    archived file that lies inside it: one sub-range per file, each a
+    complete batch range of its own (the events of a file are exactly
+    the coordinates (file, 1..size), its tail rotate included)."""
+    lo, hi = (start.get("file", ""), start.get("pos", 0)), (end["file"], end["pos"])
+    cuts = []
+    for p in series_files(path):
+        at = (p.name, p.stat().st_size)
+        if lo < at < hi:
+            cuts.append(dict(start, file=at[0], pos=at[1], gtid_set=""))
+    bounds = [start, *cuts, end]
+    return list(zip(bounds, bounds[1:]))
+
+
 def binlog_file_provider(options: dict):
     """Provider for the binlog reader classes: (factory, latest) over
     recorded binlog bytes at ``binlog_file_path`` — one file, or a
@@ -933,45 +1041,40 @@ def binlog_file_provider(options: dict):
     order, the binlog naming convention). The log is immutable, so a
     factory seek is a filtered replay — the exact contract the
     scripted fake documents — and `latest` is the series' last event
-    coordinate (availableNow drains everything in one batch).
+    coordinate. An availableNow query plans the series as one batch
+    (the ``max_pos_delta_per_batch`` clamp applies within a file
+    only), and the file reader runs that batch as one task per file
+    (:func:`split_range_by_file`).
 
     Series semantics: each archive normally ends with the rotate to
     its successor (servers write one), so log_name tracking flips
     naturally; a file missing its tail rotate (server crash) gets a
     synthetic one injected. A seek into file N replays files < N and
-    the head of N schema-only (QueryEvents wrapped apply-only), so a
+    the head of N schema-only (see :func:`replay_series`), so a
     resumed batch still decodes with the full DDL history's column
     names."""
     path = Path(options["binlog_file_path"])
+    first_name = options.get("file") or series_files(path)[0].name
+    #: file name -> ((size, mtime), (largest log_pos, last event type))
+    #: of its decodable events: archived files do not change, so
+    #: ``latest`` re-walks only files that grew
+    summaries: dict[str, tuple] = {}
 
-    def _paths() -> list[Path]:
-        if path.is_dir():
-            files = sorted(p for p in path.iterdir() if p.is_file())
-            if not files:
-                raise FileNotFoundError(f"no binlog files in {path}")
-            return files
-        return [path]
-
-    first_name = options.get("file") or _paths()[0].name
-
-    def _events():
-        """(file_name, event) across the series, synthetic rotates
-        stitched between files that lack their tail rotate."""
-        paths = _paths()
-        out = []
-        for i, p in enumerate(paths):
-            data = p.read_bytes()
-            evs = list(parse_binlog_events(data))
-            out += [(p.name, e) for e in evs]
-            if i + 1 < len(paths) and not (
-                evs and isinstance(evs[-1], RotateEvent)
-            ):
-                out.append(
-                    (p.name, RotateEvent(0, len(data), paths[i + 1].name, 4))
-                )
-        return out
+    def _summary(p: Path) -> tuple:
+        st = p.stat()
+        stamp = (st.st_size, st.st_mtime_ns)
+        hit = summaries.get(p.name)
+        if hit is None or hit[0] != stamp:
+            last_pos = last_type = None
+            for _pos, etype, _size, log_pos in walk_event_headers(p.read_bytes()):
+                if etype in _EVENT_TYPES:
+                    last_type = etype
+                    last_pos = log_pos if last_pos is None else max(last_pos, log_pos)
+            hit = summaries[p.name] = (stamp, (last_pos, last_type))
+        return hit[1]
 
     def factory(offset):
+        paths = series_files(path)
         off_file = offset.file
         # compat: a checkpoint written with a configured options['file']
         # alias that is NOT an on-disk name would compare lexically
@@ -982,9 +1085,8 @@ def binlog_file_provider(options: dict):
             off_file
             and alias
             and off_file == alias
-            and off_file not in {p.name for p in _paths()}
+            and off_file not in {p.name for p in paths}
         ):
-            paths = _paths()
             off_file = paths[0].name
             if len(paths) > 1:
                 # the remap can only anchor to the FIRST series file: a
@@ -1001,35 +1103,24 @@ def binlog_file_provider(options: dict):
                     RuntimeWarning,
                     stacklevel=2,
                 )
-        start_key = (off_file, offset.pos) if off_file else ("", 0)
-        fresh = not offset.file or offset.pos <= 4
-        out = []
-        for fname, e in _events():
-            if (fname, e.packet.log_pos) > start_key or (
-                fresh and isinstance(e, RotateEvent)
-            ):
-                out.append(e)
-            elif isinstance(e, QueryEvent):
-                # at/below the seek: replay DDL apply-only (registry
-                # mutation, no re-emission) — without it a resumed
-                # executor decodes rows with positional col_0..N names
-                out.append(
-                    SchemaOnlyQueryEvent(
-                        e.timestamp, e.packet.log_pos, e.schema, e.query
-                    )
-                )
-        return iter(out)
+        return replay_series(paths, (off_file, offset.pos) if off_file else ("", 0))
 
     def latest(opts: dict) -> dict:
         from dolphinbeat_spark.sources.binlog_source import BinlogOffset
 
-        # default: a valid series holding only FDE/bookkeeping events
-        # yields no parsed events — plan an empty batch at the
-        # post-magic head position instead of raising from max()
-        last_file, last_pos = max(
-            ((f, e.packet.log_pos) for f, e in _events()),
-            default=(first_name, 4),
-        )
+        # the largest (file, log_pos) any decodable event carries — a
+        # header walk, no body decoded. Default: a valid series holding
+        # only FDE/bookkeeping events plans an empty batch at the
+        # post-magic head position
+        paths = series_files(path)
+        heads = []
+        for i, p in enumerate(paths):
+            last_pos, last_type = _summary(p)
+            if last_pos is not None:
+                heads.append((p.name, last_pos))
+            if i + 1 < len(paths) and last_type != EV_ROTATE:
+                heads.append((p.name, p.stat().st_size))  # synthetic rotate
+        last_file, last_pos = max(heads, default=(first_name, 4))
         return BinlogOffset(
             file=last_file, pos=last_pos, server_id=int(opts.get("server_id", "0"))
         ).to_json()

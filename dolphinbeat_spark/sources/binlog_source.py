@@ -152,6 +152,8 @@ def decode_event(ev: object, ctx: DecodeContext) -> list[dict]:
     )
     if kind == "rotate":
         ctx.log_name = ev.next_binlog
+        if getattr(ev, "apply_only", False):
+            return []
         return [dict(op_type="rotate", next_log_name=ev.next_binlog,
                      next_log_pos=int(ev.position), **base)]
     if kind == "gtid":
@@ -424,11 +426,16 @@ def adapt_replication_event(raw: object) -> object | None:
         getattr(getattr(raw, "packet", None), "log_pos", getattr(raw, "log_pos", 0)) or 0
     )
     base = dict(timestamp=ts, log_pos=log_pos)
-    if cls == "RotateEvent":
+    if cls in ("RotateEvent", "SeekRotateEvent"):
         nb = raw.next_binlog
         if isinstance(nb, bytes):
             nb = nb.decode()
-        return SimpleNamespace(kind="rotate", next_binlog=nb, position=int(raw.position), **base)
+        # SeekRotateEvent: a file replay naming the file its next
+        # events come from — decode state only, no emission
+        return SimpleNamespace(
+            kind="rotate", next_binlog=nb, position=int(raw.position),
+            apply_only=(cls == "SeekRotateEvent"), **base,
+        )
     if cls in ("GtidEvent", "MariadbGtidEvent"):
         # MySQL 5.7+ logical clock when the upstream parser exposes it
         # (our file parser does; pymysqlreplication's GtidEvent decodes
@@ -1130,13 +1137,17 @@ def _read_shard_arrow(options: dict, partition: _ShardRangePartition, batch_rows
                     break  # beyond this batch's range: belongs to the next one
             for op in decode_event(ev, ctx):
                 # post-decode guard, mirroring the simple reader's
-                # emit(): a rotate carries log_pos 0 and flips
-                # ctx.log_name, so its coordinate (new file, prev pos)
-                # must be re-checked or a rotate past the planned end
-                # is emitted by BOTH this batch and the next
+                # emit(): an op lies at (its own log_name, its log_pos)
+                # — for a rotate that is the file it ENDS, not the one
+                # it flips ctx.log_name to. An artificial rotate (log_pos
+                # 0: a dump thread opening a file) lies at the head of
+                # the file it names
                 cur_pos = int(op.get("log_pos") or cur_pos)
                 if bounded:
-                    if (ctx.log_name or start.file, cur_pos) > end_key:
+                    at = (op["log_name"] or start.file, cur_pos)
+                    if not op["log_pos"] and op["op_type"] == "rotate":
+                        at = (op["next_log_name"], op["next_log_pos"])
+                    if at > end_key:
                         done = True
                         break
                 # shard 0 carries the control ops (begin/commit/gtid/ddl/
@@ -1149,6 +1160,8 @@ def _read_shard_arrow(options: dict, partition: _ShardRangePartition, batch_rows
                 if len(buf) >= batch_rows:
                     yield from batches()
                     buf.clear()
+            if bounded and end.file and ctx.log_name > end.file:
+                break  # the stream moved past the range's last file
         if buf:
             yield from batches()
     finally:
@@ -1172,7 +1185,11 @@ class ArrowBinlogStreamReader(DataSourceStreamReader):
       master (S5 SHOW-status probe — cheap SQL, zero event decode);
     - ``partitions(start, end)`` splits the fixed range into
       ``shard_count`` table shards (crc32, same contract as
-      :func:`sharded_binlog_readers`);
+      :func:`sharded_binlog_readers`) — or, for the file source
+      (``binlog_file_path``) with one shard, into one sub-range per
+      archived file the range covers (files decode independently: a
+      task seeks its file and replays only the schema history before
+      it);
     - each executor task opens its OWN replication iterator at
       ``start`` (providers are module-path references so construction
       happens executor-side), decodes only its shard's tables, and
@@ -1182,6 +1199,9 @@ class ArrowBinlogStreamReader(DataSourceStreamReader):
 
     - per-table order preserved; cross-shard interleaving undefined
       (the shard-by-table trade). Control ops ship on shard 0 only.
+      A file batch split per file keeps its total order across tasks
+      — (log_name, log_pos) never ties between files — and each task
+      emits its own file's control ops, tail rotate included.
     - a batch is a FIXED [start, end) coordinate range over an
       immutable log, so failure replay re-decodes byte-identically —
       the property the simple reader's ``readBetweenOffsets`` uses.
@@ -1194,7 +1214,9 @@ class ArrowBinlogStreamReader(DataSourceStreamReader):
       visible later unless the snapshot is refreshed out-of-band.
       Deployments with active DDL should refresh the tracker snapshot
       between batches or use the simple reader (whose one registry
-      lives across batches).
+      lives across batches). The file source is the exception: its
+      tasks replay the DDL recorded before their range, so every
+      batch sees the whole schema history.
     - the range boundary is the master's probed position, which can
       fall mid-transaction. Each batch decodes with a FRESH context,
       so a commit whose GTID event landed in the PREVIOUS batch is
@@ -1334,6 +1356,16 @@ class ArrowBinlogStreamReader(DataSourceStreamReader):
         return head.to_json()
 
     def partitions(self, start: dict, end: dict):
+        path = self.options.get("binlog_file_path")
+        if path and self.shard_count == 1:
+            # file source: archived files decode independently, so a
+            # batch over several runs one task per file
+            from dolphinbeat_spark.sources.binlog_file import split_range_by_file
+
+            return [
+                _ShardRangePartition(s, e, 0, 1)
+                for s, e in split_range_by_file(path, start, end)
+            ]
         return [
             _ShardRangePartition(start, end, i, self.shard_count)
             for i in range(self.shard_count)

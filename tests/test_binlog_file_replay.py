@@ -1117,3 +1117,361 @@ def test_zstd_transaction_payload_fixture():
     corrupt[-220] ^= 0x40
     with pytest.raises(BinlogFormatError):
         decode(bytes(corrupt))
+
+
+# --- archived series: batch ranges, per-file split, series head -------------
+
+_FILE_PROVIDER = "dolphinbeat_spark.sources.binlog_file:binlog_file_provider"
+
+
+def _write_series(d: Path) -> dict:
+    """Three rotate-stitched files written with the fixture Writer:
+    DDL at the head of the first, a mid-file ALTER in the second, and a
+    short final file that ends below the second file's rotate position.
+    Returns {file name: transaction-end positions} (each file's last
+    entry is its size)."""
+    import sys
+
+    sys.path.insert(0, str(Path(__file__).parent.parent))
+    from tools.make_binlog_fixture import Writer
+
+    from dolphinbeat_spark.sources import binlog_file as B
+
+    sid = "5eed5eed5eed5eed5eed5eed5eed5eed"
+    a2 = [(B.T_LONG, 0), (B.T_VARCHAR, 40)]
+    a3 = a2 + [(B.T_LONG, 0)]
+    b_cols = [(B.T_LONG, 0), (B.T_LONGLONG, 0)]
+    d.mkdir()
+    names = [f"mysql-bin.{i:06d}" for i in (1, 2, 3)]
+    gno, key, a_cols = 0, 0, a2
+    cuts = {}
+    for f, (name, n_trx) in enumerate(zip(names, (60, 60, 4))):
+        w = Writer()
+        w.fde()
+        w.previous_gtids([(sid, [(1, gno)])] if gno else [])
+        if f == 0:
+            for stmt in ("CREATE TABLE test.a (id INT PRIMARY KEY, v VARCHAR(40))",
+                         "CREATE TABLE test.b (id INT PRIMARY KEY, n BIGINT)"):
+                gno += 1
+                w.gtid(sid, gno)
+                w.query("test", stmt)
+        ends = []
+        for t in range(n_trx):
+            if f == 1 and t == n_trx // 2:
+                gno += 1
+                w.gtid(sid, gno)
+                w.query("test", "ALTER TABLE test.a ADD COLUMN w INT")
+                a_cols = a3
+            gno += 1
+            key += 2
+            w.gtid(sid, gno)
+            w.query("test", "BEGIN")
+            row = (key, f"row {key} of {name}", key * 3)[:len(a_cols)]
+            w.table_map(7, "test", "a", a_cols)
+            if t % 3 == 2:
+                old = (key - 2, f"row {key - 2} of {name}", 0)[:len(a_cols)]
+                w.rows(B.EV_UPDATE_ROWS_V2, 7, a_cols, [(old, row)])
+            else:
+                w.rows(B.EV_WRITE_ROWS_V2, 7, a_cols, [row, (key + 1,) + row[1:]])
+            w.table_map(8, "test", "b", b_cols)
+            w.rows(B.EV_WRITE_ROWS_V2, 8, b_cols, [(key, key << 33)])
+            w.xid(gno)
+            ends.append(w.pos)
+        if f + 1 < len(names):
+            w.rotate(names[f + 1])
+            ends.append(w.pos)
+        (d / name).write_bytes(bytes(w.buf))
+        cuts[name] = ends
+    sizes = {n: (d / n).stat().st_size for n in names}
+    assert sizes[names[2]] < sizes[names[1]]  # the short final file
+    return cuts
+
+
+def _reference_ops(d: Path) -> list[dict]:
+    """In-process decode of the whole series, each file's ops stamped
+    with its own name."""
+    from dolphinbeat_spark.schema.registry import SchemaRegistry
+    from dolphinbeat_spark.sources.binlog_file import parse_binlog_events
+    from dolphinbeat_spark.sources.binlog_source import (
+        DecodeContext,
+        adapt_replication_event,
+        decode_event,
+    )
+
+    ctx = DecodeContext(registry=SchemaRegistry())
+    ops = []
+    for p in sorted(d.iterdir()):
+        ctx.log_name = p.name
+        for raw in parse_binlog_events(p.read_bytes()):
+            ev = adapt_replication_event(raw)
+            if ev is not None:
+                ops.extend(decode_event(ev, ctx))
+    return ops
+
+
+def _arrow_read(d: Path, start: tuple, end: tuple, split: bool = False):
+    """Rows the Arrow reader's executor decode returns for the batch
+    (start, end] — as one task, or as the file reader's partitions()
+    plans it. Returns (rows, task count)."""
+    from dolphinbeat_spark.sources.binlog_source import (
+        ArrowBinlogStreamReader,
+        BinlogOffset,
+        _read_shard_arrow,
+        _ShardRangePartition,
+    )
+
+    opts = {"provider": _FILE_PROVIDER, "binlog_file_path": str(d)}
+    s, e = BinlogOffset(*start).to_json(), BinlogOffset(*end).to_json()
+    if split:
+        parts = ArrowBinlogStreamReader(opts).partitions(s, e)
+    else:
+        parts = [_ShardRangePartition(s, e, 0, 1)]
+    rows = []
+    for part in parts:
+        for rb in _read_shard_arrow(opts, part, batch_rows=50):
+            rows += rb.to_pylist()
+    return rows, len(parts)
+
+
+def _shape(ops) -> list[tuple]:
+    """The fields a batch must reproduce: coordinates, op, schema
+    version and row images (maps as sorted items)."""
+    def img(m):
+        if m is None:
+            return None
+        return tuple(sorted(dict(m).items()))
+
+    return [(o["log_name"], o["log_pos"], o["op_type"], o["row_index"],
+             o.get("schema_version"), img(o.get("before")), img(o.get("after")))
+            for o in ops]
+
+
+def _in_range(ops, start: tuple, end: tuple) -> list[dict]:
+    return [o for o in ops if start < (o["log_name"], o["log_pos"]) <= end]
+
+
+def test_file_batch_resumed_inside_a_later_file_is_not_empty(tmp_path):
+    """A batch (f2, a) → (f2, b) must decode f2's events in the range:
+    the schema history replayed from file 1 lies in file 1, not at
+    file-1 positions of file 2 (where its transactions, past b, ended
+    the batch before it began)."""
+    d = tmp_path / "series"
+    cuts = _write_series(d)
+    f1, f2 = sorted(cuts)[:2]
+    start, end = (f2, cuts[f2][3]), (f2, cuts[f2][10])
+    assert cuts[f1][-1] > end[1]
+    rows, _ = _arrow_read(d, start, end)
+    want = _in_range(_reference_ops(d), start, end)
+    assert len(want) > 20
+    assert _shape(rows) == _shape(want)
+
+
+def test_file_batch_ending_in_a_short_final_file_reads_it(tmp_path):
+    """The rotate into the final file lies at (previous file, its
+    position): a batch ending in a final file shorter than that
+    position still emits the final file's events."""
+    d = tmp_path / "series"
+    cuts = _write_series(d)
+    f2, f3 = sorted(cuts)[1:]
+    start, end = (f2, cuts[f2][40]), (f3, cuts[f3][-1])
+    assert end[1] < cuts[f2][-1]
+    rows, _ = _arrow_read(d, start, end)
+    want = _in_range(_reference_ops(d), start, end)
+    assert any(o["log_name"] == f3 for o in want)
+    assert _shape(rows) == _shape(want)
+
+
+def test_file_batch_starting_at_a_tail_rotate_names_the_next_file(tmp_path):
+    """A batch starting exactly at a file's tail rotate stamps the next
+    file's ops with that file's name and stops at its end bound (not
+    at the next rotate, which the next batch would emit again)."""
+    d = tmp_path / "series"
+    cuts = _write_series(d)
+    f1, f2 = sorted(cuts)[:2]
+    start, end = (f1, cuts[f1][-1]), (f2, cuts[f2][20])
+    rows, _ = _arrow_read(d, start, end)
+    assert {r["log_name"] for r in rows} == {f2}
+    assert max(r["log_pos"] for r in rows) <= end[1]
+    assert _shape(rows) == _shape(_in_range(_reference_ops(d), start, end))
+
+
+def test_fresh_file_batch_stamps_the_first_file_name(tmp_path):
+    """A batch from a fresh start (no file in the offset) stamps the
+    first file's ops with that file's name, not ''."""
+    d = tmp_path / "series"
+    cuts = _write_series(d)
+    f1 = sorted(cuts)[0]
+    rows, _ = _arrow_read(d, ("", 4), (f1, cuts[f1][-1]))
+    assert {r["log_name"] for r in rows} == {f1}
+    assert _shape(rows) == _shape(_in_range(_reference_ops(d), ("", 4), (f1, cuts[f1][-1])))
+
+
+def test_per_file_split_matches_single_range_decode(tmp_path):
+    """The file reader plans a batch over several archived files as one
+    task per file. Row for row — log_name, log_pos and schema version
+    included — the split decode equals one task decoding the whole
+    range, and both equal the reference slice: from a fresh start,
+    from every file boundary and from mid-file positions (between
+    transactions and inside one), to the series end and to a mid-file
+    end."""
+    from dolphinbeat_spark.sources.binlog_file import binlog_file_provider
+
+    d = tmp_path / "series"
+    cuts = _write_series(d)
+    f1, f2, f3 = sorted(cuts)
+    ref = _reference_ops(d)
+    head = binlog_file_provider({"binlog_file_path": str(d)})[1]({})
+    series_end = (head["file"], head["pos"])
+    assert series_end == (f3, cuts[f3][-1])
+    mid_trx = cuts[f1][30] + 40  # inside the next transaction
+    starts = [("", 4), (f1, cuts[f1][10]), (f1, mid_trx), (f1, cuts[f1][-1]),
+              (f2, 4), (f2, cuts[f2][45]), (f2, cuts[f2][-1]), (f3, cuts[f3][1])]
+    for start in starts:
+        for end in (series_end, (f2, cuts[f2][50])):
+            if start >= end:
+                continue
+            split, n_tasks = _arrow_read(d, start, end, split=True)
+            single, _ = _arrow_read(d, start, end)
+            want_tasks = 1 + sum(start < (f, c[-1]) < end for f, c in cuts.items())
+            assert n_tasks == want_tasks, (start, end)
+            assert split == single, (start, end)
+            assert _shape(single) == _shape(_in_range(ref, start, end)), (start, end)
+    # the ALTER mid file 2 reaches the final file's task
+    split, n_tasks = _arrow_read(d, ("", 4), series_end, split=True)
+    assert n_tasks == 3
+    last_a = [r for r in split if r["log_name"] == f3 and r["table"] == "a"]
+    assert last_a and all("w" in dict(r["after"]) for r in last_a)
+
+
+def _latest_by_full_decode(paths: list[Path]) -> tuple:
+    """The series head as the provider computed it by decoding every
+    event body: the largest (file, log_pos) of any decoded event, a
+    non-final file without a tail rotate counting its size."""
+    from dolphinbeat_spark.sources.binlog_file import RotateEvent, parse_binlog_events
+
+    heads = []
+    for i, p in enumerate(paths):
+        data = p.read_bytes()
+        evs = list(parse_binlog_events(data))
+        heads += [(p.name, e.packet.log_pos) for e in evs]
+        if i + 1 < len(paths) and not (evs and isinstance(evs[-1], RotateEvent)):
+            heads.append((p.name, len(data)))
+    return max(heads, default=(paths[0].name, 4))
+
+
+def test_provider_latest_walks_headers_to_the_same_offset(tmp_path):
+    """latest() reads event headers only, and returns the offset the
+    full-decode walk returned — on a series, on single files, on a
+    series whose middle file lost its tail rotate and whose last file
+    holds no events. It still raises on a bad magic or a truncated
+    tail, and sees a file that grew."""
+    import shutil
+    import sys
+
+    sys.path.insert(0, str(Path(__file__).parent.parent))
+    from tools.make_binlog_fixture import Writer
+
+    from dolphinbeat_spark.sources.binlog_file import (
+        BinlogFormatError,
+        binlog_file_provider,
+    )
+
+    def latest(path: Path) -> tuple:
+        off = binlog_file_provider({"binlog_file_path": str(path)})[1]({})
+        return off["file"], off["pos"]
+
+    series = tmp_path / "series"
+    _write_series(series)
+    assert latest(series) == _latest_by_full_decode(sorted(series.iterdir()))
+    for f in (FIXTURE, FIXTURE.parent / "zstd_payload.binlog"):
+        assert latest(f) == _latest_by_full_decode([f])
+
+    crashed = tmp_path / "crashed"
+    crashed.mkdir()
+    first = (series / "mysql-bin.000001").read_bytes()
+    rotate_size = 19 + 8 + len("mysql-bin.000002") + 4
+    (crashed / "a.000001").write_bytes(first[:-rotate_size])  # no tail rotate
+    empty = Writer()
+    empty.fde()
+    (crashed / "a.000002").write_bytes(bytes(empty.buf))
+    paths = sorted(crashed.iterdir())
+    assert latest(crashed) == _latest_by_full_decode(paths) == (
+        "a.000001", len(first) - rotate_size)
+
+    # a growing last file: the cached header walk sees the new events
+    grow = tmp_path / "grow"
+    grow.mkdir()
+    shutil.copy(series / "mysql-bin.000003", grow / "mysql-bin.000003")
+    _factory, latest_fn = binlog_file_provider({"binlog_file_path": str(grow)})
+    before = latest_fn({})["pos"]
+    w = Writer()
+    w.buf = bytearray((grow / "mysql-bin.000003").read_bytes())
+    w.pos = len(w.buf)
+    w.xid(999)
+    (grow / "mysql-bin.000003").write_bytes(bytes(w.buf))
+    assert latest_fn({})["pos"] == w.pos > before
+
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    shutil.copy(series / "mysql-bin.000001", bad / "mysql-bin.000001")
+    (bad / "mysql-bin.000002").write_bytes(b"nope" + first[4:])
+    with pytest.raises(BinlogFormatError, match="magic"):
+        latest(bad)
+    (bad / "mysql-bin.000002").write_bytes(first[:-7])
+    with pytest.raises(BinlogFormatError, match="truncated"):
+        latest(bad)
+
+
+def test_file_replay_encodes_on_one_task_per_file(spark, tmp_path):
+    """A file-source replay over a 3-file series reaches the protobuf
+    sink in one partition per file, and the sink's encode runs on all
+    of them: its job's stage runs at least 2 tasks — nothing collapses
+    the batch to one partition between the source and the encode."""
+    from dolphinbeat_spark.sinks.ordered import ProtobufKafkaSink
+    from dolphinbeat_spark.sinks.wire_protocol import OperationDecoder
+    from dolphinbeat_spark.schema.registry import SchemaRegistry
+    from dolphinbeat_spark.sources.binlog_file import (
+        BINLOG_FILE_SOURCE_NAME,
+        register_binlog_file_source,
+    )
+
+    d = tmp_path / "series"
+    _write_series(d)
+    ref = _reference_ops(d)
+    registry = SchemaRegistry()
+    registry.apply_ddl("CREATE TABLE test.a (id INT PRIMARY KEY, v VARCHAR(40))")
+    registry.apply_ddl("CREATE TABLE test.b (id INT PRIMARY KEY, n BIGINT)")
+    messages, tasks = [], []
+    sink = ProtobufKafkaSink(meta_dir=str(tmp_path / "meta"), registry=registry,
+                             produce=lambda seq, v: messages.append(v))
+    sc = spark.sparkContext
+
+    def timed(batch_df, batch_id):
+        group = f"file-replay-{batch_id}"
+        saved = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, group)
+        try:
+            sink(batch_df, batch_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", saved)
+        tracker = sc.statusTracker()
+        for job in tracker.getJobIdsForGroup(group):
+            for sid in tracker.getJobInfo(job).stageIds:
+                tasks.append(tracker.getStageInfo(sid).numTasks)
+
+    register_binlog_file_source(spark)
+    q = (spark.readStream.format(BINLOG_FILE_SOURCE_NAME)
+         .option("binlog_file_path", str(d)).load()
+         .filter("table IS NULL OR table != 'b'")
+         .writeStream.foreachBatch(timed)
+         .option("checkpointLocation", str(tmp_path / "ckp"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(300)
+    assert tasks and max(tasks) >= 2, tasks
+    dec, ops = OperationDecoder(), []
+    for v in messages:
+        res = dec.feed(v)
+        ops += res.ops if res else []
+    want = [o for o in ref if o.get("table") != "b"]
+    assert [(o["op_type"], o["log_pos"]) for o in ops] == [
+        (o["op_type"], o["log_pos"]) for o in want]

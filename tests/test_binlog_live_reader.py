@@ -752,3 +752,65 @@ def test_arrow_reader_checkpoint_resume(spark, tmp_path):
     assert ids == list(range(1, 17)), ids  # 8 trx x 2 rows, no dup, no loss
     gtids = sorted(r["gtid"] for r in got.filter("op_type = 'commit'").collect())
     assert gtids == sorted(f"uuid-f:{i}" for i in range(1, 9))
+
+
+def _two_file_dump_provider(options):
+    """A dump thread's view of two binlog files: an artificial rotate
+    (log_pos 0) each time it opens a file, file 1 ending with its real
+    rotate at position 600 and file 2 holding two transactions."""
+    files = [
+        ("mysql-bin.000001", [
+            GtidEvent("u:1", 100), QueryEvent(b"BEGIN", b"d", 150),
+            WriteRowsEvent("d", "t", [{"id": 1}], 200), XidEvent(1, 250),
+            RotateEvent("mysql-bin.000002", 4, log_pos=600),
+        ]),
+        ("mysql-bin.000002", [
+            GtidEvent("u:2", 100), QueryEvent(b"BEGIN", b"d", 150),
+            WriteRowsEvent("d", "t", [{"id": 2}], 200), XidEvent(2, 250),
+            GtidEvent("u:3", 300), QueryEvent(b"BEGIN", b"d", 350),
+            WriteRowsEvent("d", "t", [{"id": 3}], 400), XidEvent(3, 450),
+        ]),
+    ]
+
+    def factory(offset):
+        for name, events in files:
+            if name < offset.file:
+                continue
+            yield RotateEvent(name, offset.pos if name == offset.file else 4)
+            for e in events:
+                if (name, e.packet.log_pos) > (offset.file, offset.pos):
+                    yield e
+
+    def latest(opts):
+        return BinlogOffset(file="mysql-bin.000002", pos=450).to_json()
+
+    return factory, latest
+
+
+def test_arrow_reader_batch_across_a_live_rotation():
+    """A batch from the tail of file 1 to a position in file 2 below
+    file 1's size: the real rotate lies in file 1 and the artificial
+    rotate at the head of file 2, so the batch emits both and file 2's
+    events up to its end — not stop at the rotation, which would leave
+    them to no batch (the next one starts past them)."""
+    import pyarrow as pa
+
+    from dolphinbeat_spark.sources.binlog_source import (
+        _read_shard_arrow,
+        _ShardRangePartition,
+    )
+
+    opts = {"provider": f"{__name__}:_two_file_dump_provider"}
+    start = BinlogOffset(file="mysql-bin.000001", pos=250).to_json()
+    end = BinlogOffset(file="mysql-bin.000002", pos=250).to_json()
+    rows = pa.Table.from_batches(list(_read_shard_arrow(
+        opts, _ShardRangePartition(start, end, 0, 1), 100))).to_pylist()
+    assert [(r["op_type"], r["log_name"], r["log_pos"]) for r in rows] == [
+        ("rotate", "mysql-bin.000001", 0),  # the dump's opening rotate
+        ("rotate", "mysql-bin.000001", 600),
+        ("rotate", "mysql-bin.000002", 0),
+        ("gtid", "mysql-bin.000002", 100),
+        ("begin", "mysql-bin.000002", 150),
+        ("insert", "mysql-bin.000002", 200),
+        ("commit", "mysql-bin.000002", 250),
+    ]

@@ -706,3 +706,141 @@ def test_non_utf8_value_bytes_survive_decode():
     decoded = wp.decode_operation(op)
     v = decoded["rows"][0]["after"][0]["value"]
     assert isinstance(v, str) and len(v) == 3  # replacement chars, no crash
+
+
+# ---------------------------------------------------------------------------
+# ProtobufKafkaSink output contract: parallel encode + driver-side order
+# ---------------------------------------------------------------------------
+
+
+def _fixture_envelope_rows():
+    """The committed replay fixture decoded twice — under its own name
+    and as a later file of the series — plus ops with a NULL log_name
+    and a NULL log_pos, as envelope tuples in a scrambled order: the
+    second copy first, the first copy reversed (its TRANSACTION_PAYLOAD
+    ops tie on the whole sort key, so their order pins how ties
+    resolve). Returns (rows, registry)."""
+    from pathlib import Path
+
+    from dolphinbeat_spark.envelope import empty_op
+    from dolphinbeat_spark.sources.binlog_file import parse_binlog_events
+    from dolphinbeat_spark.sources.binlog_source import (
+        DecodeContext,
+        _row_tuple,
+        adapt_replication_event,
+        decode_event,
+    )
+
+    fixture = Path(__file__).parent / "fixtures" / "replay.binlog"
+    ctx = DecodeContext(registry=SchemaRegistry(), log_name="replay.000001",
+                        server_id=33061)
+    first = []
+    for raw in parse_binlog_events(fixture.read_bytes()):
+        ev = adapt_replication_event(raw)
+        if ev is not None:
+            first.extend(decode_event(ev, ctx))
+    second = [dict(op, log_name="replay.000002") for op in first]
+    odd = [
+        empty_op(op_type="query", log_name=None, log_pos=9, server_id=1,
+                 statement="FLUSH LOGS"),
+        empty_op(op_type="query", log_name="replay.000001", log_pos=None,
+                 server_id=1, statement="SET @x = 1"),
+    ]
+    ops = second + odd + first[::-1]
+    return [_row_tuple(op) for op in ops], ctx.registry
+
+
+def _sink_digest(spark, tmp_path, **sink_kw) -> str:
+    """sha256 over (seq, message) of one ProtobufKafkaSink call on the
+    scrambled fixture envelope in three partitions, at base seq 1000."""
+    import hashlib
+    import json
+
+    from dolphinbeat_spark.envelope import ENVELOPE_SCHEMA
+    from dolphinbeat_spark.sinks.ordered import ProtobufKafkaSink
+
+    rows, registry = _fixture_envelope_rows()
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), ENVELOPE_SCHEMA)
+    assert df.rdd.getNumPartitions() == 3
+    meta = tmp_path / "meta"
+    meta.mkdir()
+    (meta / "41.json").write_text(json.dumps({"base_seq": 1000, "n_rows": 0}))
+    captured = []
+    sink = ProtobufKafkaSink(
+        meta_dir=str(meta), registry=registry,
+        produce=lambda seq, value: captured.append((seq, value)),
+        producer_id=3, **sink_kw,
+    )
+    sink(df, batch_id=42)
+    assert captured[0][0] == 1001
+    h = hashlib.sha256()
+    for seq, value in captured:
+        h.update(seq.to_bytes(8, "big") + value)
+    return h.hexdigest()
+
+
+@pytest.mark.parametrize(
+    "sink_kw,digest",
+    [
+        ({"ops_per_payload": 5, "max_payload_size": 200}, "41a45d3d9870e9939a68db4d3430f1d34d25d37d44b0e57141a5cec46e0dd32b"),
+        ({"compression": "zlib"}, "aaff4f30c5ab98d150349abf51bdd8ab67a2760e47702ae90c3aed9e51ecbf84"),
+    ],
+)
+def test_protobuf_sink_messages_match_golden_digest(spark, tmp_path, sink_kw, digest):
+    """The messages for a fixed multi-partition input and base seq are
+    byte-identical to the ones the single-partition sort-then-encode
+    sink produced: same total order (NULLs first, ties in arrival
+    order), same Operation bytes, same framing."""
+    assert _sink_digest(spark, tmp_path, **sink_kw) == digest
+
+
+def test_operation_encoder_keys_table_defs_by_schema_version(spark, tmp_path):
+    """TableDef bytes are cached per (db, table, schema_version): after
+    an ALTER, the next batch's row ops carry the new column list —
+    both with an explicit version and with none (resolved at the
+    registry's current version)."""
+    from dolphinbeat_spark.envelope import ENVELOPE_SCHEMA, empty_op
+    from dolphinbeat_spark.sinks.ordered import ProtobufKafkaSink
+
+    reg = _registry()
+    v1 = reg.version
+    enc = wp.OperationEncoder(reg)
+    row = dict(op_type="insert", db="test", table="canal_test", log_pos=10,
+               after={"id": "1", "name": "a", "content": "x", "age": "7"},
+               after_null={"id": False, "name": False, "content": False, "age": False})
+
+    def columns(op_bytes):
+        return [c["name"] for c in wp.decode_operation(op_bytes)["table"]["columns"]]
+
+    assert columns(enc(dict(row, schema_version=v1))) == ["id", "name", "content"]
+    assert columns(enc(dict(row, schema_version=None))) == ["id", "name", "content"]
+    v2 = reg.apply_ddl("ALTER TABLE test.canal_test ADD COLUMN age INT")
+    # the same encoder: a new version is a new key, never a stale hit
+    assert columns(enc(dict(row, schema_version=v2))) == ["id", "name", "content", "age"]
+    assert columns(enc(dict(row, schema_version=None))) == ["id", "name", "content", "age"]
+    assert columns(enc(dict(row, schema_version=v1))) == ["id", "name", "content"]
+
+    # and through the sink: batch 0 before the ALTER, batch 1 after it
+    reg = _registry()
+    captured = []
+    sink = ProtobufKafkaSink(meta_dir=str(tmp_path / "meta"), registry=reg,
+                             produce=lambda seq, v: captured.append(v))
+
+    def batch(version):
+        op = empty_op(**dict(row, schema_version=version))
+        return spark.createDataFrame(
+            [tuple(op[f.name] for f in ENVELOPE_SCHEMA.fields)], ENVELOPE_SCHEMA)
+
+    sink(batch(reg.version), batch_id=0)
+    v2 = reg.apply_ddl("ALTER TABLE test.canal_test ADD COLUMN age INT")
+    sink(batch(v2), batch_id=1)
+    got = []
+    for v in captured:
+        m = wp.decode_message(v)
+        for op in wp.decode_payload_ops(m["payload"], m["compression"]):
+            got.append([c["name"] for c in op["table"]["columns"]])
+            got.append([c["value"] for c in op["rows"][0]["after"]])
+    assert got == [
+        ["id", "name", "content"], ["1", "a", "x"],
+        ["id", "name", "content", "age"], ["1", "a", "x", "7"],
+    ]
