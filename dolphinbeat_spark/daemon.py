@@ -268,9 +268,9 @@ def run(cfg: DaemonConfig, spark=None, source_format: str = "dolphinbeat_binlog"
     caller's choice (``spark.streams.awaitAnyTermination()``).
 
     ``source_format``/``source_options_extra``/``trigger_once`` let
-    the integration test drive the EXACT runtime wiring against the
-    scripted fake-binlog source (register it first) — only the live
-    socket goes unexecuted, like everywhere else in this engine."""
+    the integration tests drive the EXACT runtime wiring against a
+    loopback master or the scripted fake-binlog source (register it
+    first)."""
     from functools import reduce
 
     from dolphinbeat_spark.schema.registry import SchemaRegistry
@@ -293,9 +293,9 @@ def run(cfg: DaemonConfig, spark=None, source_format: str = "dolphinbeat_binlog"
 
         source_format = BINLOG_FILE_SOURCE_NAME
         register_binlog_file_source(spark)
-    if source_format == "dolphinbeat_binlog":  # pragma: no cover - needs live MySQL
+    if source_format == "dolphinbeat_binlog":
         spark.dataSource.register(BinlogDataSource)
-    if source_format == "dolphinbeat_binlog_arrow":  # pragma: no cover - needs live MySQL
+    if source_format == "dolphinbeat_binlog_arrow":
         from dolphinbeat_spark.sources.binlog_source import ArrowBinlogDataSource
 
         spark.dataSource.register(ArrowBinlogDataSource)

@@ -9,7 +9,8 @@ persistence, checkpoint commit — with a deterministic scripted event
 stream standing in for the MySQL socket (the class-name duck-typing of
 ``adapt_replication_event`` makes the stand-in exact). This is the
 strongest no-MySQL proof available that the live wiring is correct:
-only ``live_event_iter``'s socket construction goes unexecuted.
+only the native client's socket (tested on its own against a
+loopback master, tests/test_repl_client.py) is swapped out.
 
 Script shape (options: ``n_trx``, ``rows_per_trx``): one CREATE TABLE,
 then n_trx transactions of GTID/BEGIN/inserts/XID against

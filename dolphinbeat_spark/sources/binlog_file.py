@@ -1,22 +1,20 @@
 """Offline MySQL binlog FILE parser + replay source (from scratch).
 
-Why this exists: the live socket path (sources/binlog_source.py) rides
-``pymysqlreplication``, which this environment does not ship — so until
-now every decode test drove duck-typed fakes. This module closes the
-recorded-bytes gap with a real binary parser for the public binlog v4
-FILE format (the bytes ``mysqlbinlog`` reads; MySQL internals manual,
-"Binary Log Versions" / "Row Based Replication"; reference parity:
-the reference's go-mysql dependency implements the same wire layout in
-``replication/parser.go``). Everything the socket would deliver except
-the network handshake is exercised on real bytes: event headers, CRC32
+A real binary parser for the public binlog v4 FILE format (the bytes
+``mysqlbinlog`` reads; MySQL internals manual, "Binary Log Versions" /
+"Row Based Replication"; reference parity: the reference's go-mysql
+dependency implements the same wire layout in
+``replication/parser.go``). The live transport (sources/repl_client.py)
+feeds its dump stream through the same decoder, so everything the
+socket delivers is exercised here on real bytes: event headers, CRC32
 checksums, TABLE_MAP column metadata, ROWS v2 NULL bitmaps, multi-row
 packing, packed temporals (DATETIME2/TIME2/TIMESTAMP2), NEWDECIMAL
 base-10^9 packing, 2-byte VARCHAR lengths, UTF-8 charset decode, and
 binary-JSONB payloads (decoded downstream via sources/mysql_jsonb).
 
-It is also a real feature, not just a test shim: archived binlog files
-are the standard CDC *backfill* medium (object-store retention outlives
-server retention). ``binlog_file_provider`` plugs a directory of
+It is also the backfill feature: archived binlog files are the standard
+CDC *backfill* medium (object-store retention outlives server
+retention). ``binlog_file_provider`` plugs a directory of
 recorded files into the SAME reader classes the live path uses —
 LiveBinlogStreamReader driver-side or ArrowBinlogStreamReader
 executor-side — so backfill replays through identical machinery and
@@ -24,12 +22,12 @@ offsets. At 100 TB scale each file parses independently (table-sharded
 by the Arrow reader), and the format's per-event ``log_pos`` chaining
 makes resume exact.
 
-Column values surface with the Python types ``pymysqlreplication``
-would produce (int/float/str/bytes/date/datetime/timedelta/Decimal),
-positionally — column NAMES come from the engine's own schema registry
-replaying the DDL recorded in the same file (the reference's design,
-``schema/` tracking; pymysqlreplication instead queries the server's
-information_schema, which an offline file cannot).
+Column values surface as plain Python types
+(int/float/str/bytes/date/datetime/timedelta/Decimal), positionally —
+column NAMES come from the engine's own schema registry replaying the
+DDL recorded in the same file (the reference's design, ``schema/``
+tracking; an offline file cannot query the server's
+information_schema).
 """
 
 from __future__ import annotations
@@ -97,8 +95,8 @@ class BinlogFormatError(ValueError):
 
 
 # --- event objects, duck-typed for adapt_replication_event ------------------
-# (dispatch there is by CLASS NAME; .packet.log_pos / .timestamp match
-# the pymysqlreplication attribute shape)
+# (dispatch there is by CLASS NAME; .packet.log_pos / .timestamp are the
+# attribute shape the native client's stream shares)
 
 
 class _Packet:
@@ -266,9 +264,9 @@ def _read_decimal(data: bytes, pos: int, precision: int, scale: int):
 
 
 def _read_value(data: bytes, pos: int, ctype: int, meta: int):
-    """One non-NULL column value (signed reads, like pymysqlreplication
-    without schema signedness hints; unsigned re-widening is the
-    engine's D4 stage downstream)."""
+    """One non-NULL column value (signed reads: the log carries no
+    signedness hints; unsigned re-widening is the engine's D4 stage
+    downstream)."""
     if ctype == T_TINY:
         return int.from_bytes(data[pos:pos + 1], "little", signed=True), pos + 1
     if ctype == T_SHORT:
@@ -370,7 +368,7 @@ def _read_value(data: bytes, pos: int, ctype: int, meta: int):
     if ctype == T_BIT:
         # TABLE_MAP meta bytes: (bits % 8, nbytes*8) packed little —
         # nbits = hi*8 + lo; value is big-endian over ceil(nbits/8)
-        # bytes (public layout; pymysqlreplication column.py agrees)
+        # bytes (public layout)
         nbits = (meta >> 8) * 8 + (meta & 0xFF)
         nb = (nbits + 7) // 8
         return int.from_bytes(data[pos:pos + nb], "big"), pos + nb

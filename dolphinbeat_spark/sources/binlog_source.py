@@ -1,18 +1,22 @@
 """MySQL binlog streaming source (reference S4/D1/D2/D5/D6).
 
-Design (SURVEY.md §7.2 step 5): a Spark 4 Python Data Source wrapping
-``pymysqlreplication`` (public library speaking the replication
-protocol, the Python analog of the reference's go-mysql syncer,
-``canal/sync.go:46-67``). Offsets are ``{file, pos, gtid_set,
+Design (SURVEY.md §7.2 step 5): a Spark 4 Python Data Source over
+ONE live transport, the in-repo replication client
+(:mod:`dolphinbeat_spark.sources.repl_client`, the analog of the
+reference's go-mysql syncer, ``canal/sync.go:46-67``). Readers reach
+events only through a provider, ``provider(options) -> (factory,
+latest)``: the native client (:data:`LIVE_PROVIDER`, the default),
+recorded files (``binlog_file.binlog_file_provider``) or a scripted
+stand-in (``binlog_fake``). Offsets are ``{file, pos, gtid_set,
 server_id}`` — both coordinates are kept because GTID sets are only
 partially ordered across server ids (reference C2 caveat,
 ``ckp/manager.go:161-165``).
 
-The replication client is NOT bundled in this environment, so the
-reader constructor import-gates it; everything that doesn't need a
-live server — offset algebra, event→envelope decoding, transaction
-framing, DDL classification — is pure and unit-tested against fake
-event objects (tests/test_binlog_decode.py).
+Everything that doesn't need a live server — offset algebra,
+event→envelope decoding, transaction framing, DDL classification — is
+pure and unit-tested against fake event objects
+(tests/test_binlog_decode.py); the native client is tested over a
+loopback socket (tests/test_repl_client.py).
 
 Scale note: one binlog is inherently a single ordered stream; the
 source is single-reader (like the reference's one-goroutine loop,
@@ -128,9 +132,9 @@ class DecodeContext:
 def decode_event(ev: object, ctx: DecodeContext) -> list[dict]:
     """Pure event→envelope decoder (reference D1's dispatch switch).
 
-    ``ev`` is duck-typed with the attribute names pymysqlreplication
-    uses (event_type, packet.log_pos, rows, schema, table, query, ...)
-    so tests can drive it with plain objects.
+    ``ev`` is the duck-typed shape :func:`adapt_replication_event`
+    builds (kind, log_pos, rows, schema, table, query, ...) so tests
+    can drive it with plain objects.
     """
     kind = getattr(ev, "kind", None)
     ts = int(getattr(ev, "timestamp", 0))
@@ -287,9 +291,8 @@ def _label_maps(td) -> dict | None:
     bitmask (SET); the reference ships that raw number plus the
     TableDef and lets the CLIENT resolve it (sink/kafka/operation.go
     makeValue over go-mysql int64). We resolve engine-side instead —
-    the registry already holds the labels, and it keeps the file route
-    consistent with live pymysqlreplication (which resolves labels via
-    information_schema). Unknown table → None → index passes through."""
+    the registry already holds the labels. Unknown table → None →
+    index passes through."""
     if td is None:
         return None
     out = {}
@@ -303,25 +306,18 @@ def _label_maps(td) -> dict | None:
 
 def _render_label(kind_labels: tuple, v):
     kind, labels = kind_labels
+    if not isinstance(v, int):
+        return str(v)
     if kind == "enum":
-        if isinstance(v, int):
-            if v == 0:
-                return ""  # MySQL's invalid/empty enum member
-            if 1 <= v <= len(labels):
-                return labels[v - 1]
-            return str(v)
-        return str(v)  # live path already resolved the label
+        if v == 0:
+            return ""  # MySQL's invalid/empty enum member
+        if 1 <= v <= len(labels):
+            return labels[v - 1]
+        return str(v)
     # set
-    if isinstance(v, int):
-        if v >> len(labels):  # bit beyond the definition: unknown member
-            return str(v)
-        return ",".join(l for i, l in enumerate(labels) if v & (1 << i))
-    if isinstance(v, (set, frozenset)):
-        # canonical definition order (str(set) order is unstable)
-        known = [l for l in labels if l in v]
-        extra = sorted(x for x in v if x not in labels)
-        return ",".join(known + extra)
-    return str(v)
+    if v >> len(labels):  # bit beyond the definition: unknown member
+        return str(v)
+    return ",".join(l for i, l in enumerate(labels) if v & (1 << i))
 
 
 def _stringify(
@@ -337,8 +333,7 @@ def _stringify(
     JSON columns (``json_cols``, from the registry's TableDef) carry
     JSON *text* on the wire like the reference's go-mysql-decoded
     values: raw binary-JSONB bytes are decoded (sources/mysql_jsonb),
-    and already-parsed dict/list values (newer pymysqlreplication
-    versions parse JSONB themselves) are re-serialized compactly."""
+    and already-parsed dict/list values are re-serialized compactly."""
     if isinstance(row, dict):
         items = row.items()
     else:
@@ -410,13 +405,15 @@ def _stringify(
 
 
 def adapt_replication_event(raw: object) -> object | None:
-    """Map a ``pymysqlreplication`` event object to the duck-typed
-    shape :func:`decode_event` consumes. Dispatch is by class NAME so
-    unit tests drive it with plain fake classes (no live socket).
+    """Map a parsed binlog event object (the event classes of
+    :mod:`dolphinbeat_spark.sources.binlog_file`, which both the native
+    client and the file replay yield) to the duck-typed shape
+    :func:`decode_event` consumes. Dispatch is by class NAME so unit
+    tests drive it with plain fake classes (no live socket).
 
     Returns None for event types the engine ignores (format
-    description, table map — pymysqlreplication resolves column names
-    into the row dicts itself, heartbeats, ...).
+    description, table map — the parser has already applied it to the
+    rows that follow, heartbeats, ...).
     """
     from types import SimpleNamespace
 
@@ -437,9 +434,8 @@ def adapt_replication_event(raw: object) -> object | None:
             apply_only=(cls == "SeekRotateEvent"), **base,
         )
     if cls in ("GtidEvent", "MariadbGtidEvent"):
-        # MySQL 5.7+ logical clock when the upstream parser exposes it
-        # (our file parser does; pymysqlreplication's GtidEvent decodes
-        # it on recent versions) — None otherwise, including MariaDB
+        # MySQL 5.7+ logical clock when the event carries it (the
+        # in-repo parser decodes it) — None otherwise, including MariaDB
         lc = getattr(raw, "last_committed", None)
         sn = getattr(raw, "sequence_number", None)
         return SimpleNamespace(
@@ -503,9 +499,12 @@ class LiveBinlogStreamReader(SimpleDataSourceStreamReader):
 
     ``event_iter_factory(offset) -> iterator`` is injectable: tests
     drive the full offset/decode/replay protocol with fake event
-    objects; production uses :func:`live_event_iter` over
-    ``pymysqlreplication`` (constructed with ``blocking=False`` so a
-    drained stream ends the batch instead of hanging the trigger).
+    objects, and the file and scripted sources inject their provider's
+    factory. Without one the reader uses the native client through
+    :data:`LIVE_PROVIDER` (a non-blocking dump, so a drained stream
+    ends the batch instead of hanging the trigger), and a cold start
+    with no ``file``/``gtid_set`` starts from the master's current
+    position.
 
     Replay (``readBetweenOffsets``) re-seeks a FRESH iterator at the
     start offset and drains to the end offset — binlogs are immutable
@@ -533,21 +532,31 @@ class LiveBinlogStreamReader(SimpleDataSourceStreamReader):
             server_id=int(options.get("server_id", "0")),
             table_filter=table_filter,
         )
-        self._factory = event_iter_factory or (lambda off: live_event_iter(self.options, off))
-        self._runner = query_runner  # S5 probes; default built lazily from options
+        self._factory = event_iter_factory  # None: the native client
+        self._native_pair = None  # its (factory, latest), built on first use
+        self._runner = query_runner  # injected S5 probe
         self._iter = None
         self._pending_ops: list[dict] = []  # mid-trx drain rollback buffer
+
+    def _native(self):
+        if self._native_pair is None:
+            from dolphinbeat_spark.sources.repl_client import native_live_provider
+
+            self._native_pair = native_live_provider(self.options)
+        return self._native_pair
+
+    def _open(self, off: BinlogOffset):
+        return (self._factory or self._native()[0])(off)
 
     # -- offsets ---------------------------------------------------------
     def initialOffset(self) -> dict:
         # no explicit start → probe the master's current position (S5),
         # matching the reference's start-from-now bootstrap
         if not self.options.get("file") and not self.options.get("gtid_set"):
-            runner = self._runner
-            if runner is None and self.options.get("host"):
-                runner = default_query_runner(self.options)
-            if runner is not None:
-                return probe_master_offset(runner).to_json()
+            if self._runner is not None:
+                return probe_master_offset(self._runner).to_json()
+            if self._factory is None:
+                return self._native()[1](self.options)
         return BinlogOffset(
             file=self.options.get("file", ""),
             pos=int(self.options.get("pos", "4")),
@@ -644,7 +653,7 @@ class LiveBinlogStreamReader(SimpleDataSourceStreamReader):
     def read(self, start: dict):
         off = BinlogOffset.from_json(start)
         if self._iter is None:
-            self._iter = self._factory(off)
+            self._iter = self._open(off)
         rows, end, self._pending_ops = self._decode_next(
             self._iter, off, self.max_ops, buffered=self._pending_ops
         )
@@ -656,7 +665,7 @@ class LiveBinlogStreamReader(SimpleDataSourceStreamReader):
         ``end`` is passed down as a hard bound so the replay never
         overshoots into rows the next live batch will also read."""
         s, e = BinlogOffset.from_json(start), BinlogOffset.from_json(end)
-        it = self._factory(s)
+        it = self._open(s)
         try:
             rows: list[tuple] = []
             cur = s
@@ -755,9 +764,9 @@ def probe_master_offset(run_query) -> BinlogOffset:
     server id (reference ``canal/canal.go`` GetMasterPos /
     GetMasterGTIDSet, polled by the master-position monitor).
 
-    ``run_query(sql) -> list[tuple]`` is injectable: a pymysql cursor
-    (:func:`pymysql_query_runner`), a one-row ``spark.read.jdbc``, or a
-    fake in tests. MySQL 8.0.22+ renamed the statement; the fallback
+    ``run_query(sql) -> list[tuple]`` is injectable: the native client
+    (``repl_client.native_query_runner``), a one-row ``spark.read.jdbc``,
+    or a fake in tests. MySQL 8.0.22+ renamed the statement; the fallback
     keeps older servers working."""
     try:
         rows = run_query("SHOW BINARY LOG STATUS")  # MySQL >= 8.4 name
@@ -783,41 +792,6 @@ def offset_is_resumable(offset: BinlogOffset, run_query) -> bool:
     if offset.is_zero():
         return False
     return any(name == offset.file for name, _ in probe_binary_logs(run_query))
-
-
-def pymysql_query_runner(conn: dict):  # pragma: no cover - needs live MySQL
-    """Default live ``run_query`` over pymysql (bundled with
-    pymysqlreplication)."""
-    import pymysql
-
-    def run(sql: str) -> list[tuple]:
-        with pymysql.connect(**conn) as c, c.cursor() as cur:
-            cur.execute(sql)
-            return list(cur.fetchall())
-
-    return run
-
-
-def default_query_runner(options: dict):
-    """Probe runner from reader options: pymysql when importable,
-    else the in-repo native client (same ``run_query(sql) -> rows``
-    shape — loopback-tested)."""
-    try:
-        import pymysql  # noqa: F401
-    except ImportError:
-        from dolphinbeat_spark.sources.repl_client import (
-            native_query_runner,
-        )
-
-        return native_query_runner(options)
-    return pymysql_query_runner(  # pragma: no cover - needs pymysql
-        {
-            "host": options.get("host", "127.0.0.1"),
-            "port": int(options.get("port", "3306")),
-            "user": options.get("user", ""),
-            "passwd": options.get("password", ""),
-        }
-    )
 
 
 #: MariaDB GTID: domain-server-seq, no colon (canal/gtid.go:21-25 parses
@@ -937,80 +911,6 @@ def gtid_set_covers(a: str, b: str) -> bool:
     return all(p in pa.opaque for p in pb.opaque)
 
 
-def live_event_iter(options: dict, offset: BinlogOffset):
-    """Construct the live event iterator positioned at ``offset``
-    (gtid set preferred, else file/pos — reference
-    ``canal/sync.go:46-67``), asserting ROW format the way the
-    reference does (``canal/canal.go:368-377``).
-
-    Two interchangeable transports (``options['client']``):
-    ``native`` — the in-repo replication client
-    (:mod:`dolphinbeat_spark.sources.repl_client`), exercised
-    end-to-end by the scripted-loopback protocol test;
-    ``pymysqlreplication`` — the public library, when installed.
-    ``auto`` (default) prefers the library and falls back to native,
-    so the engine runs live in environments that ship neither
-    pymysql nor pymysqlreplication."""
-    client = options.get("client", "auto")
-    if client not in ("auto", "native", "pymysqlreplication"):
-        raise ValueError(f"unknown binlog client {client!r}")
-    if client != "pymysqlreplication":
-        try:
-            if client == "native":
-                raise ImportError  # forced native
-            from pymysqlreplication import BinLogStreamReader  # noqa: F401
-        except ImportError:
-            from dolphinbeat_spark.sources.repl_client import (
-                native_event_iter,
-            )
-
-            return native_event_iter(options, offset)
-    return _pymysqlrepl_event_iter(options, offset)
-
-
-def _pymysqlrepl_event_iter(options: dict, offset: BinlogOffset):  # pragma: no cover - needs live MySQL
-    from pymysqlreplication import BinLogStreamReader
-
-    conn = {
-        "host": options.get("host", "127.0.0.1"),
-        "port": int(options.get("port", "3306")),
-        "user": options.get("user", ""),
-        "passwd": options.get("password", ""),
-    }
-    _assert_row_format(conn)
-    kwargs: dict = dict(
-        connection_settings=conn,
-        server_id=int(options.get("client_server_id", "1001")),  # our slave id
-        blocking=False,  # drained stream ends the micro-batch
-        resume_stream=True,
-        freeze_schema=False,
-    )
-    if options.get("flavor") == "mariadb":
-        # MariaDB speaks its own GTID handshake (domain-server-seq —
-        # the dialect gtid_set_covers/_merge_gtid handle first-class);
-        # pymysqlreplication needs the explicit flag to request it
-        kwargs["is_mariadb"] = True
-    gtid_on = options.get("gtid_enabled", "true") != "false"
-    if offset.gtid_set and gtid_on:
-        kwargs["auto_position"] = offset.gtid_set
-    elif offset.file:
-        kwargs.update(log_file=offset.file, log_pos=max(offset.pos, 4))
-    return BinLogStreamReader(**kwargs)
-
-
-def _assert_row_format(conn: dict) -> None:  # pragma: no cover - needs live MySQL
-    """binlog_format must be ROW (reference canal/canal.go:368-377)."""
-    try:
-        import pymysql
-    except ImportError:
-        return  # pymysqlreplication bundles pymysql; defensive only
-    with pymysql.connect(**conn) as c, c.cursor() as cur:
-        cur.execute("SHOW VARIABLES LIKE 'binlog_format'")
-        row = cur.fetchone()
-        if row and str(row[1]).upper() != "ROW":
-            raise RuntimeError(f"binlog_format must be ROW, got {row[1]!r}")
-
-
 class _ShardRangePartition(InputPartition):
     """One executor task of an Arrow binlog batch: a fixed offset range
     plus the table shard this task decodes."""
@@ -1022,9 +922,17 @@ class _ShardRangePartition(InputPartition):
         self.shard_count = shard_count
 
 
-def _resolve_provider(ref: str):
-    """``pkg.module:callable`` → the callable (importable on executors,
+#: the one live transport: the native replication client. An Arrow
+#: reader with no ``provider`` option uses it, and so does a simple
+#: reader with no injected factory
+LIVE_PROVIDER = "dolphinbeat_spark.sources.repl_client:native_live_provider"
+
+
+def _resolve_provider(options: dict):
+    """``options['provider']`` (``pkg.module:callable``, default
+    :data:`LIVE_PROVIDER`) → the callable (importable on executors,
     which is why providers are passed by reference, not by pickle)."""
+    ref = options.get("provider") or LIVE_PROVIDER
     mod, _, fn = ref.partition(":")
     if not mod or not fn:
         raise ValueError(f"provider must be 'module:callable', got {ref!r}")
@@ -1048,18 +956,11 @@ def _read_shard_arrow(options: dict, partition: _ShardRangePartition, batch_rows
 
     start = BinlogOffset.from_json(partition.start)
     end = BinlogOffset.from_json(partition.end)
-    provider = options.get("provider")
-    if provider:
-        factory, _latest = _resolve_provider(provider)(options)
-    else:  # pragma: no cover - needs live MySQL
-        # each concurrent shard task must register with a DISTINCT
-        # replica server id: MySQL kills the existing dump thread when
-        # a second connection reuses one (zombie-dump-thread rule)
-        live_opts = dict(options)
-        live_opts["client_server_id"] = str(
-            int(options.get("client_server_id", "1001")) + partition.shard_index
-        )
-        factory = lambda off: live_event_iter(live_opts, off)  # noqa: E731
+    # the task's shard_index reaches the provider: the native client
+    # registers each concurrent shard task under its own replica id
+    factory, _latest = _resolve_provider(options)(
+        {**options, "shard_index": str(partition.shard_index)}
+    )
     # the snapshot ships as JSON TEXT in the options (executors cannot
     # read a driver-local snapshot path); the path form stays for
     # driver-side callers and same-machine tests
@@ -1192,8 +1093,10 @@ class ArrowBinlogStreamReader(DataSourceStreamReader):
       it);
     - each executor task opens its OWN replication iterator at
       ``start`` (providers are module-path references so construction
-      happens executor-side), decodes only its shard's tables, and
-      yields pyarrow RecordBatches.
+      happens executor-side; no ``provider`` option means the native
+      client, :data:`LIVE_PROVIDER`, where each shard task registers
+      its own replica id), decodes only its shard's tables, and yields
+      pyarrow RecordBatches.
 
     Contracts and trades, explicit:
 
@@ -1228,14 +1131,18 @@ class ArrowBinlogStreamReader(DataSourceStreamReader):
     - admission control: ``max_pos_delta_per_batch`` (bytes, default
       64 MiB) clamps how far ``latestOffset`` advances past the
       previous planned end within one file — steady-state batches stay
-      bounded. The clamp cannot see the checkpointed start after a
-      driver restart (Spark does not surface it), so the FIRST batch
-      after long downtime still spans the backlog; RecordBatches
-      stream incrementally (``arrow_batch_rows`` rows buffered per
-      task), bounding memory but not task duration for that batch.
+      bounded. Recorded and scripted logs only: a live master is never
+      clamped (see ``latestOffset``). The clamp cannot see the
+      checkpointed start after a driver restart (Spark does not
+      surface it), so the FIRST batch after long downtime still spans
+      the backlog; RecordBatches stream incrementally
+      (``arrow_batch_rows`` rows buffered per task), bounding memory
+      but not task duration for that batch.
     """
 
     def __init__(self, options: dict):
+        from dolphinbeat_spark.sources.repl_client import native_live_provider
+
         self.options = dict(options)
         self.shard_count = max(1, int(options.get("shard_count", "1")))
         self.batch_rows = int(options.get("arrow_batch_rows", "4096"))
@@ -1243,74 +1150,35 @@ class ArrowBinlogStreamReader(DataSourceStreamReader):
             options.get("max_pos_delta_per_batch", str(64 * 1024 * 1024))
         )
         self._planned_end: BinlogOffset | None = None  # driver-side clamp state
-        # provider prefetch (VERDICT r9 #7): resolving the provider —
-        # module import + factory construction, which for scripted/file
-        # providers builds the whole event script — used to run inside
-        # the FIRST latestOffset call, serial with batch planning. The
-        # reader is constructed when the query starts, well before
-        # Spark's first planning round trip, so a background thread
-        # warms the (factory, latest) pair here and planning overlaps
-        # the build. Subsequent latestOffset calls reuse the resolved
-        # pair (factories are stateless closures; ``latest`` re-probes
-        # its head on every call, so freshness is unaffected).
-        self._provider_pair = None
-        self._provider_err: Exception | None = None
-        self._provider_ready = None
-        provider = self.options.get("provider")
-        if provider:
-            import threading
-
-            self._provider_ready = threading.Event()
-
-            def _warm() -> None:
-                try:
-                    self._provider_pair = _resolve_provider(provider)(self.options)
-                except Exception as ex:  # surfaced on first use, not swallowed
-                    self._provider_err = ex
-                finally:
-                    self._provider_ready.set()
-
-            threading.Thread(
-                target=_warm, daemon=True, name="binlog-provider-warm"
-            ).start()
+        # the live-only rules (start from now, never clamp) apply to
+        # the native client alone — never keyed on ``host``: a file
+        # reader configured with a master address still replays from 4
+        self._live = _resolve_provider(self.options) is native_live_provider
+        self._provider_pair = None  # (factory, latest), resolved on first use
 
     def _provider(self):
-        """The resolved (event_iter_factory, latest_fn) pair — from the
-        prefetch thread when it won the race, resolved inline otherwise."""
-        if self._provider_ready is not None:
-            self._provider_ready.wait()
-            if self._provider_err is not None:
-                raise self._provider_err
-            return self._provider_pair
-        return _resolve_provider(self.options["provider"])(self.options)
+        """The resolved ``(factory, latest)`` pair, reused across calls:
+        factories are stateless closures, and ``latest`` re-probes its
+        head on every call."""
+        if self._provider_pair is None:
+            self._provider_pair = _resolve_provider(self.options)(self.options)
+        return self._provider_pair
 
     def __getstate__(self):
-        # the reader ships to executors for read(); the prefetch
-        # thread/Event and resolved closures are driver-runner-local
-        # and not picklable — executors resolve the provider themselves
-        # inside _read_shard_arrow
-        state = dict(self.__dict__)
-        state["_provider_pair"] = None
-        state["_provider_err"] = None
-        state["_provider_ready"] = None
-        return state
-
-    def _runner(self):
-        return default_query_runner(self.options)
+        # the reader ships to executors for read(); the resolved
+        # closures are not picklable — executors resolve the provider
+        # themselves inside _read_shard_arrow
+        return {**self.__dict__, "_provider_pair": None}
 
     def initialOffset(self) -> dict:
         # start-from-now bootstrap: with no explicit coordinates the
         # master is probed ONCE here, so every shard task of the first
         # batch reads the same replayable range (N tasks each falling
         # back to "current position at connect time" would read N
-        # different nondeterministic ranges)
-        if (
-            not self.options.get("file")
-            and not self.options.get("gtid_set")
-            and not self.options.get("provider")  # scripted: cold start = pos 4
-        ):
-            if self.options.get("host"):  # pragma: no cover - needs live MySQL
-                return probe_master_offset(self._runner()).to_json()
+        # different nondeterministic ranges). Recorded and scripted
+        # logs cold-start at pos 4
+        if self._live and not self.options.get("file") and not self.options.get("gtid_set"):
+            return self._provider()[1](self.options)
         return BinlogOffset(
             file=self.options.get("file", ""),
             pos=int(self.options.get("pos", "4")),
@@ -1319,28 +1187,19 @@ class ArrowBinlogStreamReader(DataSourceStreamReader):
         ).to_json()
 
     def latestOffset(self) -> dict:
-        provider = self.options.get("provider")
-        if provider:
-            _factory, latest = self._provider()
-            head = BinlogOffset.from_json(latest(self.options))
-        elif self.options.get("host"):  # pragma: no cover - needs live MySQL
-            head = probe_master_offset(self._runner())
-        else:
-            raise ValueError(
-                "ArrowBinlogStreamReader needs a 'provider' or 'host' option"
-            )
+        head = BinlogOffset.from_json(self._provider()[1](self.options))
         # admission control: advance at most max_pos_delta past the
         # previously planned end (same file only — a file rotation
         # resets the clamp; see class docstring for the restart caveat).
-        # PROVIDER MODE ONLY: a scripted/filtering iterator accepts any
-        # numeric bound, but a live MySQL seek requires an event
+        # Never on the live master: a scripted/filtering iterator
+        # accepts any numeric bound, but a MySQL seek requires an event
         # boundary ("impossible position" otherwise) and a clamped
         # offset must not carry the head's full gtid_set (auto_position
         # with it would skip everything up to the real head — data
-        # loss). The live path therefore never clamps.
+        # loss).
         prev = self._planned_end
         if (
-            provider
+            not self._live
             and prev is not None
             and self.max_pos_delta > 0
             and head.file == prev.file
@@ -1379,11 +1238,9 @@ class ArrowBinlogStreamReader(DataSourceStreamReader):
 
 
 class BinlogDataSource(DataSource):
-    """Live source; requires ``pymysqlreplication`` + a MySQL with
-    ROW-format binlog (the reference asserts the same precondition,
-    ``canal/canal.go:368-377``). In environments without the client
-    library, the fixture source (sources/fixture_source.py) is the
-    stand-in."""
+    """Live source (daemon ``reader = "simple"``): driver-side decode
+    over the native client, which asserts a ROW-format binlog before
+    dumping (the reference's precondition, ``canal/canal.go:368-377``)."""
 
     @classmethod
     def name(cls) -> str:
@@ -1393,21 +1250,13 @@ class BinlogDataSource(DataSource):
         return ENVELOPE_SCHEMA
 
     def simpleStreamReader(self, schema):
-        try:
-            import pymysqlreplication  # noqa: F401
-        except ImportError as ex:
-            raise ImportError(
-                "BinlogDataSource needs the public 'mysql-replication' "
-                "package (pymysqlreplication); in this environment use "
-                "the fixture source (sources/fixture_source.py) instead"
-            ) from ex
         return LiveBinlogStreamReader(self.options)
 
 
 class ArrowBinlogDataSource(DataSource):
-    """Live Arrow-reader source (daemon ``reader = "arrow"``): same
-    preconditions as :class:`BinlogDataSource`, but serves the full
-    DataSourceStreamReader protocol with executor-side decode."""
+    """Arrow-reader source (daemon ``reader = "arrow"``): the full
+    DataSourceStreamReader protocol with executor-side decode, over the
+    native client unless a ``provider`` option names another one."""
 
     @classmethod
     def name(cls) -> str:
@@ -1417,13 +1266,4 @@ class ArrowBinlogDataSource(DataSource):
         return ENVELOPE_SCHEMA
 
     def streamReader(self, schema):
-        if not self.options.get("provider"):  # pragma: no cover - needs live MySQL
-            try:
-                import pymysqlreplication  # noqa: F401
-            except ImportError as ex:
-                raise ImportError(
-                    "ArrowBinlogDataSource needs the public 'mysql-replication' "
-                    "package (pymysqlreplication) unless a 'provider' option "
-                    "supplies the event iterator"
-                ) from ex
         return ArrowBinlogStreamReader(self.options)

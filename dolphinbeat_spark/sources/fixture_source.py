@@ -94,9 +94,9 @@ class FixtureStreamReader(DataSourceStreamReader):
         pyarrow table per worker; partitions are served as zero-copy
         slices. Yielding RecordBatches instead of tuples skips the
         per-row Python→JVM pickling that caps a naive Python source —
-        ~10× throughput, and exactly the discipline a production
-        pymysqlreplication source would use (decode into arrow buffers,
-        hand batches to the JVM)."""
+        ~10× throughput, and exactly the discipline the production
+        Arrow binlog reader uses (decode into arrow buffers, hand
+        batches to the JVM)."""
         import pyarrow as pa
 
         n = len(self.ops)

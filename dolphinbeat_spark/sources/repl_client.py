@@ -1,13 +1,12 @@
 """From-scratch MySQL replication client over a raw TCP socket.
 
-Why this exists: the live socket path originally rode
-``pymysqlreplication``, which this environment does not ship — so S4's
-socket construction was the one line of the engine no test had ever
-executed. This module speaks the public MySQL client/server protocol
-directly (handshake v10, ``mysql_native_password`` auth, COM_QUERY
-text resultsets, COM_REGISTER_SLAVE, COM_BINLOG_DUMP /
-COM_BINLOG_DUMP_GTID) and hands every streamed event to the SAME
-from-scratch binlog parser the archived-file/backfill path uses
+This is the engine's one live binlog transport (the role go-mysql's
+binlog syncer plays for the reference). It speaks the public MySQL
+client/server protocol directly (handshake v10,
+``mysql_native_password`` auth, COM_QUERY text resultsets,
+COM_REGISTER_SLAVE, COM_BINLOG_DUMP / COM_BINLOG_DUMP_GTID) and hands
+every streamed event to the SAME from-scratch binlog parser the
+archived-file/backfill path uses
 (:class:`dolphinbeat_spark.sources.binlog_file.BinlogEventDecoder`),
 so live bytes and recorded bytes decode through literally identical
 code and the loopback protocol test covers both.
@@ -22,8 +21,8 @@ implementation's source.
 
 Scale note: one replication stream is ONE ordered TCP connection by
 protocol design — parallelism happens after decode (table-sharded
-Arrow tasks each open their own connection with a distinct replica
-server id; see ``binlog_source._read_shard_arrow``).
+Arrow tasks and sharded simple readers each open their own connection
+with a distinct replica server id; see :func:`native_event_iter`).
 """
 
 from __future__ import annotations
@@ -369,11 +368,16 @@ def native_query_runner(options: dict):
 
 
 def native_event_iter(options: dict, offset):
-    """The native replacement for ``live_event_iter``: connect,
+    """The live event iterator positioned at ``offset``: connect,
     assert ROW format (reference canal/canal.go:368-377), negotiate
-    the checksum the FDE will declare, seek by GTID set when present
-    else file/pos (canal/sync.go:46-67), then yield decoded duck-typed
-    events from the shared BinlogEventDecoder."""
+    the checksum the FDE will declare, register as a replica, seek by
+    GTID set when present else file/pos (canal/sync.go:46-67), then
+    yield decoded duck-typed events from the shared BinlogEventDecoder.
+
+    The replica id is ``client_server_id + shard_index``: concurrent
+    shard readers must each register under a DISTINCT id, because
+    MySQL kills the existing dump thread when a second connection
+    reuses one."""
     c = _conn(options).connect()
     try:
         rows = c.query("SHOW VARIABLES LIKE 'binlog_format'")
@@ -384,7 +388,8 @@ def native_event_iter(options: dict, offset):
         # the in-stream FDE then declares the algorithm and
         # BinlogEventDecoder verifies per event
         c.query("SET @master_binlog_checksum= @@global.binlog_checksum")
-        server_id = int(options.get("client_server_id", "1001"))
+        server_id = (int(options.get("client_server_id", "1001"))
+                     + int(options.get("shard_index", "0")))
         c.register_slave(server_id)
         gtid_on = options.get("gtid_enabled", "true") != "false"
         if offset.gtid_set and gtid_on:
@@ -419,9 +424,9 @@ def native_event_iter(options: dict, offset):
 
 def native_live_provider(options: dict):
     """Provider-contract wrapper (``provider(options) -> (factory,
-    latest)``) so the native socket path plugs into
-    LiveBinlogStreamReader/ArrowBinlogStreamReader exactly like the
-    scripted and file providers do."""
+    latest)``): the live source of LiveBinlogStreamReader and
+    ArrowBinlogStreamReader, reached exactly like the scripted and file
+    providers. ``latest`` probes the master's current position."""
     from dolphinbeat_spark.sources.binlog_source import probe_master_offset
 
     def factory(offset):

@@ -2,10 +2,10 @@
 
 Drives LiveBinlogStreamReader's full SimpleDataSourceStreamReader
 protocol (initialOffset / read / readBetweenOffsets / commit) with
-fake event objects shaped like pymysqlreplication's classes (dispatch
-is by class NAME, so no live socket or library import is needed) —
-the sandbox has no MySQL; this is the fake-socket twin of the
-reference's live suite (canal/sync.go:69-225 semantics).
+fake event objects shaped like the binlog parser's event classes
+(dispatch is by class NAME, so no live socket is needed) — the
+fake-socket twin of the reference's live suite
+(canal/sync.go:69-225 semantics).
 """
 
 from __future__ import annotations

@@ -200,8 +200,8 @@ def test_offset_escape_rejected():
 
 def test_envelope_integration_json_column():
     """decode_event renders a JSON column as JSON text: raw JSONB
-    bytes through the from-scratch decoder, pre-parsed dicts (newer
-    pymysqlreplication) re-serialized compactly."""
+    bytes through the from-scratch decoder, pre-parsed dicts
+    re-serialized compactly."""
     from types import SimpleNamespace
 
     from dolphinbeat_spark.schema.registry import SchemaRegistry

@@ -27,11 +27,13 @@ from pathlib import Path
 
 import pytest
 
+from dolphinbeat_spark.envelope import ENVELOPE_SCHEMA
 from dolphinbeat_spark.sources.binlog_file import binlog_file_provider
 from dolphinbeat_spark.sources.binlog_source import (
+    LIVE_PROVIDER,
+    ArrowBinlogStreamReader,
     BinlogOffset,
     LiveBinlogStreamReader,
-    live_event_iter,
     probe_master_offset,
 )
 from dolphinbeat_spark.sources.repl_client import (
@@ -296,8 +298,7 @@ def master():
 
 def _opts(m: ScriptedMaster, **kw) -> dict:
     o = {"host": "127.0.0.1", "port": str(m.port), "user": m.user,
-         "password": m.password, "client": "native",
-         "connect_timeout": "10"}
+         "password": m.password, "connect_timeout": "10"}
     o.update({k: str(v) for k, v in kw.items()})
     return o
 
@@ -415,7 +416,7 @@ def test_gtid_dump_over_socket(master):
 
 def test_live_reader_end_to_end_over_socket(master):
     """LiveBinlogStreamReader with NO injected factory: the production
-    wiring (live_event_iter -> native client -> socket -> shared
+    wiring (native_live_provider -> native client -> socket -> shared
     decoder -> envelope ops) across MULTIPLE micro-batches on one
     connection, plus replay (readBetweenOffsets) over a second real
     connection — the canal_test.go scenario shape.
@@ -470,14 +471,98 @@ def test_live_reader_end_to_end_over_socket(master):
     assert rows == list(frows)
 
 
-def test_live_event_iter_auto_falls_back_to_native(master):
-    """client=auto (the default) uses the native transport when
-    pymysqlreplication is not importable — this sandbox's situation."""
-    opts = _opts(master, file="replay.binlog", pos=4)
-    del opts["client"]
-    evs = list(live_event_iter(opts, BinlogOffset(
-        file="replay.binlog", pos=4)))
-    assert len(evs) > 10
-    with pytest.raises(ValueError, match="unknown binlog client"):
-        live_event_iter(_opts(master, client="nope"), BinlogOffset(
-            file="replay.binlog", pos=4))
+def _row_ops(records) -> list[tuple]:
+    """Row ops as comparable tuples in log order (schema_version and
+    the control ops left out)."""
+    def image(v):
+        return None if v is None else sorted(dict(v).items())
+
+    return sorted(
+        (r["log_name"], r["log_pos"], r["row_index"], r["op_type"],
+         r["db"], r["table"], image(r["before"]), image(r["after"]))
+        for r in records if r["op_type"] in ("insert", "update", "delete")
+    )
+
+
+def _file_row_ops() -> list[tuple]:
+    """The fixture's row ops decoded from disk by the file provider."""
+    opts = {"binlog_file_path": str(FIXTURE), "file": "replay.binlog",
+            "max_ops_per_batch": "100000"}
+    reader = LiveBinlogStreamReader(
+        opts, event_iter_factory=binlog_file_provider(opts)[0])
+    rows, _end = reader.read(reader.initialOffset())
+    names = [f.name for f in ENVELOPE_SCHEMA.fields]
+    return _row_ops(dict(zip(names, r)) for r in rows)
+
+
+def test_arrow_shard_tasks_register_distinct_replica_ids(master):
+    """Each table-shard task of the live Arrow reader registers as
+    replica ``client_server_id + shard_index``: MySQL kills the older
+    dump thread when a second connection reuses an id. Together the
+    shards decode every row op of the range exactly once."""
+    import pyarrow as pa
+
+    r = ArrowBinlogStreamReader(_opts(
+        master, provider=LIVE_PROVIDER, shard_count=3,
+        file="replay.binlog", pos=4))
+    start, end = r.initialOffset(), r.latestOffset()
+    batches = [b for p in r.partitions(start, end) for b in r.read(p)]
+    assert master.registered == [1001, 1002, 1003]
+    got = pa.Table.from_batches(batches).to_pylist()
+    assert _row_ops(got) == _file_row_ops()
+
+
+def test_arrow_live_reader_starts_from_now_and_never_clamps(master):
+    """The live-only rules follow the native provider, not ``host``:
+    a live cold start begins at the master's head, and a planned end
+    is never clamped (a mid-event position is not a seek a real master
+    accepts). The file provider with a ``host`` option keeps pos 4 and
+    its clamp."""
+    r = ArrowBinlogStreamReader(_opts(
+        master, provider=LIVE_PROVIDER, max_pos_delta_per_batch=100))
+    r._planned_end = BinlogOffset(file="replay.binlog", pos=4)
+    head = r.latestOffset()
+    assert (head["file"], head["pos"]) == ("replay.binlog", master.head_pos)
+    assert r.initialOffset()["pos"] == master.head_pos
+
+    f = ArrowBinlogStreamReader({
+        "provider": "dolphinbeat_spark.sources.binlog_file:binlog_file_provider",
+        "binlog_file_path": str(FIXTURE), "host": "127.0.0.1",
+        "max_pos_delta_per_batch": "100"})
+    assert f.initialOffset()["pos"] == 4
+    f._planned_end = BinlogOffset(file="replay.binlog", pos=4)
+    assert f.latestOffset()["pos"] == 104
+
+
+@pytest.mark.parametrize("reader", ["simple", "arrow"])
+def test_daemon_live_readers_over_socket(spark, tmp_path, master, reader):
+    """daemon.run with ``reader = "simple"`` / ``"arrow"`` and no
+    injected source: the registered live source reaches the master
+    through the native client, and the stdout sink commits exactly the
+    row ops the file provider decodes from the same fixture."""
+    from dolphinbeat_spark.daemon import DaemonConfig, SinkBlock, run
+    from dolphinbeat_spark.schema.registry import SchemaRegistry
+
+    (tmp_path / "schema").mkdir()
+    SchemaRegistry().save(tmp_path / "schema" / "schema_snapshot.json")
+    cfg = DaemonConfig(
+        mysql_addr=f"127.0.0.1:{master.port}", mysql_user=master.user,
+        mysql_password=master.password, server_id=7, reader=reader,
+        checkpoint_dir=str(tmp_path / "ckp"),
+        tracker_dir=str(tmp_path / "schema"),
+        sinks=[SinkBlock(type="stdout", name="all",
+                         cfg={"out_dir": str(tmp_path / "out")})],
+    )
+    assert cfg.validate() == []
+    _, queries, _server = run(
+        cfg, spark, trigger_once=True,
+        source_options_extra={"file": "replay.binlog", "pos": "4"})
+    try:
+        for q in queries:
+            q.awaitTermination(120)
+    finally:
+        for q in queries:
+            q.stop()
+    out = spark.read.parquet(str(tmp_path / "out" / "batch=*"))
+    assert _row_ops(r.asDict() for r in out.collect()) == _file_row_ops()
+    assert master.dumps and all(d["kind"] == "pos" for d in master.dumps)

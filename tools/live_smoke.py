@@ -1,10 +1,10 @@
 """Live-endpoint smoke harness (r15, env-gated).
 
-The ONE standing environmental gap in this engine is that the live
-socket paths (pymysqlreplication session, real Kafka produce) have
-never executed — no MySQL/Kafka exists in the build sandbox. This
-harness turns that gap into a one-command check for the day an
-endpoint exists: it drives the reference's own CI scenario
+The live endpoints this engine talks to — a real MySQL master (the
+native replication client, sources/repl_client.py, is tested only
+against a loopback master) and a real Kafka broker — are not part of
+the test suite. This harness is the one-command check against real
+endpoints: it drives the reference's own CI scenario
 (`canal/canal_test.go:50-134`: create -> insert -> ALTER -> insert ->
 verify) end to end through THIS engine's production wiring —
 INFORMATION_SCHEMA snapshot, master-position probe, Arrow binlog
@@ -17,11 +17,10 @@ Usage:
     python tools/live_smoke.py
 
 Exits 0 with a skip message when MYSQL_DSN is unset (CI-safe). The
-MySQL half runs with ZERO extra packages since r16: when `pymysql` is
-absent, statements/probes ride the in-repo native replication client
-(`sources/repl_client.py`, loopback-protocol-tested) — the same
-transport `live_event_iter` auto-selects for the stream itself. The
-Kafka half still needs `confluent_kafka` (import-gated by name).
+MySQL half needs no extra package: statements, probes and the stream
+all ride the in-repo native replication client
+(`sources/repl_client.py`). The Kafka half needs `confluent_kafka`
+(import-gated by name).
 
 The MySQL user needs REPLICATION SLAVE, REPLICATION CLIENT and DDL
 rights on the smoke database; binlog_format=ROW and
@@ -57,13 +56,6 @@ def _parse_dsn(dsn: str) -> dict:
     }
 
 
-def _mysql_exec(conn, *statements: str) -> None:
-    with conn.cursor() as cur:
-        for s in statements:
-            cur.execute(s)
-    conn.commit()
-
-
 def main() -> int:
     dsn = os.environ.get("MYSQL_DSN", "")
     if not dsn:
@@ -74,53 +66,29 @@ def main() -> int:
     cfg = _parse_dsn(dsn)
     bootstrap = os.environ.get("KAFKA_BOOTSTRAP", "")
 
-    try:
-        import pymysql
-    except ImportError:
-        pymysql = None  # native client (sources/repl_client) takes over
-
     from dolphinbeat_spark.session import get_spark
     from dolphinbeat_spark.sources.binlog_source import (
-        ArrowBinlogDataSource, probe_master_offset, pymysql_query_runner,
+        ArrowBinlogDataSource, probe_master_offset,
     )
     from dolphinbeat_spark.sources.jdbc_snapshot import snapshot_schemas
+    from dolphinbeat_spark.sources.repl_client import (
+        MysqlConn, native_query_runner,
+    )
 
     spark = get_spark("live-smoke")
     report: dict = {"scenario": "canal_test.go:50-134", "steps": []}
 
-    if pymysql is not None:
-        conn = pymysql.connect(host=cfg["host"], port=cfg["port"],
-                               user=cfg["user"], passwd=cfg["password"])
+    conn = MysqlConn(cfg["host"], cfg["port"], cfg["user"],
+                     cfg["password"]).connect()
+    conn.query("SET autocommit=1")
 
-        def exec_stmts(*stmts: str) -> None:
-            _mysql_exec(conn, *stmts)
+    def exec_stmts(*stmts: str) -> None:
+        for st in stmts:
+            conn.query(st)
 
-        def close_conn() -> None:
-            conn.close()
-
-        runner = pymysql_query_runner(
-            {"host": cfg["host"], "port": cfg["port"],
-             "user": cfg["user"], "passwd": cfg["password"]})
-    else:
-        from dolphinbeat_spark.sources.repl_client import (
-            MysqlConn, native_query_runner,
-        )
-
-        nconn = MysqlConn(cfg["host"], cfg["port"], cfg["user"],
-                          cfg["password"]).connect()
-        nconn.query("SET autocommit=1")
-
-        def exec_stmts(*stmts: str) -> None:
-            for st in stmts:
-                nconn.query(st)
-
-        def close_conn() -> None:
-            nconn.close()
-
-        runner = native_query_runner(
-            {"host": cfg["host"], "port": str(cfg["port"]),
-             "user": cfg["user"], "password": cfg["password"]})
-        report["steps"].append("transport=native (pymysql absent)")
+    runner = native_query_runner(
+        {"host": cfg["host"], "port": str(cfg["port"]),
+         "user": cfg["user"], "password": cfg["password"]})
 
     exec_stmts(
         f"CREATE DATABASE IF NOT EXISTS {cfg['db']}",
@@ -227,7 +195,7 @@ def main() -> int:
         report["steps"].append("kafka skipped (KAFKA_BOOTSTRAP unset)")
 
     exec_stmts(f"DROP TABLE IF EXISTS {cfg['db']}.{TABLE}")
-    close_conn()
+    conn.close()
     report["pass"] = True
     print(json.dumps(report))
     return 0
