@@ -12,13 +12,18 @@ insert/update/delete ops for one table, maintain a keyed snapshot:
 - merge with the existing snapshot: delete removes, insert/update
   upserts the after-image
 
-Storage here is plain parquet rewritten per batch (the only atomic
-primitive the bare filesystem gives). At 100 TB you'd swap the
-``_merge_write`` for a Delta/Iceberg MERGE INTO and keep the same
-per-batch last-op reduction; the reduction is the scalable part —
-it shuffles each batch once by key, never the snapshot by row count
-(the join against the snapshot is keyed, prunable, and with a
-partitioned snapshot only touched partitions rewrite).
+Storage here is plain parquet rewritten per batch, committed through
+``streaming/rollup.merge_commit`` (the one commit protocol of every
+stateful sink): a rename-aside swap that leaves the last committed
+snapshot recoverable at every crash point, and an ``_applied_<id>``
+marker committed in the same rename so a replayed batch is a no-op.
+Replay needs the marker: re-applying a MINIMAL key change or a
+partial-JSON diff to its own output is NOT idempotent. At 100 TB
+you'd swap the commit for a Delta/Iceberg MERGE INTO and keep the
+same per-batch last-op reduction; the reduction is the scalable part
+— it shuffles each batch once by key, never the snapshot by row
+count (the join against the snapshot is keyed, prunable, and with a
+partitioned snapshot only touched buckets rewrite).
 
 Streaming entry: ``apply_changes_stream`` wires foreachBatch;
 ``apply_batch`` is the pure batch core (unit-testable without a
@@ -55,6 +60,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from dolphinbeat_spark.streaming.rollup import (
+    applied_marker,
+    merge_commit,
+    sweep_interrupted_swaps,
+)
 
 ROW_OPS = ("insert", "update", "delete")
 
@@ -136,6 +147,12 @@ def _explode_pieces(
     the inferred filter above the projection."""
     from dolphinbeat_spark.functions.barrier import materialized
 
+    for c in ("__pieces", "__p"):
+        if c in ops.columns:
+            raise ValueError(
+                f"batch already has a column named {c!r}, which the "
+                "update split uses internally; rename or drop it"
+            )
     passthrough = [c for c in ops.columns if c not in _IMG_COLS]
     ex = ops.select(
         *passthrough, materialized(pieces).alias("__pieces")
@@ -259,12 +276,10 @@ def _normalize_minimal(batch: DataFrame, key_cols: list[str]) -> DataFrame:
 
 
 def _merge_minimal_upserts(
-    spark: SparkSession,
     norm: DataFrame,
-    snapshot_path: str,
     key_cols: list[str],
     value_cols: list[str],
-    old_df: DataFrame | None = None,
+    current: DataFrame | None,
 ) -> DataFrame:
     """Per-key patch-merge of MINIMAL after-images: each value column
     resolves to the LAST in-batch op that carries it (max_by over log
@@ -272,9 +287,10 @@ def _merge_minimal_upserts(
     max_by ignores; present-and-NULL stays a carried NULL via the null
     flag); columns NO op carried coalesce from the current snapshot
     row of the chain's ORIGIN key (min_by — so a PK-changing update
-    pulls untouched columns from the old key's row). One shuffle on
-    the key with map-side partial aggregation; the snapshot join is
-    key-equi and bounded by the batch's touched keys."""
+    pulls untouched columns from the old key's row). ``current`` is
+    the committed snapshot (``None`` before the first commit). One
+    shuffle on the key with map-side partial aggregation; the snapshot
+    join is key-equi and bounded by the batch's touched keys."""
     ins = norm.filter(F.col("op_type") != "delete")
     ri = (
         F.coalesce(F.col("row_index"), F.lit(0))
@@ -297,10 +313,8 @@ def _merge_minimal_upserts(
             ).alias(f"__last_{c}")
         )
     folded = ins.groupBy(*[F.col(f"__k_{k}").alias(k) for k in key_cols]).agg(*aggs)
-    if old_df is None and os.path.exists(snapshot_path):
-        old_df = spark.read.parquet(snapshot_path)
-    if old_df is not None:
-        old = old_df.select(
+    if current is not None:
+        old = current.select(
             *[F.col(k).alias(f"__o_{k}") for k in key_cols],
             *[F.col(c).alias(f"__old_{c}") for c in value_cols],
         )
@@ -364,6 +378,78 @@ def last_op_per_key(batch: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
+def _normalize_batch(
+    batch: DataFrame,
+    key_cols: list[str],
+    value_cols: list[str],
+    patch_json_cols: tuple[str, ...],
+    row_image: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The batch-only half of both apply paths: the update-split ops
+    (``norm``) and their per-key winners, with FULL mode's partial-
+    image gate applied.
+
+    The normalized batch and its winners feed SEVERAL jobs in one
+    merge (the full-image gate's limit-1 probe, the JSON-patch /
+    minimal-merge pass, the touched-keys anti-join side, the merged
+    write) — and exchange reuse never spans separate jobs, so without
+    a materialization each job re-ran the scan+normalize+shuffle chain
+    from storage (r17: measured ~2-4 chain evaluations per merge).
+    localCheckpoint (guide §5 — the cheap lineage cut) materializes
+    each once; ``norm`` only where a second pass re-reads it."""
+    if row_image == "minimal":
+        if patch_json_cols:
+            raise ValueError(
+                "row_image='minimal' with patch_json_cols is unsupported: "
+                "the decoder refuses MINIMAL+PARTIAL_JSON archives by name "
+                "(an absent JSON column is indistinguishable from a diff)"
+            )
+        norm = _normalize_minimal(batch, key_cols)
+    elif row_image == "full":
+        norm = normalize_pk_changes(batch)
+    else:
+        raise ValueError(f"row_image must be 'full' or 'minimal', got {row_image!r}")
+    if row_image == "minimal" or patch_json_cols:
+        norm = norm.localCheckpoint(eager=False)
+    winners = last_op_per_key(norm, key_cols).localCheckpoint(eager=False)
+    if row_image == "full":
+        _assert_full_images(winners, value_cols)
+    return norm, winners
+
+
+def _merge_snapshot(
+    current: DataFrame | None,
+    norm: DataFrame,
+    winners: DataFrame,
+    key_cols: list[str],
+    value_cols: list[str],
+    patch_json_cols: tuple[str, ...],
+    row_image: str,
+) -> DataFrame:
+    """The post-batch snapshot: ``current`` (the committed rows, ``None``
+    before the first commit) with every key the batch touched replaced
+    by its upsert or, for a trailing delete, dropped."""
+    keys = [F.col(f"__k_{k}").alias(k) for k in key_cols]
+    live = winners.filter(F.col("op_type") != "delete")
+    if row_image == "minimal":
+        upserts = live.select(*keys).join(
+            _merge_minimal_upserts(norm, key_cols, value_cols, current),
+            key_cols, "inner",
+        )
+    else:
+        upserts = live.select(
+            *keys, *[_img_val("after", c).alias(c) for c in value_cols]
+        )
+        if patch_json_cols:
+            upserts = _materialize_json_patches(
+                norm, upserts, key_cols, patch_json_cols, current
+            )
+    if current is None:
+        return upserts
+    kept = current.join(winners.select(*keys), key_cols, "left_anti")
+    return kept.unionByName(upserts)
+
+
 def apply_batch(
     spark: SparkSession,
     batch: DataFrame,
@@ -372,8 +458,10 @@ def apply_batch(
     value_cols: list[str],
     patch_json_cols: tuple[str, ...] = (),
     row_image: str = "full",
+    batch_id: int | None = None,
 ) -> None:
-    """Merge one batch of envelope ops into the parquet snapshot.
+    """Merge one batch of envelope ops into the parquet snapshot,
+    committed through ``merge_commit`` (see the module docstring).
 
     ``patch_json_cols``: JSON columns whose after-images may arrive as
     WL#10570 partial diffs ({"$json_diff": [...]}, the binlog-file
@@ -387,70 +475,27 @@ def apply_batch(
     :class:`PartialRowImageError`) or "minimal" (binlog_row_image=
     MINIMAL/NOBLOB feed: absent columns patch-merge from the last
     in-batch carrier, then the current snapshot row; see module
-    docstring)."""
-    # The normalized batch and its per-key winners feed SEVERAL jobs in
-    # one merge (the full-image gate's limit-1 probe, the JSON-patch /
-    # minimal-merge pass, the touched-keys anti-join side, the merged
-    # write) — and exchange reuse never spans separate jobs, so without
-    # a materialization each job re-ran the scan+normalize+shuffle
-    # chain from storage (r17: measured ~2-4 chain evaluations per
-    # merge). localCheckpoint (guide §5 — the cheap lineage cut)
-    # materializes each once; batches are micro-batch-bounded, and the
-    # merge is idempotent under the streaming checkpoint's replay, so
-    # the lost-executor lineage caveat costs a batch retry, not
-    # correctness.
-    if row_image == "minimal":
-        if patch_json_cols:
-            raise ValueError(
-                "row_image='minimal' with patch_json_cols is unsupported: "
-                "the decoder refuses MINIMAL+PARTIAL_JSON archives by name "
-                "(an absent JSON column is indistinguishable from a diff)"
-            )
-        norm = _normalize_minimal(batch, key_cols).localCheckpoint(eager=False)
-        winners = last_op_per_key(norm, key_cols).localCheckpoint(eager=False)
-        live = winners.filter(F.col("op_type") != "delete").select(
-            *[F.col(f"__k_{k}").alias(k) for k in key_cols]
-        ).distinct()
-        merged_vals = _merge_minimal_upserts(
-            spark, norm, snapshot_path, key_cols, value_cols
-        )
-        upserts = live.join(merged_vals, key_cols, "inner")
-    elif row_image == "full":
-        norm = normalize_pk_changes(batch)
-        if patch_json_cols:
-            # _materialize_json_patches re-reads norm in its own pass
-            norm = norm.localCheckpoint(eager=False)
-        winners = last_op_per_key(norm, key_cols).localCheckpoint(eager=False)
-        _assert_full_images(winners, value_cols)
-        upserts = winners.filter(F.col("op_type") != "delete").select(
-            *[F.col(f"__k_{k}").alias(k) for k in key_cols],
-            *[_img_val("after", c).alias(c) for c in value_cols],
-        )
-        if patch_json_cols:
-            upserts = _materialize_json_patches(
-                spark, norm, upserts, snapshot_path, key_cols, patch_json_cols
-            )
-    else:
-        raise ValueError(f"row_image must be 'full' or 'minimal', got {row_image!r}")
-    deletes = winners.filter(F.col("op_type") == "delete").select(
-        *[F.col(f"__k_{k}").alias(k) for k in key_cols]
-    )
-    touched = upserts.select(*key_cols).union(deletes).distinct()
-    if os.path.exists(snapshot_path):
-        current = spark.read.parquet(snapshot_path)
-        kept = current.join(touched, key_cols, "left_anti")
-        merged = kept.unionByName(upserts)
-    else:
-        merged = upserts
-    # plain-parquet atomicity: write to side dir, then swap. The rows
-    # must be materialized BEFORE the old snapshot is replaced.
-    tmp = snapshot_path + ".next"
-    merged.write.mode("overwrite").parquet(tmp)
-    import shutil
+    docstring).
 
-    if os.path.exists(snapshot_path):
-        shutil.rmtree(snapshot_path)
-    os.rename(tmp, snapshot_path)
+    ``batch_id``: the foreachBatch id. Given, the snapshot records it
+    as an applied marker and a replay of the committed batch is a
+    no-op; without it every call applies the batch again.
+
+    The batch's normalized ops and winners are localCheckpointed, and
+    those blocks die with their executor: if one is lost (dynamic
+    allocation, decommission) the merge fails before its commit and
+    the batch must be retried — foreachBatch does that, standalone
+    callers must do it themselves."""
+    norm, winners = _normalize_batch(
+        batch, key_cols, value_cols, patch_json_cols, row_image
+    )
+    merge_commit(
+        spark, snapshot_path, applied_marker(batch_id),
+        lambda current: _merge_snapshot(
+            current, norm, winners, key_cols, value_cols, patch_json_cols,
+            row_image,
+        ),
+    )
 
 
 def apply_changes_stream(
@@ -461,12 +506,13 @@ def apply_changes_stream(
     value_cols: list[str],
     row_image: str = "full",
 ):
-    """foreachBatch wiring: exactly-once via checkpoint + idempotent
-    merge (re-applying a replayed batch converges to the same state)."""
+    """foreachBatch wiring: exactly-once via the streaming checkpoint
+    plus the snapshot's applied marker (a replayed batch id is a
+    no-op)."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         apply_batch(batch.sparkSession, batch, snapshot_path, key_cols, value_cols,
-                    row_image=row_image)
+                    row_image=row_image, batch_id=batch_id)
 
     return (
         stream.writeStream.foreachBatch(_apply)
@@ -518,21 +564,21 @@ def scd2_history(batch: DataFrame, key_cols: list[str], value_cols: list[str]) -
 
 
 def _materialize_json_patches(
-    spark: SparkSession,
     norm: DataFrame,
     upserts: DataFrame,
-    snapshot_path: str,
     key_cols: list[str],
     patch_cols: tuple[str, ...],
-    old_df: DataFrame | None = None,
+    current: DataFrame | None,
 ) -> DataFrame:
     """Replace each patch column's last-op value with the fold of the
     key's ORDERED after-image sequence over the current snapshot value
     — full documents overwrite, {"$json_diff"} documents patch
     (a later diff can chain on an earlier diff within one batch, which
-    last-op-wins cannot express). Work is bounded by the batch's
-    touched keys: the sequence aggregation reads only this batch's
-    inserts and the old-value join is key-equi against the snapshot."""
+    last-op-wins cannot express). ``current`` is the committed
+    snapshot (``None`` before the first commit). Work is bounded by
+    the batch's touched keys: the sequence aggregation reads only this
+    batch's inserts and the old-value join is key-equi against the
+    snapshot."""
     from dolphinbeat_spark.operators.json_patch import fold_udf
 
     # envelope batches may lack __op_rank / row_index (same presence
@@ -570,10 +616,8 @@ def _materialize_json_patches(
         ]
     )
     out = upserts.join(seqs, list(key_cols), "left")
-    if old_df is None and os.path.exists(snapshot_path):
-        old_df = spark.read.parquet(snapshot_path)
-    if old_df is not None:
-        old = old_df.select(
+    if current is not None:
+        old = current.select(
             *key_cols, *[F.col(c).alias(f"__old_{c}") for c in patch_cols]
         )
         out = out.join(old, list(key_cols), "left")
@@ -602,97 +646,66 @@ def apply_batch_partitioned(
     num_buckets: int = 16,
     patch_json_cols: tuple[str, ...] = (),
     row_image: str = "full",
+    batch_id: int | None = None,
 ) -> None:
     """Partitioned-snapshot merge: the snapshot is hive-partitioned on
     a hash bucket of the key; a batch only reads and rewrites the
-    buckets its keys touch (dynamic partition overwrite) — per-batch
-    cost is O(touched buckets), not O(snapshot). This is the plain-
-    parquet approximation of a Delta/Iceberg MERGE and the shape that
-    survives a 100 TB snapshot: with small batches most buckets are
-    cold and never open.
+    buckets its keys touch — per-batch cost is O(touched buckets), not
+    O(snapshot). This is the plain-parquet approximation of a
+    Delta/Iceberg MERGE and the shape that survives a 100 TB snapshot:
+    with small batches most buckets are cold and never open.
 
-    Same last-op-per-key semantics as apply_batch; replay-idempotent
-    (dynamic overwrite of the same buckets converges).
-    ``patch_json_cols`` folds partial-JSON diffs like apply_batch —
-    the old-value side reads only the touched buckets, keeping the
-    per-batch cost discipline. ``row_image="minimal"`` patch-merges
-    partial after-images like apply_batch; a PK-changing MINIMAL
-    update's origin key lands in the touched-bucket set through its
-    delete half, so the bucket-pruned snapshot read still covers the
-    coalesce-from-origin join."""
-    if row_image == "minimal":
-        if patch_json_cols:
-            raise ValueError(
-                "row_image='minimal' with patch_json_cols is unsupported: "
-                "the decoder refuses MINIMAL+PARTIAL_JSON archives by name"
-            )
-        norm = _normalize_minimal(batch, key_cols)
-    elif row_image == "full":
-        norm = normalize_pk_changes(batch)
-    else:
-        raise ValueError(f"row_image must be 'full' or 'minimal', got {row_image!r}")
-    winners = last_op_per_key(norm, key_cols)
-    if row_image == "full":
-        _assert_full_images(winners, value_cols)
+    Same semantics and arguments as apply_batch. The whole batch
+    merges once against the pre-batch state of the touched buckets
+    and is materialized; each touched bucket then commits its slice
+    through ``merge_commit`` with its own applied marker (an emptied
+    bucket commits an empty slice). A crash between two bucket swaps
+    replays the batch: swapped buckets skip on their marker, the rest
+    redo from their pre-batch state. ``patch_json_cols`` reads old
+    values from the same bucket as the key. ``row_image="minimal"``:
+    a PK-changing update's origin key lands in the touched-bucket set
+    through its delete half, so the bucket-pruned snapshot read still
+    covers the coalesce-from-origin join — except on a replay after a
+    crash between bucket swaps, when the origin key's bucket has
+    already committed the delete (a cross-bucket gap a per-bucket
+    commit cannot close)."""
+    norm, winners = _normalize_batch(
+        batch, key_cols, value_cols, patch_json_cols, row_image
+    )
+
+    def bucket_of(cols):
+        return F.pmod(F.xxhash64(*cols), F.lit(num_buckets)).cast("int")
+
     key_exprs = [F.col(f"__k_{k}") for k in key_cols]
-    bucket = F.pmod(F.xxhash64(*key_exprs), F.lit(num_buckets)).cast("int")
-    upserts = winners.filter(F.col("op_type") != "delete").select(
-        *[F.col(f"__k_{k}").alias(k) for k in key_cols],
-        *[_img_val("after", c).alias(c) for c in value_cols],
-        bucket.alias("__bucket"),
+    touched = sorted(
+        r[0] for r in winners.select(bucket_of(key_exprs)).distinct().collect()
     )
-    deletes = winners.filter(F.col("op_type") == "delete").select(
-        *[F.col(f"__k_{k}").alias(k) for k in key_cols], bucket.alias("__bucket")
-    )
-    touched = [
-        r["__bucket"]
-        for r in upserts.select("__bucket").union(deletes.select("__bucket")).distinct().collect()
-    ]
     if not touched:
         return
+    sweep_interrupted_swaps(snapshot_path)
     current = None
-    if os.path.exists(snapshot_path):
-        current = spark.read.parquet(snapshot_path).filter(
-            F.col("__bucket").isin(touched)  # partition-pruned read
+    if os.path.isdir(snapshot_path) and any(
+        e.startswith("__bucket=") for e in os.listdir(snapshot_path)
+    ):
+        current = (
+            spark.read.parquet(snapshot_path)
+            .filter(F.col("__bucket").isin(touched))  # partition-pruned read
+            .drop("__bucket")
         )
-    if row_image == "minimal":
-        live = winners.filter(F.col("op_type") != "delete").select(
-            *[F.col(f"__k_{k}").alias(k) for k in key_cols]
-        ).distinct()
-        merged_vals = _merge_minimal_upserts(
-            spark, norm, snapshot_path, key_cols, value_cols,
-            old_df=current.drop("__bucket") if current is not None else None,
+    merged = (
+        _merge_snapshot(
+            current, norm, winners, key_cols, value_cols, patch_json_cols,
+            row_image,
         )
-        bucket_out = F.pmod(
-            F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(num_buckets)
-        ).cast("int")
-        upserts = live.join(merged_vals, key_cols, "inner").select(
-            *key_cols, *value_cols, bucket_out.alias("__bucket")
-        )
-    if patch_json_cols:
-        upserts = _materialize_json_patches(
-            spark, norm, upserts, snapshot_path, key_cols, patch_json_cols,
-            old_df=current,
-        )
-    merged = upserts
-    if current is not None:
-        gone = upserts.select(*key_cols).union(deletes.drop("__bucket")).distinct()
-        kept = current.join(gone, key_cols, "left_anti")
-        merged = kept.unionByName(upserts)
-    written = {r["__bucket"] for r in merged.select("__bucket").distinct().collect()}
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__bucket")
-        .parquet(snapshot_path)
+        .withColumn("__bucket", bucket_of([F.col(k) for k in key_cols]))
+        .localCheckpoint(eager=True)  # before any bucket swap moves its input
     )
-    # dynamic overwrite only replaces partitions PRESENT in the output:
-    # a bucket whose last key was deleted ends empty and must be
-    # removed explicitly or its stale file survives
-    import shutil
-
-    for b in set(touched) - written:
-        shutil.rmtree(os.path.join(snapshot_path, f"__bucket={b}"), ignore_errors=True)
+    marker = applied_marker(batch_id)
+    for b in touched:
+        merge_commit(
+            spark, os.path.join(snapshot_path, f"__bucket={b}"), marker,
+            lambda _current, b=b: merged.filter(F.col("__bucket") == b).drop("__bucket"),
+        )
 
 
 def read_snapshot(spark: SparkSession, snapshot_path: str) -> DataFrame:

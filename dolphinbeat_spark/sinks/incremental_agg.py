@@ -25,9 +25,11 @@ max), so batches that never touch an extremum stay pure-delta.
 At scale: a batch's deltas partial-aggregate to one row per touched
 group before the merge; the merge unions against the (group-keyed,
 already aggregated) view and re-aggregates — cost proportional to
-touched groups + view size, never to the underlying table. Replay
-idempotence reuses the rollup sink's applied-marker discipline
-(marker and data commit in one atomic rename).
+touched groups + view size, never to the underlying table. Every
+view directory (and each bucket of the partitioned form) commits
+through ``streaming/rollup.merge_commit``: crash-safe rename-aside,
+and an applied marker committed in the same rename makes a replayed
+batch a no-op.
 """
 
 from __future__ import annotations
@@ -40,9 +42,8 @@ from pyspark.sql import functions as F
 
 from dolphinbeat_spark.sinks.apply_changes import _img_val, normalize_pk_changes
 from dolphinbeat_spark.streaming.rollup import (
-    atomic_swap_dir,
-    recover_swap_dir,
-    swap_aside_paths,
+    applied_marker,
+    merge_commit,
     sweep_interrupted_swaps,
 )
 
@@ -175,36 +176,34 @@ def _fold_aggs(view: AggViewSpec) -> list:
 
 
 def _merge_dir(spark, deltas: DataFrame, dir_path: str, view: AggViewSpec,
-               tmp_path: str, old_path: str, marker: str | None,
-               base: DataFrame | None = None) -> None:
-    """Fold deltas into one aggregate directory via the crash-safe
-    rename-aside swap (streaming/rollup.py::atomic_swap_dir).
+               marker: str | None, base: DataFrame | None = None) -> None:
+    """Fold deltas into one aggregate directory through
+    :func:`~dolphinbeat_spark.streaming.rollup.merge_commit`.
 
     With MIN/MAX columns, ``base`` must be the POST-batch base table
     (group cols + value cols, typed) — groups whose stored extremum a
     retraction may have invalidated recompute from it; every other
     group folds purely from deltas."""
-    recover_swap_dir(dir_path, tmp_path, old_path)
-    if marker and os.path.exists(os.path.join(dir_path, marker)):
-        return  # replayed batch: already folded in
-    if os.path.exists(dir_path):
-        current = spark.read.parquet(dir_path)
-        merged = (
-            current.unionByName(deltas, allowMissingColumns=True)
-            .groupBy(*view.group_cols)
-            .agg(*_fold_aggs(view))
-        )
-    else:
+
+    def merge(current: DataFrame | None) -> DataFrame:
         merged = deltas
-    merged = merged.filter(F.col("n_delta") != 0)
-    if view.min_cols or view.max_cols:
-        if base is None:
-            raise ValueError(
-                "MIN/MAX maintenance needs the post-batch base table "
-                "(pass base=<apply_changes snapshot>)"
+        if current is not None:
+            merged = (
+                current.unionByName(deltas, allowMissingColumns=True)
+                .groupBy(*view.group_cols)
+                .agg(*_fold_aggs(view))
             )
-        merged = _resolve_extrema(merged, view, base)
-    atomic_swap_dir(merged, dir_path, tmp_path, old_path, marker)
+        merged = merged.filter(F.col("n_delta") != 0)
+        if view.min_cols or view.max_cols:
+            if base is None:
+                raise ValueError(
+                    "MIN/MAX maintenance needs the post-batch base table "
+                    "(pass base=<apply_changes snapshot>)"
+                )
+            merged = _resolve_extrema(merged, view, base)
+        return merged
+
+    merge_commit(spark, dir_path, marker, merge)
 
 
 def _resolve_extrema(merged: DataFrame, view: AggViewSpec, base: DataFrame) -> DataFrame:
@@ -258,7 +257,7 @@ def merge_agg_batch(
     state (the rename-aside discipline). Views with MIN/MAX columns
     pass ``base`` = the post-batch base table for group recompute on
     extremum retraction."""
-    marker = f"_applied_{batch_id}" if batch_id is not None else None
+    marker = applied_marker(batch_id)
     if view.distinct_cols:
         # each COUNT(DISTINCT) column replays the batch through its own
         # level-2 delta_frame in a separate merge job, and exchange
@@ -267,10 +266,7 @@ def merge_agg_batch(
         # (r17; same rationale as apply_batch's localCheckpoint)
         batch = batch.localCheckpoint(eager=False)
     deltas = delta_frame(batch, view)
-    _merge_dir(
-        batch.sparkSession, deltas, view_path, view,
-        view_path + ".next", view_path + ".old", marker, base=base,
-    )
+    _merge_dir(batch.sparkSession, deltas, view_path, view, marker, base=base)
     # COUNT(DISTINCT) state: one level-2 view per column, maintained by
     # the SAME machinery recursively (value as an extra group key —
     # n_delta is the value's live multiplicity). Each sub-view has its
@@ -372,12 +368,11 @@ def merge_agg_batch_partitioned(
     directory per key-hash bucket and a batch merges ONLY the buckets
     its groups touch — per-batch cost O(touched buckets), never
     O(view), the shape that survives a 100 TB aggregate (small batches
-    leave most buckets cold). Unlike apply-changes' overwrite merge,
-    DELTAS are not naturally idempotent, so each touched bucket gets
-    the rollup sink's per-partition atomic swap + in-dir marker: a
-    crash between bucket swaps replays the batch, swapped buckets skip
-    on their marker, unswapped ones redo from their old state —
-    exactly-once per bucket, no double counting."""
+    leave most buckets cold). DELTAS are not idempotent, so each
+    touched bucket commits through ``merge_commit`` with its own
+    in-dir marker: a crash between bucket swaps replays the batch,
+    swapped buckets skip on their marker, unswapped ones redo from
+    their old state — exactly-once per bucket, no double counting."""
     spark = batch.sparkSession
     os.makedirs(view_path, exist_ok=True)
     # recover EVERY interrupted bucket swap, not just the ones this
@@ -391,15 +386,12 @@ def merge_agg_batch_partitioned(
     ).cast("int")
     deltas = deltas.withColumn("__bucket", bucket).localCheckpoint(eager=True)
     touched = [r["__bucket"] for r in deltas.select("__bucket").distinct().collect()]
-    marker = f"_applied_{batch_id}" if batch_id is not None else None
+    marker = applied_marker(batch_id)
     for b in sorted(touched):
         mine = deltas.filter(F.col("__bucket") == b).drop("__bucket")
-        # temp/aside dirs INSIDE view_path must be '_'-prefixed or
-        # partition discovery reads them as phantom buckets
-        tmp, old_dir = swap_aside_paths(view_path, f"__bucket={b}")
         _merge_dir(
             spark, mine, os.path.join(view_path, f"__bucket={b}"), view,
-            tmp, old_dir, marker, base=base,
+            marker, base=base,
         )
     # level-2 distinct state buckets by ITS key hash (group + value) —
     # same touched-bucket discipline, recursively
@@ -450,16 +442,18 @@ def snapshot_and_agg_stream(
     now wired instead of left to the caller).
 
     Ordering is the correctness point: a crash between the two merges
-    replays the batch — apply_batch converges idempotently and the
-    aggregate's applied marker skips its half, so no interleaving
-    double-counts. ``cast_cols`` types the snapshot's wire strings for
-    the recompute (e.g. {"amount": "double"})."""
+    replays the batch — both merges commit through ``merge_commit``
+    with the batch id as their applied marker, so the snapshot skips
+    its half instead of re-applying it (a MINIMAL key change or a JSON
+    diff is not idempotent) and the aggregate folds exactly once.
+    ``cast_cols`` types the snapshot's wire strings for the recompute
+    (e.g. {"amount": "double"})."""
     from dolphinbeat_spark.sinks.apply_changes import apply_batch, read_snapshot
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         apply_batch(spark, batch, snapshot_path, key_cols, value_cols,
-                    patch_json_cols=patch_json_cols)
+                    patch_json_cols=patch_json_cols, batch_id=batch_id)
         base = read_snapshot(spark, snapshot_path)
         for c, t in (cast_cols or {}).items():
             base = base.withColumn(c, F.col(c).cast(t))

@@ -333,7 +333,9 @@ def _stringify(
     JSON columns (``json_cols``, from the registry's TableDef) carry
     JSON *text* on the wire like the reference's go-mysql-decoded
     values: raw binary-JSONB bytes are decoded (sources/mysql_jsonb),
-    and already-parsed dict/list values are re-serialized compactly."""
+    and dict/list values — the ``{"$json_diff": [...]}`` dict that
+    ``binlog_file._read_json_diff`` yields for a PARTIAL_JSON update
+    — are serialized compactly."""
     if isinstance(row, dict):
         items = row.items()
     else:

@@ -3,11 +3,14 @@
 The streaming face of operators/rollups.py — each micro-batch's
 partial aggregates merge into a persistent rollup table keyed by
 (bucket, group). Re-aggregability (sum-of-sums/counts, proven by
-tests/test_rollups.py) makes the merge exact; unlike apply_changes'
-key-overwrite merge, an ADDITIVE merge would double-count a replayed
-batch, so replay protection is explicit: per-batch marker files (the
-same discipline as OrderedFileSink's _seq_meta) skip already-applied
-batch ids.
+tests/test_rollups.py) makes the merge exact; an ADDITIVE merge
+would double-count a replayed batch, so replay protection is
+explicit: per-batch marker files (the same discipline as
+OrderedFileSink's _seq_meta) skip already-applied batch ids.
+
+:func:`merge_commit` here is the one crash-safe commit of every
+stateful parquet directory — the rollups, the apply-changes snapshots
+and the incremental aggregate views all commit through it.
 
 At 100 TB: a batch touches only the buckets its events fall in;
 storage-side this pairs with a bucket-partitioned rollup table
@@ -17,9 +20,39 @@ storage-side this pairs with a bucket-partitioned rollup table
 from __future__ import annotations
 
 import os
+import shutil
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def applied_marker(batch_id: int | None) -> str | None:
+    """The replay marker :func:`merge_commit` stamps for a foreachBatch
+    id (``None``: an unmarked, always-applied merge)."""
+    return f"_applied_{batch_id}" if batch_id is not None else None
+
+
+def _batch_counts(batch: DataFrame, ts_col: str, group_cols: list[str],
+                  grain: str) -> DataFrame:
+    return batch.groupBy(
+        F.date_trunc(grain, ts_col).alias("bucket_start"), *group_cols
+    ).agg(F.count(F.lit(1)).alias("n_events"))
+
+
+def _fold_counts(part: DataFrame, keys: list[str]):
+    """merge_commit callback: the committed counts plus this batch's."""
+
+    def merge(current: DataFrame | None) -> DataFrame:
+        if current is None:
+            return part
+        return (
+            current.unionByName(part)
+            .groupBy(*keys)
+            .agg(F.sum("n_events").alias("n_events"))
+        )
+
+    return merge
 
 
 def merge_rollup_batch(
@@ -32,33 +65,12 @@ def merge_rollup_batch(
 ) -> None:
     """Merge one batch's counts into the persistent rollup parquet.
     ``batch_id`` (when given) makes the merge replay-idempotent via an
-    applied-marker file INSIDE the rollup directory: the atomic rename
-    commits data and marker together, so there is no crash window
-    between "data swapped" and "marker written" that would double-count
-    the batch on restart (Spark's parquet reader ignores ``_``-prefixed
-    files, same convention as ``_SUCCESS``)."""
-    recover_swap_dir(rollup_path, rollup_path + ".next", rollup_path + ".old")
-    if batch_id is not None and os.path.exists(
-        os.path.join(rollup_path, f"_applied_{batch_id}")
-    ):
-        return  # replayed batch: already folded in
-    spark = batch.sparkSession
-    part = batch.groupBy(
-        F.date_trunc(grain, ts_col).alias("bucket_start"), *group_cols
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    keys = ["bucket_start", *group_cols]
-    if os.path.exists(rollup_path):
-        current = spark.read.parquet(rollup_path)
-        merged = (
-            current.unionByName(part)
-            .groupBy(*keys)
-            .agg(F.sum("n_events").alias("n_events"))
-        )
-    else:
-        merged = part
-    atomic_swap_dir(
-        merged, rollup_path, rollup_path + ".next", rollup_path + ".old",
-        f"_applied_{batch_id}" if batch_id is not None else None,
+    applied-marker file INSIDE the rollup directory (see
+    :func:`merge_commit`)."""
+    part = _batch_counts(batch, ts_col, group_cols, grain)
+    merge_commit(
+        batch.sparkSession, rollup_path, applied_marker(batch_id),
+        _fold_counts(part, ["bucket_start", *group_cols]),
     )
 
 
@@ -78,48 +90,60 @@ def _carry_markers(src_dir: str, dst_dir: str) -> None:
         open(os.path.join(dst_dir, f"_applied_{i}"), "w").close()
 
 
-def atomic_swap_dir(
-    merged: "DataFrame",
+def merge_commit(
+    spark: SparkSession,
     dir_path: str,
-    tmp_path: str,
-    old_path: str,
     marker: str | None,
+    merge: Callable[[DataFrame | None], DataFrame],
 ) -> None:
-    """Crash-safe swap of an aggregate directory: write the merged
-    frame to ``tmp_path``, carry forward prior replay markers, stamp
-    ``marker``, then RENAME-ASIDE — ``dir`` → ``old``, ``tmp`` →
-    ``dir``, drop ``old``. Unlike rmtree-then-rename, no window exists
-    where the only copy of prior state lives in an uncommitted temp:
-    every crash point leaves either ``dir`` or ``old`` holding the
-    last committed state, and :func:`recover_swap_dir` (called first)
-    restores it. ``tmp_path``/``old_path`` must be ignored by parquet
-    discovery (outside the read root, or '_'-prefixed inside it)."""
-    recover_swap_dir(dir_path, tmp_path, old_path)
-    merged.write.mode("overwrite").parquet(tmp_path)
-    if os.path.exists(dir_path):
+    """The one commit protocol of every stateful parquet directory
+    (snapshots, rollups, aggregate views, and each bucket or partition
+    of their partitioned forms):
+
+    1. roll back an interrupted swap (:func:`recover_swap_dir`);
+    2. return if ``dir_path`` already holds ``marker`` — a replay of a
+       committed batch is a no-op, which a non-idempotent merge (an
+       additive fold, a MINIMAL key change, a JSON diff) needs;
+    3. build ``merge(current)``, ``current`` being the committed state
+       (``None`` before the first commit);
+    4. write it to the aside temp dir with the carried replay markers
+       and ``marker`` — data and marker commit in one rename, so no
+       crash lands between "data swapped" and "marker written";
+    5. RENAME-ASIDE: ``dir`` → old, temp → ``dir``, drop old.
+
+    Every crash point leaves ``dir`` or the old aside holding the last
+    committed state, and the next call's step 1 restores it; unlike
+    rmtree-then-rename, the only copy of the prior state never lives
+    in an uncommitted temp. Spark's parquet reader ignores the
+    ``_``-prefixed marker files (same convention as ``_SUCCESS``)."""
+    tmp_path, old_path = aside_paths(dir_path)
+    recover_swap_dir(dir_path)
+    if marker and os.path.exists(os.path.join(dir_path, marker)):
+        return
+    committed = os.path.exists(dir_path)
+    current = spark.read.parquet(dir_path) if committed else None
+    merge(current).write.mode("overwrite").parquet(tmp_path)
+    if committed:
         _carry_markers(dir_path, tmp_path)
     if marker:
         open(os.path.join(tmp_path, marker), "w").close()
-    if os.path.exists(dir_path):
+    if committed:
         os.rename(dir_path, old_path)
     os.rename(tmp_path, dir_path)
-    if os.path.exists(old_path):
-        import shutil
-
+    if committed:
         shutil.rmtree(old_path)
 
 
-def swap_aside_paths(root: str, live_name: str) -> tuple[str, str]:
-    """(tmp, old) dir names for an in-root swap of ``live_name``:
-    '_'-prefixed so parquet partition discovery ignores them — and
-    with '=' encoded away, because a 'key=value' shape overrides the
-    underscore rule and would be inferred as a conflicting partition
-    column. Recovery maps back via :func:`swap_live_name`."""
-    enc = live_name.replace("=", "~")
-    return (
-        os.path.join(root, "_next." + enc),
-        os.path.join(root, "_old." + enc),
-    )
+def aside_paths(dir_path: str) -> tuple[str, str]:
+    """(temp, old) aside dirs of ``dir_path``'s commit: ``_next.<name>``
+    and ``_old.<name>`` siblings, '_'-prefixed so parquet discovery of
+    a partitioned root ignores them, and with '=' encoded away because
+    a 'key=value' shape overrides the underscore rule and would be
+    inferred as a conflicting partition column. :func:`swap_live_name`
+    maps back."""
+    root, name = os.path.split(os.path.normpath(dir_path))
+    enc = name.replace("=", "~")
+    return os.path.join(root, "_next." + enc), os.path.join(root, "_old." + enc)
 
 
 def swap_live_name(aside_entry: str) -> str:
@@ -139,17 +163,14 @@ def sweep_interrupted_swaps(root: str) -> None:
         return
     for entry in os.listdir(root):
         if entry.startswith(("_old.", "_next.")):
-            live = swap_live_name(entry)
-            tmp, old = swap_aside_paths(root, live)
-            recover_swap_dir(os.path.join(root, live), tmp, old)
+            recover_swap_dir(os.path.join(root, swap_live_name(entry)))
 
 
-def recover_swap_dir(dir_path: str, tmp_path: str, old_path: str) -> None:
-    """Roll an interrupted :func:`atomic_swap_dir` back to its last
-    committed state: a lone ``old`` dir is the committed state
-    (restore it); a leftover ``tmp`` is uncommitted (drop it)."""
-    import shutil
-
+def recover_swap_dir(dir_path: str) -> None:
+    """Roll an interrupted :func:`merge_commit` back to its last
+    committed state: a lone old aside is the committed state (restore
+    it); a leftover temp is uncommitted (drop it)."""
+    tmp_path, old_path = aside_paths(dir_path)
     if not os.path.exists(dir_path) and os.path.exists(old_path):
         os.rename(old_path, dir_path)
     elif os.path.exists(old_path):
@@ -174,21 +195,17 @@ def merge_rollup_batch_partitioned(
     survives a 100 TB history (a streaming batch touches "now", cold
     months never open).
 
-    Each touched partition gets the SAME atomic swap + in-dir replay
-    marker discipline as :func:`merge_rollup_batch` — per partition:
-    a crash between two partition swaps replays the batch, the swapped
-    partitions skip on their marker, the unswapped redo from their old
-    (marker-less) state. Exactly-once per partition, no double counts.
+    Each touched partition commits through :func:`merge_commit` with
+    its own in-dir replay marker: a crash between two partition swaps
+    replays the batch, the swapped partitions skip on their marker,
+    the unswapped redo from their old (marker-less) state. Exactly-once
+    per partition, no double counts.
 
     The driver loops over touched partitions (one small Spark job
     each); typical streaming batches touch 1-2 partitions, so the loop
     is short — bulk backfills should use operators/rollups.py batch
     aggregation instead."""
-    spark = batch.sparkSession
-    part = batch.groupBy(
-        F.date_trunc(grain, ts_col).alias("bucket_start"), *group_cols
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    part = part.withColumn(
+    part = _batch_counts(batch, ts_col, group_cols, grain).withColumn(
         "__part",
         F.date_format(F.date_trunc(partition_grain, "bucket_start"), "yyyy-MM-dd"),
     ).localCheckpoint(eager=True)  # batch partials computed once, reused per partition
@@ -197,25 +214,11 @@ def merge_rollup_batch_partitioned(
     os.makedirs(rollup_path, exist_ok=True)
     sweep_interrupted_swaps(rollup_path)
     for p in sorted(touched):
-        part_path = os.path.join(rollup_path, f"part={p}")
-        marker = f"_applied_{batch_id}" if batch_id is not None else None
-        if marker and os.path.exists(os.path.join(part_path, marker)):
-            continue  # this partition already folded this batch in
         mine = part.filter(F.col("__part") == p).drop("__part")
-        if os.path.exists(part_path):
-            current = spark.read.parquet(part_path)
-            merged = (
-                current.unionByName(mine)
-                .groupBy(*keys)
-                .agg(F.sum("n_events").alias("n_events"))
-            )
-        else:
-            merged = mine
-        # temp/aside dirs INSIDE the read root must be '_'-prefixed:
-        # a 'part=X.next' name contains '=' and partition discovery
-        # would read it as a phantom partition
-        tmp, old = swap_aside_paths(rollup_path, f"part={p}")
-        atomic_swap_dir(merged, part_path, tmp, old, marker)
+        merge_commit(
+            batch.sparkSession, os.path.join(rollup_path, f"part={p}"),
+            applied_marker(batch_id), _fold_counts(mine, keys),
+        )
 
 
 def read_partitioned_rollup(spark, rollup_path: str) -> DataFrame:

@@ -714,8 +714,3 @@ def near_dup_admitted_verified(flags: DataFrame, threshold: float = 0.5) -> Data
         F.bool_or("was_seen").alias("any_collision"),
         F.count(F.lit(1)).alias("n_bands"),
     )
-
-
-# The Spark 4 transformWithStateInPandas form of dedup_by_seq lives in
-# streaming/state_v2.py (dedup_by_seq_v2) — typed state handles, same
-# O(1) watermark discipline; environment-gated on google.protobuf.

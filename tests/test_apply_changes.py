@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dolphinbeat_spark.sinks.apply_changes import (
@@ -479,7 +480,7 @@ def test_fold_diff_against_missing_base_raises():
     assert fold_json_values(None, ['{"a":0}', diff]) == '{"a":1}'
 
 
-def test_patch_materialization_without_row_index_column(spark, tmp_path):
+def test_patch_materialization_without_row_index_column(spark):
     """_materialize_json_patches must apply the same presence guard as
     last_op_per_key: an envelope batch lacking row_index/__op_rank
     (e.g. a pre-normalized upsert feed) still analyzes (ADVICE r7)."""
@@ -506,9 +507,7 @@ def test_patch_materialization_without_row_index_column(spark, tmp_path):
         ENVELOPE_SCHEMA,
     ).drop("row_index")  # no row_index, no __op_rank
     upserts = spark.createDataFrame([("1", diff)], "id string, doc string")
-    out = _materialize_json_patches(
-        spark, batch, upserts, str(tmp_path / "none"), ["id"], ("doc",)
-    )
+    out = _materialize_json_patches(batch, upserts, ["id"], ("doc",), None)
     got = {r["id"]: r["doc"] for r in out.collect()}
     assert json.loads(got["1"]) == {"a": 2}
 
@@ -669,3 +668,101 @@ def test_minimal_mode_rejects_patch_json_cols(spark, tmp_path):
     with pytest.raises(ValueError, match="PARTIAL_JSON"):
         apply_batch(spark, _mdf(spark, []), str(tmp_path / "s"), ["id"],
                     ["doc"], patch_json_cols=("doc",), row_image="minimal")
+
+
+# ---------------------------------------------------------------------------
+# commit protocol: crash mid-commit and replay of a committed batch
+
+
+def test_crash_after_old_snapshot_moved_then_replay_keeps_rows(
+    spark, tmp_path, monkeypatch
+):
+    """The commit's final rename fails after the committed snapshot has
+    left its path; replaying the batch must still see the earlier
+    batch's rows (an rmtree-then-rename commit lost them: only the
+    replayed batch's row survived)."""
+    import os
+
+    snap = str(tmp_path / "s")
+    apply_batch(spark, _mdf(spark, [
+        _mrow("insert", 1, after={"id": "1", "name": "a"}),
+        _mrow("insert", 2, after={"id": "2", "name": "b"}),
+    ]), snap, ["id"], ["name"])
+    b1 = _mdf(spark, [_mrow("insert", 3, after={"id": "3", "name": "c"})])
+    real_rename, crashed = os.rename, []
+
+    def rename(src, dst):
+        if os.path.normpath(dst) == os.path.normpath(snap) and not crashed:
+            crashed.append(src)
+            raise OSError("crash before the new snapshot lands")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="crash"):
+        apply_batch(spark, b1, snap, ["id"], ["name"])
+    monkeypatch.undo()
+    apply_batch(spark, b1, snap, ["id"], ["name"])
+    assert _state(spark, snap) == {"1": "a", "2": "b", "3": "c"}
+
+
+def _apply_flat_or_partitioned(spark, layout, batch, snap, value_cols, **kw):
+    from dolphinbeat_spark.sinks.apply_changes import apply_batch_partitioned
+
+    if layout == "flat":
+        apply_batch(spark, batch, snap, ["id"], value_cols, **kw)
+    else:
+        apply_batch_partitioned(spark, batch, snap, ["id"], value_cols,
+                                num_buckets=4, **kw)
+
+
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+def test_replayed_minimal_key_change_is_noop(spark, tmp_path, layout):
+    """Re-applying a committed MINIMAL key change 2 -> 7 would pull the
+    moved row's columns from the now-deleted origin key (NULLs); the
+    replayed batch id must skip instead."""
+    from dolphinbeat_spark.sinks.apply_changes import read_snapshot
+
+    snap = str(tmp_path / "s")
+    b0 = _mdf(spark, [
+        _mrow("insert", 1, after={"id": "2", "name": "bob", "bal": "5"}),
+    ])
+    b1 = _mdf(spark, [_mrow("update", 2, before={"id": "2"}, after={"id": "7"})])
+    for batch_id, b in [(0, b0), (1, b1), (1, b1)]:
+        _apply_flat_or_partitioned(spark, layout, b, snap, ["name", "bal"],
+                                   row_image="minimal", batch_id=batch_id)
+    got = {r["id"]: (r["name"], r["bal"]) for r in read_snapshot(spark, snap).collect()}
+    assert got == {"7": ("bob", "5")}
+
+
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+def test_replayed_partial_json_diff_is_noop(spark, tmp_path, layout):
+    """Re-applying a committed ``remove $.arr[0]`` diff to its own
+    output would remove a second element; the replayed batch id must
+    skip instead."""
+    import json
+
+    from dolphinbeat_spark.sinks.apply_changes import read_snapshot
+
+    snap = str(tmp_path / "s")
+    b0 = _mdf(spark, [_mrow("insert", 1, after={"id": "1", "doc": '{"arr":[1,2,3]}'})])
+    b1 = _mdf(spark, [_mrow(
+        "update", 2, before={"id": "1", "doc": '{"arr":[1,2,3]}'},
+        after={"id": "1",
+               "doc": '{"$json_diff":[{"op":"remove","path":"$.arr[0]"}]}'},
+    )])
+    for batch_id, b in [(0, b0), (1, b1), (1, b1)]:
+        _apply_flat_or_partitioned(spark, layout, b, snap, ["doc"],
+                                   patch_json_cols=("doc",), batch_id=batch_id)
+    got = {r["id"]: json.loads(r["doc"]) for r in read_snapshot(spark, snap).collect()}
+    assert got == {"1": {"arr": [2, 3]}}
+
+
+def test_update_split_rejects_reserved_column_names(spark):
+    """A batch already carrying the update split's working columns
+    raises by name instead of being silently shadowed."""
+    from dolphinbeat_spark.sinks.apply_changes import normalize_pk_changes
+
+    batch = _mdf(spark, [_mrow("insert", 1, after={"id": "1", "name": "a"})])
+    for c in ("__pieces", "__p"):
+        with pytest.raises(ValueError, match=f"'{c}'"):
+            normalize_pk_changes(batch.withColumn(c, F.lit(1)))

@@ -205,29 +205,32 @@ def test_partitioned_merge_parity_and_bucket_isolation(spark, tmp_path):
 
 def test_crash_recovery_rename_aside(spark, tmp_path):
     """Every interruption point of the swap leaves a recoverable
-    state: a lone .old dir restores, stale temps drop, and the replay
+    state: a lone old aside restores, stale temps drop, and the replay
     then folds the batch exactly once."""
     import os
     import shutil
 
+    from dolphinbeat_spark.streaming.rollup import aside_paths
+
     path = str(tmp_path / "view")
+    tmp, old = aside_paths(path)
     b0 = [_op("insert", 10, after={"id": 1, "grp": "a", "amount": 5})]
     b1 = [_op("insert", 20, after={"id": 2, "grp": "a", "amount": 2})]
     merge_agg_batch(_batch(spark, b0), path, VIEW, batch_id=0)
 
     # crash window: dir renamed aside, tmp (with marker) not yet in
     # place — the pre-fix rmtree+rename would have lost all state here
-    os.rename(path, path + ".old")
+    os.rename(path, old)
     merge_agg_batch(_batch(spark, b1), path, VIEW, batch_id=1)
     assert _view_state(spark, path) == {"a": (2, 7.0)}  # nothing lost
 
     # crash window: stale uncommitted temp next to a live dir
-    shutil.copytree(path, path + ".next")
+    shutil.copytree(path, tmp)
     merge_agg_batch(_batch(spark, [
         _op("delete", 30, before={"id": 2, "grp": "a", "amount": 2}),
     ]), path, VIEW, batch_id=2)
     assert _view_state(spark, path) == {"a": (1, 5.0)}
-    assert not os.path.exists(path + ".next") and not os.path.exists(path + ".old")
+    assert not os.path.exists(tmp) and not os.path.exists(old)
 
 
 def test_partitioned_temp_dirs_invisible_and_bucket_pin(spark, tmp_path):

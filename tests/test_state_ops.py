@@ -233,120 +233,6 @@ def test_streaming_near_dup_band_flags(spark, tmp_path):
     assert set(n_bands.values()) == {4}
 
 
-def test_dedup_by_seq_v2_processor_unit():
-    """The v2 processor's actual logic (init + handleInputRows)
-    executed directly against fake typed-state handles shaped like the
-    real StatefulProcessorHandle API — the part of state_v2 that CAN
-    run in this container runs, always (no skip): intra-chunk dups
-    collapse, the ValueState watermark persists across calls, and
-    stale seqs drop."""
-    import pandas as pd
-
-    from dolphinbeat_spark.streaming.state_v2 import SeqDedupProcessor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, FakeValueState())
-
-    handle = FakeHandle()
-    proc = SeqDedupProcessor()
-    proc.init(handle)
-    b1 = pd.DataFrame({"producer_id": [1, 1, 1], "seq": [3, 1, 3], "log_pos": [30, 10, 30]})
-    out1 = pd.concat(list(proc.handleInputRows((1,), iter([b1]), None)))
-    assert sorted(out1["seq"]) == [1, 3]
-    assert handle.states["max_seq"].get() == (3,)
-    # second call, same handle: retries of 1/3 drop, 5 passes
-    b2 = pd.DataFrame({"producer_id": [1, 1, 1], "seq": [1, 3, 5], "log_pos": [10, 30, 50]})
-    out2 = pd.concat(list(proc.handleInputRows((1,), iter([b2]), None)))
-    assert sorted(out2["seq"]) == [5]
-    assert handle.states["max_seq"].get() == (5,)
-
-
-def test_dedup_by_seq_v2_transform_with_state(spark, tmp_path):
-    """Same contract as test_dedup_by_seq_drops_producer_retries, via
-    the Spark 4 transformWithStateInPandas API (streaming/state_v2).
-
-    Environment fork, no skip either way: executing transformWithState
-    needs the google.protobuf RUNTIME (Spark's generated
-    StateMessage_pb2 imports descriptor_pool/builder and validates the
-    protobuf runtime version) — vendoring message definitions cannot
-    satisfy that, so where the package is absent this test instead
-    pins the documented env-block: the module stays import-clean and
-    the missing dependency is exactly google.protobuf."""
-    import importlib.util
-
-    import dolphinbeat_spark.streaming.state_v2 as v2  # import-clean always
-
-    try:
-        have_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no parent 'google' package at all
-        have_protobuf = False
-    if not have_protobuf:
-        # the documented impossibility (COVERAGE.md): Spark's own
-        # generated pb2 module is what needs the runtime
-        assert hasattr(v2, "dedup_by_seq_v2")
-        spec = importlib.util.find_spec("pyspark.sql.streaming.proto")
-        assert spec is not None, "Spark layout changed; re-check the env gate"
-        return
-    from dolphinbeat_spark.streaming.state_v2 import dedup_by_seq_v2
-
-    register_fixture_source(spark)
-    # transformWithState requires the RocksDB state store provider
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = (
-        spark.readStream.format("dolphinbeat_fixture")
-        .option("batch_size", "4")
-        .load()
-        .filter(F.col("log_pos").isNotNull())
-        .select(
-            F.lit(1).cast("bigint").alias("producer_id"),
-            F.col("log_pos").alias("seq"),
-            F.col("log_pos"),
-        )
-    )
-    q = (
-        dedup_by_seq_v2(stream)
-        .writeStream.format("memory")
-        .queryName("deduped_v2")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckp"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM deduped_v2 ORDER BY seq").collect()
-    seqs = [r["seq"] for r in rows]
-    from dolphinbeat_spark.envelope import golden_sequences
-
-    distinct_pos = {o["log_pos"] for o in golden_sequences() if o["log_pos"] is not None}
-    assert len(seqs) == len(set(seqs))
-    assert set(seqs) == distinct_pos
-    if prev is None:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    else:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_streaming_protobuf_consumer_group_across_batches(spark, tmp_path):
     """Protobuf messages stream in as files; a fragment GROUP is split
     across two availableNow runs (second half of the files arrives
