@@ -21,12 +21,13 @@ port.
 
 Sink type mapping (reference sink registry → this engine):
 
-- ``stdout``  → ordered JSON files (``OrderedFileSink``; set
-  ``cfg.out_dir``) — the stdout sink's durable twin; O1's console
-  form is a one-line swap.
-- ``kafka``   → the built-in Spark kafka writer path
-  (``kafka_writestream``) in the wire-compatible protobuf framing
-  when ``cfg.encoder = "protobuf"`` (K5/K7) or JSON otherwise;
+- ``stdout``  → ordered, seq-stamped parquet (``OrderedFileSink``, one
+  file per batch under ``cfg.out_dir``) — the stdout sink's durable
+  twin; O1's console form is a one-line swap.
+- ``kafka``   → ``ProtobufKafkaSink`` (the reference's wire framing,
+  ``cfg.encoder = "protobuf"``, K5/K7) or ``JsonKafkaSink``
+  (``"json"``), producing through a ``KafkaTransport`` that records a
+  batch only after the broker confirmed all of its messages;
   ``broker_list``/``topic``/``partition``/``compression``/
   ``max_payload_size`` keys match the reference's ``[sink.cfg]``.
 
@@ -149,6 +150,17 @@ class DaemonConfig:
                 errors.append(f"sink {s.name!r}: kafka needs cfg.broker_list")
             if s.type == "kafka" and not s.cfg.get("topic"):
                 errors.append(f"sink {s.name!r}: kafka needs cfg.topic")
+            if s.type == "kafka":
+                enc = s.cfg.get("encoder", "protobuf")
+                comp = s.cfg.get("compression", "none")
+                if enc not in ("protobuf", "json"):
+                    errors.append(f"sink {s.name!r}: encoder must be protobuf or json, got {enc!r}")
+                if comp not in ("none", "zlib", "gzip"):
+                    errors.append(
+                        f"sink {s.name!r}: compression must be none, zlib or gzip, got {comp!r}")
+                elif enc == "json" and comp != "none":
+                    errors.append(
+                        f"sink {s.name!r}: the json encoder takes compression none, got {comp!r}")
         return errors
 
 
@@ -352,8 +364,8 @@ def run(cfg: DaemonConfig, spark=None, source_format: str = "dolphinbeat_binlog"
                     include=s["include"], exclude=s["exclude"],
                 )
             )
-        elif s["type"] == "kafka":  # pragma: no cover - needs broker
-            queries.append(_start_kafka_sink(stream, s, cfg))
+        elif s["type"] == "kafka":
+            queries.append(_start_kafka_sink(stream, s, cfg, trigger_once))
     if file_specs:
         queries += build_pipeline(
             stream, file_specs, trigger_once=trigger_once, metrics=metrics,
@@ -372,47 +384,39 @@ def run(cfg: DaemonConfig, spark=None, source_format: str = "dolphinbeat_binlog"
     return spark, queries, server
 
 
-def _start_kafka_sink(stream, s: dict, cfg: DaemonConfig):  # pragma: no cover - needs broker
-    """One [[sink]] kafka block → a streaming query. ``encoder =
-    "protobuf"`` produces the reference wire format via
-    ProtobufKafkaSink over a confluent producer (in-band compression +
-    fragmentation, ``max_payload_size``); ``"json"`` uses Spark's
-    built-in kafka writer (kafka_writestream), no extra client."""
+def _start_kafka_sink(stream, s: dict, cfg: DaemonConfig, trigger_once: bool = False):
+    """One [[sink]] kafka block → a streaming query: the block's
+    encoder (``ProtobufKafkaSink`` with in-band compression and
+    fragmentation at ``max_payload_size``, or ``JsonKafkaSink``) over a
+    ``KafkaTransport`` on a confluent producer."""
     from dolphinbeat_spark.operators.filters import filter_tables
     from dolphinbeat_spark.schema.registry import SchemaRegistry
-    from dolphinbeat_spark.sinks.ordered import (
-        ProtobufKafkaSink,
-        _confluent_producer,
-        kafka_writestream,
-    )
+    from dolphinbeat_spark.sinks import ordered
 
     filtered = filter_tables(stream, s["include"], s["exclude"])
     meta_dir = str(Path(cfg.checkpoint_dir) / s["name"] / "_seq_meta")
-    if s["encoder"] == "json":
-        return kafka_writestream(
-            filtered, topic=s["topic"], bootstrap=s["bootstrap"],
-            checkpoint=s["checkpoint"], meta_dir=meta_dir,
-            partition=s["partition"],
-        )
-    snap = Path(cfg.tracker_dir) / "schema_snapshot.json"
-    registry = SchemaRegistry.load(str(snap)) if snap.exists() else SchemaRegistry()
-    producer = _confluent_producer(s["bootstrap"])
-    sink = ProtobufKafkaSink(
-        meta_dir=meta_dir,
-        registry=registry,
-        produce=lambda seq, value: producer.produce(
-            topic=s["topic"], partition=s["partition"],
-            key=str(seq).encode(), value=value,
-        ) or producer.flush(),
-        compression=s["compression"] if s["compression"] in ("none", "zlib", "gzip") else "none",
-        max_payload_size=s["max_payload_size"],
+    transport = ordered.KafkaTransport(
+        ordered._confluent_producer(s["bootstrap"]), s["topic"], s["partition"]
     )
-    return (
+    if s["encoder"] == "json":
+        sink = ordered.JsonKafkaSink(meta_dir, produce=transport)
+    else:
+        snap = Path(cfg.tracker_dir) / "schema_snapshot.json"
+        sink = ordered.ProtobufKafkaSink(
+            meta_dir=meta_dir,
+            registry=SchemaRegistry.load(str(snap)) if snap.exists() else SchemaRegistry(),
+            produce=transport,
+            compression=s["compression"],
+            max_payload_size=s["max_payload_size"],
+        )
+    writer = (
         filtered.writeStream.foreachBatch(sink)
         .option("checkpointLocation", s["checkpoint"])
         .queryName(s["name"])
-        .start()
     )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def _split_addr(addr: str) -> tuple[str, int]:

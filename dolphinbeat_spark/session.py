@@ -70,28 +70,6 @@ def get_spark(app_name: str = "dolphinbeat_spark", master: str | None = None) ->
     # from the variance equation (it did NOT remove the variance —
     # see BASELINE §r16 — but it is strictly faster and makes the
     # remaining walls attributable to compute, not the disk)
-    # Runtime Bloom-filter join pre-filtering (r17, guide §3.2),
-    # measured at the sf100 replica (OPTIMIZATION_r17.md "VERDICT #3"):
-    # with these thresholds the optimizer injects might_contain() on
-    # the probe side of q3/q5/q21's lineitem⋈orders shuffle joins,
-    # cutting shuffle rows to 30.6% (q5) / 3.0% (q3) of lineitem.
-    # Local walls are PARITY (shuffle is tmpfs-local, so the saved
-    # bytes cost nothing here and the creation-side second pass eats
-    # the gain) — that is why the default is off and the driver bench
-    # stays on identical plans. On a real cluster, where those bytes
-    # cross the network, set SPARK_GRAFT_BLOOM=1; size
-    # expectedNumItems to the creation side's post-filter key
-    # cardinality (values below fit the ~5M-key replica creation side
-    # at <1% false-positive rate; 64Mbit filter = 8 MB broadcast).
-    if os.environ.get("SPARK_GRAFT_BLOOM") == "1":
-        builder = (
-            builder
-            .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "1GB")
-            .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "256MB")
-            .config("spark.sql.optimizer.runtime.bloomFilter.expectedNumItems", "8000000")
-            .config("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "16000000")
-            .config("spark.sql.optimizer.runtime.bloomFilter.numBits", "67108864")
-        )
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir is None and os.path.isdir("/dev/shm"):
         local_dir = "/dev/shm/spark_graft_local"

@@ -1,4 +1,4 @@
-"""Ordered, sequence-numbered, exactly-once sink (reference K1/K2/K6/K7).
+"""Ordered, sequence-numbered, exactly-once sinks (reference K1/K2/K6/K7).
 
 The reference preserves binlog total order by producing every op to a
 single Kafka topic-partition with ``acks=all`` and a monotonically
@@ -6,24 +6,26 @@ increasing ``seq`` per producer; consumers dedup on seq gaps
 (``sink/kafka/kafka.go:82-126,345-368``; client decoder seq-dedup
 ``sink/kafka/client/go/decoder.go:161-165``).
 
-Spark restatement used here (SURVEY.md §7.2 step 4):
+Every sink here is one :class:`SeqStampedSink` pipeline per batch:
 
-- ordering: within each micro-batch, sort by the TOTAL key
-  (log_name, log_pos, op-type rank, row_index) — see
-  :func:`total_order_cols` — and coalesce to ONE partition before
-  writing (the protobuf sink instead sorts its parallel-encoded chunks
-  on the driver); order only at the sink boundary, full parallelism
-  upstream (§7.4 risk note).
-- seq: deterministic ``base_seq(batch) + row_number`` where the base
-  is persisted per batch id. Structured Streaming replays a failed
-  batch with the same batch_id and the same data, so a replay
-  regenerates byte-identical output — at-least-once delivery plus
-  consumer seq-dedup = the reference's exactly-once contract.
-- recovery scan (K6) collapses to reading the persisted seq metadata.
+1. ``_base_seq``: the persisted base of the batch id (a replay reuses
+   it), else the next seq after the highest committed one;
+2. encode, in the batch's own partitions, to an Arrow table of the
+   four sort keys plus a payload;
+3. :func:`total_order`: one stable driver-side sort by (log_name,
+   log_pos, :data:`OP_RANK`, row_index), NULLs first;
+4. seq stamp and transport: a parquet file per batch
+   (:class:`OrderedFileSink`), or ``produce(seq, value)`` plus the
+   transport's ``flush()`` (:class:`JsonKafkaSink`,
+   :class:`ProtobufKafkaSink` over a :class:`KafkaTransport`);
+5. ``_commit_meta``, only after the transport returned, so a batch the
+   broker rejected is never recorded.
 
-``OrderedFileSink`` targets a directory (tests, and the stdout-sink
-analog); ``KafkaOrderedSink`` shows the identical discipline against
-Kafka and activates when a producer client is importable.
+Structured Streaming replays a failed batch with the same batch_id and
+the same data, so a replay regenerates byte-identical output —
+at-least-once delivery plus consumer seq-dedup is the reference's
+exactly-once contract. The recovery scan (K6) collapses to reading the
+persisted seq metadata.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ import json
 import os
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -44,34 +46,16 @@ from pyspark.sql import functions as F
 #: type (insert/update/delete/query/ddl/ddl_failed) ranks 3.
 OP_RANK = {"gtid": 1, "begin": 2, "commit": 4, "rotate": 5}
 
-
-def op_type_rank() -> "F.Column":
-    """:data:`OP_RANK` as a column."""
-    rank = F.lit(3)
-    for op, r in OP_RANK.items():
-        rank = F.when(F.col("op_type") == op, r).otherwise(rank)
-    return rank.cast("int")
-
-
-def total_order_cols() -> list:
-    """The TOTAL ordering every ordered sink stamps/sorts by. binlog
-    coordinates alone are not total: the source emits one envelope op
-    per row of a multi-row event, all sharing the event's log_pos
-    (binlog_source.decode_event), so the per-event ``row_index``
-    stamped at the source is the deterministic tiebreak; the op-type
-    rank covers the cross-event tie a synthetic/fixture stream can
-    produce."""
-    return [
-        F.col("log_name"),
-        F.col("log_pos"),
-        op_type_rank(),
-        F.coalesce(F.col("row_index"), F.lit(0)),
-    ]
+#: the columns :func:`total_order` sorts by, which every encoder's
+#: table carries
+SORT_KEYS = ("log_name", "log_pos", "op_type", "row_index")
 
 
 class SeqStampedSink:
-    """Shared discipline for every ordered sink: persisted per-batch
-    base sequence (replay-stable) + total order inside one partition.
+    """The one ordered-sink core (module docstring): a persisted
+    per-batch base sequence (replay-stable), the driver-side total
+    order, and the seq meta committed after the transport returns.
+    Subclasses supply ``_encode`` and ``_deliver``.
 
     ``meta_dir`` is the collapsed K6 recovery scan: instead of reading
     the topic tail backwards for the last committed seq
@@ -82,6 +66,21 @@ class SeqStampedSink:
         self.meta_dir = Path(meta_dir)
         self.meta_dir.mkdir(parents=True, exist_ok=True)
         self.producer_id = producer_id
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        base = self._base_seq(batch_id)
+        n = self._deliver(total_order(self._encode(batch_df)), base, batch_id)
+        self._commit_meta(batch_id, base, n)
+
+    def _encode(self, batch_df: DataFrame):
+        """The batch as a ``pyarrow.Table`` holding :data:`SORT_KEYS`
+        and the payload columns."""
+        raise NotImplementedError
+
+    def _deliver(self, ordered, base: int, batch_id: int) -> int:
+        """Stamp seqs after ``base`` onto the ordered table and hand it
+        to the transport; return the number of seqs used."""
+        raise NotImplementedError
 
     def _base_seq(self, batch_id: int) -> int:
         """Deterministic base: replayed batches reuse their recorded
@@ -111,39 +110,74 @@ class SeqStampedSink:
         for p in metas[: -self.META_RETENTION]:
             p.unlink(missing_ok=True)
 
-    def _stamped(self, batch_df: DataFrame, base: int) -> DataFrame:
-        """Order by binlog coordinates (+ the row_index/op-rank
-        tiebreaks that make it TOTAL), stamp seq + producer_id, and
-        collapse to ONE partition — total order only at the sink
-        boundary, full parallelism upstream (the reference pays the
-        same single-partition price for total order, kafka.go:91-95)."""
-        if "row_index" not in batch_df.columns:
-            batch_df = batch_df.withColumn("row_index", F.lit(0))
-        w = Window.orderBy(*total_order_cols())
-        return (
-            batch_df.withColumn(
-                "seq", (F.row_number().over(w) + F.lit(base)).cast("bigint")
-            )
-            .withColumn("producer_id", F.lit(self.producer_id).cast("bigint"))
-            .coalesce(1)
-            .sortWithinPartitions("seq")
-        )
+
+def _envelope_cols(batch_df: DataFrame) -> DataFrame:
+    """The batch as the ordered sinks carry it: a missing ``row_index``
+    reads as 0, and any ``seq``/``producer_id`` already present gives
+    way to the sink's own stamp."""
+    if "row_index" not in batch_df.columns:
+        batch_df = batch_df.withColumn("row_index", F.lit(0))
+    return batch_df.drop("seq", "producer_id")
+
+
+def total_order(table):
+    """``table`` (a ``pyarrow.Table`` with :data:`SORT_KEYS`) in the K1
+    total order: ascending by (log_name, log_pos, :data:`OP_RANK`,
+    row_index), NULLs first, a NULL row_index ranked as 0, and ties
+    kept in arrival order (a stable sort over the partitions in order).
+    binlog coordinates alone are not total: the source emits one
+    envelope op per row of a multi-row event, all sharing the event's
+    log_pos, so the source-stamped ``row_index`` is the tiebreak; the
+    op-type rank covers the cross-event tie a synthetic/fixture stream
+    can produce."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rank = pa.array(
+        [OP_RANK.get(t, 3) for t in table.column("op_type").to_pylist()],
+        pa.int32(),
+    )
+    keys = pa.table({
+        "log_name": table.column("log_name"),
+        "log_pos": table.column("log_pos"),
+        "rank": rank,
+        "row_index": pc.fill_null(table.column("row_index"), 0),
+    })
+    order = pc.sort_indices(
+        keys,
+        sort_keys=[(k, "ascending") for k in keys.column_names],
+        null_placement="at_start",
+    )
+    return table.take(order)
 
 
 class OrderedFileSink(SeqStampedSink):
-    """foreachBatch writer: ordered + seq-stamped parquet per batch."""
+    """foreachBatch writer: the batch, ordered and seq-stamped, as one
+    parquet file in ``<out_dir>/batch=<id>/``. The file is written to a
+    ``.``-prefixed temp name (which readers skip) and renamed into
+    place, so a replay of the batch replaces it whole."""
 
     def __init__(self, out_dir: str, producer_id: int = 1) -> None:
         self.out_dir = Path(out_dir)
         super().__init__(self.out_dir / "_seq_meta", producer_id)
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        base = self._base_seq(batch_id)
-        ordered = self._stamped(batch_df, base)
-        n = ordered.count()
-        # overwrite per-batch path: replay-idempotent
-        ordered.write.mode("overwrite").parquet(str(self.out_dir / f"batch={batch_id}"))
-        self._commit_meta(batch_id, base, n)
+    def _encode(self, batch_df: DataFrame):
+        return _envelope_cols(batch_df).toArrow()
+
+    def _deliver(self, ordered, base: int, batch_id: int) -> int:
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        n = ordered.num_rows
+        stamped = ordered.append_column(
+            "seq", [np.arange(base + 1, base + n + 1, dtype=np.int64)]
+        ).append_column("producer_id", [np.full(n, self.producer_id, dtype=np.int64)])
+        out = self.out_dir / f"batch={batch_id}"
+        out.mkdir(parents=True, exist_ok=True)
+        tmp = out / ".part-0.parquet.tmp"
+        pq.write_table(stamped, tmp)
+        os.replace(tmp, out / "part-0.parquet")
+        return n
 
 
 def read_with_consumer_dedup(spark, out_dir: str) -> DataFrame:
@@ -153,78 +187,19 @@ def read_with_consumer_dedup(spark, out_dir: str) -> DataFrame:
     return df.dropDuplicates(["producer_id", "seq"]).orderBy("producer_id", "seq")
 
 
-def fragment_messages(payload: DataFrame, max_bytes: int) -> DataFrame:
-    """K3/K4 parity: split any message value larger than ``max_bytes``
-    into ordered fragments so no single Kafka message exceeds the
-    broker limit — the reference's "unlimited event size" claim
-    (``sink/kafka/kafka.go:109,114-116`` splits at ``max_payload_size``,
-    default 1 MiB; fragments carry index/count for reassembly).
-
-    Input: (key, value, partition) from :func:`kafka_batch_payload`.
-    Output: same columns plus (frag_idx, n_frags); sub-message keys are
-    ``<key>:<idx>/<n>`` so fragment ordering survives any transport
-    that preserves per-partition order (ours does — single partition).
-    Values at or under the limit pass through as their only fragment.
-    Pure Catalyst (explode over an offset sequence) — no driver loop."""
-    n_frags = F.ceil(F.length("value") / F.lit(max_bytes)).cast("int")
-    n_frags = F.greatest(n_frags, F.lit(1))  # empty value -> one empty frag
-    return (
-        payload.withColumn("n_frags", n_frags)
-        .withColumn("frag_idx", F.explode(F.sequence(F.lit(0), F.col("n_frags") - 1)))
-        .select(
-            F.concat(
-                F.col("key").cast("string"), F.lit(":"),
-                F.col("frag_idx").cast("string"), F.lit("/"),
-                F.col("n_frags").cast("string"),
-            ).cast("binary").alias("key"),
-            F.substring(
-                F.col("value"), F.col("frag_idx") * max_bytes + 1, max_bytes
-            ).alias("value"),
-            "partition",
-            "frag_idx",
-            "n_frags",
-        )
-    )
-
-
-def defragment_messages(frags: DataFrame) -> DataFrame:
-    """Consumer-side reassembly (reference client decoder's fragment
-    merge): group fragments by their base key, order by frag_idx,
-    binary-concat back to the original value. Tolerates duplicate
-    fragment delivery (at-least-once) by keeping one copy per index."""
-    base_key = F.split(F.col("key").cast("string"), ":").getItem(0)
-    one_per_idx = (
-        frags.select(base_key.alias("base_key"), "frag_idx", "value", "partition")
-        .dropDuplicates(["base_key", "frag_idx"])
-    )
-    return (
-        one_per_idx.groupBy("base_key")
-        .agg(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct("frag_idx", "value"))
-                ),
-                F.lit(b""),
-                lambda acc, x: F.concat(acc, x["value"]),
-            ).alias("value"),
-            F.first("partition").alias("partition"),
-        )
-        .select(F.col("base_key").cast("binary").alias("key"), "value", "partition")
-    )
-
-
 def decode_kafka_messages(messages: DataFrame, value_col: str = "value") -> DataFrame:
-    """Consumer-side decoder for the Kafka paths (the Spark analog of
-    the reference's client library, ``sink/kafka/client/go/decoder.go``):
-    parse the JSON message value back into the seq-stamped envelope,
-    dedup on (producer_id, seq), return in seq order.
+    """Consumer-side decoder for the JSON Kafka path (the Spark analog
+    of the reference's client library,
+    ``sink/kafka/client/go/decoder.go``): parse the JSON message value
+    back into the seq-stamped envelope, dedup on (producer_id, seq),
+    return in seq order.
 
     ``messages`` is whatever carries the message bytes — a
-    ``spark.read.format("kafka")`` DataFrame (binary ``value``), the
-    fake producer's capture in tests, or a batch of
-    :func:`kafka_batch_payload` output. Round-trip contract:
-    payload → decode → the original stamped envelope rows, with
-    at-least-once transport overlaps collapsed (K7)."""
+    ``spark.read.format("kafka")`` DataFrame (binary ``value``) or a
+    fake producer's capture in tests. Round-trip contract:
+    :class:`JsonKafkaSink` messages → decode → the original stamped
+    envelope rows, with at-least-once transport overlaps collapsed
+    (K7)."""
     from dolphinbeat_spark.envelope import ENVELOPE_SCHEMA
     from pyspark.sql import types as T
 
@@ -241,73 +216,50 @@ def decode_kafka_messages(messages: DataFrame, value_col: str = "value") -> Data
     return parsed.dropDuplicates(["producer_id", "seq"]).orderBy("producer_id", "seq")
 
 
-def kafka_message_value(producer_id_col=None, seq_col=None) -> "F.Column":
-    """The message envelope: every non-internal column JSON-packed plus
-    (producer_id, seq) — the fields the reference's client decoder keys
-    its dedup on (``sink/kafka/client/go/decoder.go:161-165``)."""
-    return F.to_json(F.struct("*"))
+class DeliveryError(RuntimeError):
+    """The transport could not confirm every message of a batch; the
+    batch's seq meta is not committed, so its replay reuses the base."""
 
 
-class KafkaOrderedSink(SeqStampedSink):
-    """The reference's Kafka path (``sink/kafka/kafka.go:82-126,
-    280-343``): every op produced to ONE topic-partition in binlog
-    order, seq in the message, delivery confirmed before the batch's
-    seq metadata commits (acks=all + flush ≙ the reference's
-    wait-for-ack loop).
+class KafkaTransport:
+    """The ``produce(seq, value)`` callable the Kafka sinks take, over a
+    confluent-shaped producer: every message goes to one
+    topic-partition, keyed by its seq (kafka.go:280-343). Delivery
+    callbacks are served on every produce; a full local queue is
+    drained and the produce retried. :meth:`flush` runs once per batch
+    and raises :class:`DeliveryError` on any failed delivery or any
+    message still unflushed — the reference's wait-for-ack before it
+    records progress."""
 
-    ``producer_factory() -> producer`` is injectable; the default
-    builds a ``confluent_kafka.Producer`` with the idempotent-producer
-    config. The produce loop runs DRIVER-side over the single ordered
-    partition (total order is the contract; throughput bound is the
-    same one the reference accepts, K1). A failed delivery raises →
-    Structured Streaming retries the batch with the same id → the
-    replay regenerates byte-identical messages and consumer seq-dedup
-    (``read_with_consumer_dedup`` / K7) collapses the overlap:
-    at-least-once transport + dedup = exactly-once."""
+    def __init__(self, producer, topic: str, partition: int = 0) -> None:
+        self.producer, self.topic, self.partition = producer, topic, partition
+        self._failed: list = []
 
-    def __init__(
-        self,
-        topic: str,
-        bootstrap: str,
-        meta_dir: str,
-        producer_id: int = 1,
-        partition: int = 0,
-        producer_factory=None,
-        poll_every: int = 1000,
-    ):
-        super().__init__(meta_dir, producer_id)
-        self.topic, self.bootstrap, self.partition = topic, bootstrap, partition
-        self._factory = producer_factory or (lambda: _confluent_producer(bootstrap))
-        self.poll_every = poll_every
+    def _on_delivery(self, err, _msg) -> None:
+        if err is not None:
+            self._failed.append(err)
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        base = self._base_seq(batch_id)
-        ordered = self._stamped(batch_df, base)
-        payload = ordered.select(
-            F.col("seq"),
-            kafka_message_value().alias("value"),
-        )
-        producer = self._factory()
-        errors: list = []
-        n = 0
-        # toLocalIterator over the single sorted partition preserves the
-        # produce order (the reference's per-op produce loop,
-        # kafka.go:280-343); poll() drains delivery callbacks in-flight
-        for row in payload.toLocalIterator():
-            producer.produce(
-                topic=self.topic,
-                partition=self.partition,
-                key=str(row["seq"]).encode(),
-                value=row["value"].encode(),
-                on_delivery=lambda err, msg: errors.append(err) if err else None,
+    def __call__(self, seq: int, value: bytes) -> None:
+        while True:
+            try:
+                self.producer.produce(
+                    topic=self.topic, partition=self.partition,
+                    key=str(seq).encode(), value=value,
+                    on_delivery=self._on_delivery,
+                )
+                break
+            except BufferError:
+                self.producer.poll(1)
+        self.producer.poll(0)
+
+    def flush(self) -> None:
+        unflushed = self.producer.flush() or 0
+        failed, self._failed = self._failed, []
+        if failed or unflushed:
+            raise DeliveryError(
+                f"{len(failed)} failed and {unflushed} unflushed deliveries"
+                + (f"; first error: {failed[0]}" if failed else "")
             )
-            n += 1
-            if n % self.poll_every == 0:
-                producer.poll(0)
-        producer.flush()
-        if errors:
-            raise RuntimeError(f"kafka delivery failed for {len(errors)} messages: {errors[0]}")
-        self._commit_meta(batch_id, base, n)
 
 
 def _confluent_producer(bootstrap: str):  # pragma: no cover - needs kafka client
@@ -315,9 +267,8 @@ def _confluent_producer(bootstrap: str):  # pragma: no cover - needs kafka clien
         from confluent_kafka import Producer
     except ImportError as ex:
         raise ImportError(
-            "KafkaOrderedSink requires confluent_kafka; use "
-            "OrderedFileSink or kafka_writestream() (built-in Spark "
-            "kafka format, no extra client) instead"
+            "the kafka sink needs confluent_kafka; use the stdout sink "
+            "(OrderedFileSink) without it"
         ) from ex
     return Producer(
         {
@@ -329,24 +280,51 @@ def _confluent_producer(bootstrap: str):  # pragma: no cover - needs kafka clien
     )
 
 
-def kafka_batch_payload(
-    batch_df: DataFrame, batch_id: int, sink: SeqStampedSink, partition: int = 0
-) -> DataFrame:
-    """Zero-extra-dependency Kafka path: shape a batch for Spark's
-    built-in ``kafka`` writer — columns (key, value, partition). The
-    fixed ``partition`` column pins every message to one Kafka
-    partition (the writer honors it), the single sorted Spark partition
-    makes the one write task produce in seq order. Returns the payload
-    DataFrame; the caller writes it with
-    ``.write.format("kafka").option("kafka.bootstrap.servers", ...)``.
-    """
-    base = sink._base_seq(batch_id)
-    ordered = sink._stamped(batch_df, base)
-    return ordered.select(
-        F.col("seq").cast("string").cast("binary").alias("key"),
-        kafka_message_value().cast("binary").alias("value"),
-        F.lit(partition).cast("int").alias("partition"),
-    )
+class _KafkaSink(SeqStampedSink):
+    """The produce half shared by the Kafka encoders: every message in
+    seq order through ``produce(seq, value_bytes)``, then the
+    transport's ``flush()`` when it has one (:class:`KafkaTransport`);
+    ``_commit_meta`` runs only after that returns. ``produce`` is
+    injectable (tests capture bytes; production passes a
+    :class:`KafkaTransport`)."""
+
+    def __init__(self, meta_dir: str, produce, producer_id: int = 1) -> None:
+        super().__init__(meta_dir, producer_id)
+        self.produce = produce
+
+    def _messages(self, ordered, base: int) -> list[tuple[int, bytes]]:
+        raise NotImplementedError
+
+    def _deliver(self, ordered, base: int, batch_id: int) -> int:
+        msgs = self._messages(ordered, base)
+        for seq, value in msgs:
+            self.produce(seq, value)
+        flush = getattr(self.produce, "flush", None)
+        if flush is not None:
+            flush()
+        return len(msgs)
+
+
+class JsonKafkaSink(_KafkaSink):
+    """JSON messages, one per op: the envelope as Spark's
+    ``to_json(struct(...))`` computes it in the batch's own partitions,
+    with ``"seq"`` and ``"producer_id"`` — the fields the reference's
+    client decoder keys its dedup on (decoder.go:161-165) — spliced in
+    as the last two fields on the driver. :func:`decode_kafka_messages`
+    reads them back."""
+
+    def _encode(self, batch_df: DataFrame):
+        return _envelope_cols(batch_df).select(
+            *SORT_KEYS, F.to_json(F.struct("*")).alias("value")
+        ).toArrow()
+
+    def _messages(self, ordered, base: int) -> list[tuple[int, bytes]]:
+        tail = f',"producer_id":{self.producer_id}}}'
+        msgs = []
+        for i, value in enumerate(ordered.column("value").to_pylist(), base + 1):
+            sep = "," if len(value) > 2 else ""  # "{}": every field NULL
+            msgs.append((i, f'{value[:-1]}{sep}"seq":{i}{tail}'.encode()))
+        return msgs
 
 
 def pack_multirow_events(envelope: DataFrame) -> DataFrame:
@@ -411,7 +389,7 @@ def encode_ops_distributed(envelope: DataFrame, registry) -> DataFrame:
     field makes each op's tagged bytes independently encodable; the
     payload body is their plain concatenation). Sort keys ride along
     so the caller can impose the K1 total order AFTER the parallel
-    encode (:func:`ordered_chunks`). Each task serializes a TableDef
+    encode (:func:`total_order`). Each task serializes a TableDef
     once per (db, table, schema_version)
     (:class:`~dolphinbeat_spark.sinks.wire_protocol.OperationEncoder`)."""
     import pyarrow as pa
@@ -481,33 +459,6 @@ def _pylist(arr) -> list:
     if pa.types.is_string(t) or pa.types.is_boolean(t):
         return arr.to_numpy(zero_copy_only=False).tolist()
     return arr.to_pylist()  # nested: the progress struct, packed rows
-
-
-def ordered_chunks(encoded) -> list[bytes]:
-    """The chunks of a collected :func:`encode_ops_distributed` table
-    (``pyarrow.Table``) in the K1 total order of
-    :func:`total_order_cols`: ascending, NULLs first, and ties kept in
-    arrival order (a stable sort over the partitions in order — what
-    Spark's sort of the partitions coalesced into one gives)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    rank = pa.array(
-        [OP_RANK.get(t, 3) for t in encoded.column("op_type").to_pylist()],
-        pa.int32(),
-    )
-    keys = pa.table({
-        "log_name": encoded.column("log_name"),
-        "log_pos": encoded.column("log_pos"),
-        "rank": rank,
-        "row_index": encoded.column("row_index"),
-    })
-    order = pc.sort_indices(
-        keys,
-        sort_keys=[(k, "ascending") for k in keys.column_names],
-        null_placement="at_start",
-    )
-    return encoded.column("chunk").take(order).to_pylist()
 
 
 def decode_protobuf_messages(messages: DataFrame, value_col: str = "value") -> DataFrame:
@@ -657,29 +608,26 @@ def op_row_tails(op: dict) -> list:
     return tails
 
 
-class ProtobufKafkaSink(SeqStampedSink):
+class ProtobufKafkaSink(_KafkaSink):
     """The reference's ACTUAL wire contract (K5/K7 drop-in): protobuf
     ``Message``/``Payload``/``Operation`` values with optional in-band
     zlib and IPv4-style fragmentation — a stock reference Go client
     (``sink/kafka/client/go/decoder.go``) can consume the topic.
 
-    Differences from :class:`KafkaOrderedSink` (the JSON path): seq is
-    per Kafka MESSAGE (fragment), not per op — exactly the reference's
-    numbering (kafka.go:421-430) — and one message carries a Payload of
-    up to ``ops_per_payload`` ops. Replay determinism is unchanged:
-    same batch + same recorded base_seq → byte-identical messages, so
+    Differences from :class:`JsonKafkaSink`: seq is per Kafka MESSAGE
+    (fragment), not per op — exactly the reference's numbering
+    (kafka.go:421-430) — and one message carries a Payload of up to
+    ``ops_per_payload`` ops. Replay determinism is unchanged: same
+    batch + same recorded base_seq → byte-identical messages, so
     at-least-once transport + client seq-dedup = exactly-once.
 
-    Nothing collapses to one partition: ops encode in the batch's own
-    partitions (one task per archived file on a file-source replay)
-    and the driver sorts the encoded chunks by the total order before
-    framing them, so the batch's encoded bytes are what the driver
-    holds — the memory bound of the produce loop. The batch itself is
-    materialized once before the encode (``localCheckpoint``: lost
-    executors fail the batch, and Structured Streaming replays it).
-
-    ``produce(seq, value_bytes)`` is injectable (tests capture bytes;
-    production wraps a kafka client's produce)."""
+    Ops encode in the batch's own partitions (one task per archived
+    file on a file-source replay) and the driver sorts the encoded
+    chunks before framing them, so the batch's encoded bytes are what
+    the driver holds — the memory bound of the produce loop. The batch
+    itself is materialized once before the encode (``localCheckpoint``:
+    lost executors fail the batch, and Structured Streaming replays
+    it)."""
 
     def __init__(
         self,
@@ -694,9 +642,8 @@ class ProtobufKafkaSink(SeqStampedSink):
     ):
         from dolphinbeat_spark.sinks import wire_protocol as wp
 
-        super().__init__(meta_dir, producer_id)
+        super().__init__(meta_dir, produce, producer_id)
         self.registry = registry
-        self.produce = produce
         self.ops_per_payload = ops_per_payload
         self.max_payload_size = max_payload_size
         #: pack_rows=True regroups multi-row events into ONE Operation
@@ -709,64 +656,25 @@ class ProtobufKafkaSink(SeqStampedSink):
             "gzip": wp.COMPRESSION_GZIP,
         }[compression]
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from dolphinbeat_spark.sinks import wire_protocol as wp
-
-        base = self._base_seq(batch_id)
+    def _encode(self, batch_df: DataFrame):
         # decode the batch first (one job), then encode in parallel —
-        # one task per partition — and pay the K1 total order once, on
-        # the driver, over the encoded chunks the produce loop holds in
-        # memory anyway. Two jobs, not one pipelined stage: a stage with
-        # a Python source AND a Python encode holds two Python workers
-        # per task; apart, the decode's workers serve the encode
+        # one task per partition. Two jobs, not one pipelined stage: a
+        # stage with a Python source AND a Python encode holds two
+        # Python workers per task; apart, the decode's workers serve
+        # the encode
         batch_df = batch_df.localCheckpoint()
         if self.pack_rows:
             batch_df = pack_multirow_events(batch_df)
-        encoded = encode_ops_distributed(batch_df, self.registry).toArrow()
-        chunks = ordered_chunks(encoded)
-        msgs = wp.build_messages(
-            chunks,
+        return encode_ops_distributed(batch_df, self.registry).toArrow()
+
+    def _messages(self, ordered, base: int) -> list[tuple[int, bytes]]:
+        from dolphinbeat_spark.sinks import wire_protocol as wp
+
+        return wp.build_messages(
+            ordered.column("chunk").to_pylist(),
             base,
             self.producer_id,
             ops_per_payload=self.ops_per_payload,
             max_payload_size=self.max_payload_size,
             compression=self.compression,
         )
-        for seq, value in msgs:
-            self.produce(seq, value)
-        self._commit_meta(batch_id, base, len(msgs))
-
-
-def kafka_writestream(
-    stream: DataFrame,
-    topic: str,
-    bootstrap: str,
-    checkpoint: str,
-    meta_dir: str,
-    producer_id: int = 1,
-    partition: int = 0,
-):
-    """Streaming entry for the built-in-format path: foreachBatch
-    shapes each batch via :func:`kafka_batch_payload` and writes it
-    with Spark's own kafka sink (no client library needed), committing
-    seq metadata after the write returns."""
-    shaper = SeqStampedSink(meta_dir, producer_id)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        base = shaper._base_seq(batch_id)
-        payload = kafka_batch_payload(batch_df, batch_id, shaper, partition)
-        n = payload.count()
-        (
-            payload.write.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap)
-            .option("topic", topic)
-            .save()
-        )
-        shaper._commit_meta(batch_id, base, n)
-
-    return (
-        stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

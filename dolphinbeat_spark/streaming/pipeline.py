@@ -5,8 +5,9 @@ the handler mux (R1) becomes N streaming queries over one source,
 each with its own checkpointLocation (so each sink resumes from its
 own progress — replaces the reference's checkpoint manager C1-C3 and
 per-sink dedup F3); per-sink include/exclude filters (F2) are plain
-``filter_tables`` calls; ordered delivery is the OrderedFileSink /
-Kafka discipline.
+``filter_tables`` calls; ordered delivery is ``sinks/ordered.py``'s
+one ``SeqStampedSink`` path (``OrderedFileSink`` here; the daemon's
+kafka blocks run its Kafka encoders on the same path).
 
 Event-time operators (absent in the reference, SURVEY.md §2.8 —
 north-star additions): watermarked tumbling windows and session

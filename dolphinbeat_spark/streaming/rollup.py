@@ -5,8 +5,8 @@ partial aggregates merge into a persistent rollup table keyed by
 (bucket, group). Re-aggregability (sum-of-sums/counts, proven by
 tests/test_rollups.py) makes the merge exact; an ADDITIVE merge
 would double-count a replayed batch, so replay protection is
-explicit: per-batch marker files (the same discipline as
-OrderedFileSink's _seq_meta) skip already-applied batch ids.
+explicit: per-batch marker files (the same discipline as the ordered
+sinks' ``_seq_meta``) skip already-applied batch ids.
 
 :func:`merge_commit` here is the one crash-safe commit of every
 stateful parquet directory — the rollups, the apply-changes snapshots

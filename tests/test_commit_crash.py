@@ -1,11 +1,16 @@
 """Fault-injection crash matrix for the commit of every stateful sink.
 
-Each sink commits through ``streaming/rollup.merge_commit``. Here each
-filesystem step of a commit (``os.rename``, ``shutil.rmtree``,
+Each stateful sink commits through ``streaming/rollup.merge_commit``.
+Here each filesystem step of a commit (``os.rename``, ``shutil.rmtree``,
 ``DataFrameWriter.parquet``) is made to raise in turn, for every step a
 clean run reaches. After each crash the batch is replayed: the state
 must equal the no-crash run's, no aside directory may remain, and a
 second replay must change nothing.
+
+The ordered sinks get the same treatment over their own steps: the
+pyarrow parquet write and ``os.replace`` of the file sink, and each
+``produce``/``flush`` of the Kafka producer; the replay must deliver
+what a clean run delivers and record the same ``_seq_meta``.
 """
 
 from __future__ import annotations
@@ -14,8 +19,11 @@ import contextlib
 import os
 import shutil
 from datetime import datetime
+from pathlib import Path
 
+import pyarrow.parquet as pq
 import pytest
+from conftest import FakeProducer
 from pyspark.sql import DataFrameWriter
 
 from dolphinbeat_spark.envelope import ENVELOPE_SCHEMA, empty_op
@@ -30,6 +38,13 @@ from dolphinbeat_spark.sinks.incremental_agg import (
     merge_agg_batch_partitioned,
     read_agg_view,
 )
+from dolphinbeat_spark.sinks.ordered import (
+    JsonKafkaSink,
+    KafkaTransport,
+    OrderedFileSink,
+    ProtobufKafkaSink,
+    read_with_consumer_dedup,
+)
 from dolphinbeat_spark.streaming.rollup import (
     merge_rollup_batch,
     merge_rollup_batch_partitioned,
@@ -41,10 +56,18 @@ class Crash(Exception):
     pass
 
 
+_MERGE_STEPS = [
+    (os, "rename", "rename"),
+    (shutil, "rmtree", "rmtree"),
+    (DataFrameWriter, "parquet", "parquet"),
+]
+
+
 @contextlib.contextmanager
-def _faults(crash_at: int | None = None):
-    """Record every commit step; raise :class:`Crash` instead of taking
-    step number ``crash_at`` (1-based; ``None`` records only)."""
+def _faults(crash_at: int | None = None, targets=_MERGE_STEPS):
+    """Record every commit step, each an ``(owner, attribute, name)`` of
+    ``targets``; raise :class:`Crash` instead of taking step number
+    ``crash_at`` (1-based; ``None`` records only)."""
     steps: list[str] = []
 
     def wrap(name, fn):
@@ -57,9 +80,8 @@ def _faults(crash_at: int | None = None):
         return step
 
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(os, "rename", wrap("rename", os.rename))
-        mp.setattr(shutil, "rmtree", wrap("rmtree", shutil.rmtree))
-        mp.setattr(DataFrameWriter, "parquet", wrap("parquet", DataFrameWriter.parquet))
+        for owner, attr, name in targets:
+            mp.setattr(owner, attr, wrap(name, getattr(owner, attr)))
         yield steps
 
 
@@ -260,4 +282,99 @@ def test_agg_view_crash_matrix(spark, tmp_path, partitioned):
         lambda root: merge(root, b0, 0),
         lambda root: merge(root, b1, 1),
         state,
+    )
+
+
+# --- ordered sinks -----------------------------------------------------------
+
+_ORDERED_STEPS = [
+    (pq, "write_table", "write_table"),
+    (os, "replace", "replace"),
+    (FakeProducer, "produce", "produce"),
+    (FakeProducer, "flush", "flush"),
+]
+
+
+def _ordered_crash_matrix(tmp_path, setup, run, state, want_steps):
+    """``_crash_matrix`` for an ordered sink: ``state(root)`` is what
+    the last ``run`` delivered plus the ``_seq_meta`` files, and no
+    ``.``-prefixed temp file may outlive a replay."""
+    base = tmp_path / "base"
+    setup(str(base))
+
+    def fresh(name: str) -> str:
+        shutil.copytree(base, tmp_path / name)
+        return str(tmp_path / name)
+
+    clean = fresh("clean")
+    with _faults(targets=_ORDERED_STEPS) as steps:
+        run(clean)
+    want = state(clean)
+    assert steps == want_steps, steps
+    for n in range(1, len(steps) + 1):
+        root = fresh(f"crash{n}")
+        with _faults(crash_at=n, targets=_ORDERED_STEPS) as seen, pytest.raises(Crash):
+            run(root)
+        assert seen == steps[:n], (n, steps)
+        run(root)
+        assert state(root) == want, (n, steps[n - 1])
+        temps = [f for _, _, files in os.walk(root) for f in files if f.startswith(".")]
+        assert not temps, (n, temps)
+
+
+def _seq_meta(path: str) -> dict:
+    return {p.name: p.read_text() for p in sorted(Path(path).glob("*.json"))}
+
+
+_ORDERED0 = [("insert", i, None, {"id": str(i)}) for i in range(1, 4)]
+_ORDERED1 = [
+    ("update", 12, {"id": "1"}, {"id": "9"}),
+    ("insert", 10, None, {"id": "4"}),
+    ("delete", 11, {"id": "2"}, None),
+]
+
+
+def test_ordered_file_sink_crash_matrix(spark, tmp_path):
+    b0, b1 = _env(spark, _ORDERED0), _env(spark, _ORDERED1)
+
+    def state(root):
+        rows = read_with_consumer_dedup(spark, os.path.join(root, "out")).collect()
+        return [r.asDict(recursive=True) for r in rows], _seq_meta(
+            os.path.join(root, "out", "_seq_meta"))
+
+    _ordered_crash_matrix(
+        tmp_path,
+        lambda root: OrderedFileSink(os.path.join(root, "out"))(b0, 0),
+        lambda root: OrderedFileSink(os.path.join(root, "out"))(b1, 1),
+        state,
+        ["write_table", "replace", "replace"],
+    )
+
+
+@pytest.mark.parametrize("encoder", ["protobuf", "json"])
+def test_kafka_sink_crash_matrix(spark, tmp_path, encoder):
+    from dolphinbeat_spark.schema.registry import SchemaRegistry
+
+    b0, b1 = _env(spark, _ORDERED0), _env(spark, _ORDERED1)
+    reg = SchemaRegistry()
+    reg.apply_ddl("CREATE TABLE d.t (id INT PRIMARY KEY)")
+    delivered: dict[str, list] = {}
+
+    def run(root, batch, batch_id):
+        delivered[root] = log = []
+        transport = KafkaTransport(FakeProducer(log), "ops")
+        meta = os.path.join(root, "_seq_meta")
+        if encoder == "json":
+            sink = JsonKafkaSink(meta, produce=transport)
+        else:
+            sink = ProtobufKafkaSink(meta, reg, produce=transport, ops_per_payload=2)
+        sink(batch, batch_id)
+
+    n_msgs = 3 if encoder == "json" else 2
+    _ordered_crash_matrix(
+        tmp_path,
+        lambda root: run(root, b0, 0),
+        lambda root: run(root, b1, 1),
+        lambda root: (delivered[root], _seq_meta(os.path.join(root, "_seq_meta"))),
+        ["produce"] * n_msgs + ["flush", "replace"],
     )

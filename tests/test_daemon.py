@@ -8,6 +8,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 from dolphinbeat_spark.daemon import DaemonConfig, resolve_plan, source_options
 
 SAMPLE = Path(__file__).resolve().parent.parent / "dolphinbeat_spark" / "dolphinbeat.toml.sample"
@@ -328,3 +330,114 @@ def test_dry_run_prints_probe_plan(tmp_path, capsys):
     gc = DaemonConfig(gtid_enabled=False)
     mode = next(p for p in resolve_plan(gc)["probes"] if p["probe"] == "start mode")
     assert "file/pos" in mode["resolved"]
+
+
+def _kafka_toml(tmp_path, **cfg) -> Path:
+    keys = {"broker_list": "127.0.0.1:9092", "topic": "ops", **cfg}
+    body = "".join(f'    {k} = "{v}"\n' for k, v in keys.items())
+    p = tmp_path / "kafka.toml"
+    p.write_text(
+        f'mysql_addr = "127.0.0.1:3306"\nserver_id = 9\n'
+        f'[checkpoint]\n  dir = "{tmp_path}/ckp"\n'
+        f'[schema_tracker]\n  dir = "{tmp_path}/schema"\n'
+        f'[[sink]]\n  type = "kafka"\n  name = "k"\n  [sink.cfg]\n{body}'
+    )
+    return p
+
+
+@pytest.mark.parametrize(
+    "cfg,error",
+    [
+        ({"encoder": "avro"}, "encoder must be protobuf or json, got 'avro'"),
+        ({"compression": "lz4"}, "compression must be none, zlib or gzip, got 'lz4'"),
+        ({"encoder": "json", "compression": "zlib"}, "the json encoder takes compression none, got 'zlib'"),
+    ],
+    ids=["encoder", "compression", "json-compression"],
+)
+def test_dry_run_rejects_bad_kafka_encoder_and_compression(tmp_path, capsys, cfg, error):
+    """An unknown encoder or compression is a config error at review
+    time, never silently replaced by protobuf or no compression."""
+    from dolphinbeat_spark.daemon import main
+
+    assert main(["--config", str(_kafka_toml(tmp_path, **cfg)), "--dry-run"]) == 1
+    assert error in capsys.readouterr().err
+    ok = _kafka_toml(tmp_path, encoder="json", compression="none")
+    assert main(["--config", str(ok), "--dry-run"]) == 0
+
+
+def _run_kafka_daemon(spark, tmp_path, monkeypatch, producer, encoder):
+    """run() with one kafka block over the fixture source, the producer
+    client replaced by ``producer``; returns the query."""
+    from dolphinbeat_spark.daemon import run
+    from dolphinbeat_spark.schema.registry import SchemaRegistry
+    from dolphinbeat_spark.sinks import ordered
+    from dolphinbeat_spark.sources.fixture_source import register_fixture_source
+
+    register_fixture_source(spark)
+    reg = SchemaRegistry()
+    reg.apply_ddl(
+        "CREATE TABLE test.canal_test (id INT PRIMARY KEY, name VARCHAR(100), content BLOB)"
+    )
+    (tmp_path / "schema").mkdir()
+    reg.save(tmp_path / "schema" / "schema_snapshot.json")
+    compression = "zlib" if encoder == "protobuf" else "none"
+    cfg = DaemonConfig.from_toml(_kafka_toml(tmp_path, encoder=encoder, compression=compression))
+    assert cfg.validate() == []
+    monkeypatch.setattr(ordered, "_confluent_producer", lambda bootstrap: producer)
+    _, queries, _ = run(cfg, spark, source_format="dolphinbeat_fixture",
+                        source_options_extra={"batch_size": "100"}, trigger_once=True)
+    assert len(queries) == 1
+    return queries[0]
+
+
+@pytest.mark.parametrize("encoder", ["protobuf", "json"])
+def test_daemon_kafka_sink_delivers_source_ops_in_seq_order(spark, tmp_path, monkeypatch, encoder):
+    """The daemon's kafka block end to end: the fixture source's ops
+    reach the producer as seq-keyed messages on one topic-partition,
+    and decode back to the source's ops in total order."""
+    from conftest import FakeProducer
+
+    from dolphinbeat_spark.sinks import wire_protocol as wp
+    from dolphinbeat_spark.sinks.ordered import OP_RANK, decode_kafka_messages
+    from dolphinbeat_spark.sources.fixture_source import golden_envelope_df
+
+    producer = FakeProducer()
+    q = _run_kafka_daemon(spark, tmp_path, monkeypatch, producer, encoder)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    src = sorted(
+        golden_envelope_df(spark).collect(),
+        key=lambda r: (r["log_name"] or "", r["log_pos"], OP_RANK.get(r["op_type"], 3),
+                       r["row_index"] or 0),
+    )
+    assert {(t, p) for t, p, _, _ in producer.log} == {("ops", 0)}
+    keys = [int(k) for _, _, k, _ in producer.log]
+    assert keys == list(range(1, len(keys) + 1))
+    values = [v for _, _, _, v in producer.log]
+    if encoder == "protobuf":
+        dec, ops = wp.OperationDecoder(), []
+        for i, value in enumerate(values):
+            r = dec.feed(value, offset=i)
+            if r:
+                ops.extend(r.ops)
+        assert [(o["op_type"], o["log_pos"]) for o in ops] == \
+            [(r["op_type"], r["log_pos"]) for r in src]
+    else:
+        back = decode_kafka_messages(
+            spark.createDataFrame([(v,) for v in values], "value binary")).collect()
+        assert [r["seq"] for r in back] == keys
+        assert [(r["op_type"], r["log_pos"], r["row_index"]) for r in back] == \
+            [(r["op_type"], r["log_pos"], r["row_index"]) for r in src]
+    assert (tmp_path / "ckp" / "k" / "_seq_meta" / "0.json").exists()
+
+
+def test_daemon_kafka_sink_failed_delivery_commits_nothing(spark, tmp_path, monkeypatch):
+    """A message the broker rejects fails the daemon's batch with
+    DeliveryError, and the batch's seq meta is not recorded."""
+    from conftest import FakeProducer
+
+    q = _run_kafka_daemon(spark, tmp_path, monkeypatch, FakeProducer(fail_keys=[1]),
+                          "protobuf")
+    with pytest.raises(Exception, match="DeliveryError"):
+        q.awaitTermination(120)
+    assert not list((tmp_path / "ckp" / "k" / "_seq_meta").glob("*.json"))

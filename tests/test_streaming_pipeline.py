@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import time
 
+import pytest
+from conftest import FakeProducer
 from pyspark.sql import functions as F
 
 from dolphinbeat_spark.envelope import golden_sequences
@@ -88,40 +90,36 @@ def test_ordered_sink_replay_is_idempotent(spark, tmp_path):
     assert seqs == list(range(1, len(first) + 3))
 
 
-class _FakeProducer:
-    """confluent-shaped producer capturing the produce loop; delivery
-    callbacks fire synchronously (err=None, or the injected error)."""
+def _kafka_sink(kind, meta_dir, produce, producer_id=1, **protobuf_kw):
+    from dolphinbeat_spark.schema.registry import SchemaRegistry
+    from dolphinbeat_spark.sinks.ordered import JsonKafkaSink, ProtobufKafkaSink
 
-    def __init__(self, log, fail=False):
-        self.log, self.fail = log, fail
-        self.flushed = False
-
-    def produce(self, topic, partition, key, value, on_delivery):
-        self.log.append((topic, partition, key, value))
-        on_delivery("broker unreachable" if self.fail else None, None)
-
-    def poll(self, timeout):
-        pass
-
-    def flush(self):
-        self.flushed = True
+    if kind == "json":
+        return JsonKafkaSink(meta_dir, produce=produce, producer_id=producer_id)
+    reg = SchemaRegistry()
+    reg.apply_ddl(
+        "CREATE TABLE test.canal_test (id INT PRIMARY KEY, name VARCHAR(100), content BLOB)"
+    )
+    return ProtobufKafkaSink(meta_dir, reg, produce=produce, producer_id=producer_id,
+                             ops_per_payload=4, **protobuf_kw)
 
 
 def test_kafka_ordered_sink_produce_loop(spark, tmp_path):
-    """K1 produce-loop contract: one topic-partition, seq order,
-    replay regenerates identical bytes, new batch continues the seq."""
-    from dolphinbeat_spark.sinks.ordered import KafkaOrderedSink
+    """K1 produce-loop contract through the Kafka transport: one
+    topic-partition, seq-keyed messages produced in seq order, replay
+    regenerates identical bytes, a new batch continues the seq, and a
+    full local queue is drained and retried, not dropped."""
+    from dolphinbeat_spark.sinks.ordered import KafkaTransport
 
     env = golden_envelope_df(spark).filter(F.col("log_pos").isNotNull())
     log = []
-    sink = KafkaOrderedSink(
-        "ops", "broker:9092", meta_dir=str(tmp_path / "meta"), producer_id=7,
-        producer_factory=lambda: _FakeProducer(log),
-    )
+    producer = FakeProducer(log, queue_limit=3)
+    sink = _kafka_sink("json", str(tmp_path / "meta"), KafkaTransport(producer, "ops", 2),
+                       producer_id=7)
     sink(env, 0)
     n = len(log)
-    assert n == env.count()
-    assert all(t == "ops" and p == 0 for t, p, _, _ in log)
+    assert n == env.count() and producer.buffer_errors > 0
+    assert all(t == "ops" and p == 2 for t, p, _, _ in log)
     keys = [int(k.decode()) for _, _, k, _ in log]
     assert keys == list(range(1, n + 1))  # produced IN seq order
     import json as _json
@@ -143,40 +141,30 @@ def test_kafka_ordered_sink_produce_loop(spark, tmp_path):
 
 
 def test_kafka_ordered_sink_failed_delivery_aborts(spark, tmp_path):
-    from dolphinbeat_spark.sinks.ordered import KafkaOrderedSink
+    """For both encoders, a delivery the broker rejects, or a message
+    flush() reports as still queued, raises DeliveryError before the
+    seq meta commits; the replay of the batch then produces the clean
+    run's bytes."""
+    from dolphinbeat_spark.sinks.ordered import DeliveryError, KafkaTransport
 
     env = golden_envelope_df(spark).filter(F.col("log_pos").isNotNull())
-    sink = KafkaOrderedSink(
-        "ops", "broker:9092", meta_dir=str(tmp_path / "meta"),
-        producer_factory=lambda: _FakeProducer([], fail=True),
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="delivery failed"):
-        sink(env, 0)
-    # seq metadata must NOT commit -> Spark's retry of batch 0 reuses base 0
-    assert not (tmp_path / "meta" / "0.json").exists()
-
-
-def test_kafka_batch_payload_shape(spark, tmp_path):
-    """Built-in-format path: (key, value, partition) columns, binary,
-    fixed partition, value carries seq + producer_id."""
-    from dolphinbeat_spark.sinks.ordered import SeqStampedSink, kafka_batch_payload
-
-    env = golden_envelope_df(spark).filter(F.col("log_pos").isNotNull())
-    shaper = SeqStampedSink(str(tmp_path / "meta"), producer_id=3)
-    payload = kafka_batch_payload(env, 0, shaper, partition=5)
-    assert [f.name for f in payload.schema.fields] == ["key", "value", "partition"]
-    assert payload.schema["key"].dataType.typeName() == "binary"
-    assert payload.schema["value"].dataType.typeName() == "binary"
-    rows = payload.collect()
-    assert {r["partition"] for r in rows} == {5}
-    assert payload.rdd.getNumPartitions() == 1  # one write task -> ordered produce
-    import json as _json
-
-    decoded = [_json.loads(bytes(r["value"]).decode()) for r in rows]
-    assert [d["seq"] for d in decoded] == list(range(1, len(rows) + 1))
-    assert all(d["producer_id"] == 3 for d in decoded)
+    for kind in ("json", "protobuf"):
+        clean_dir = tmp_path / f"clean-{kind}"
+        clean = []
+        _kafka_sink(kind, str(clean_dir), KafkaTransport(FakeProducer(clean), "ops"))(env, 0)
+        for fault, bad in [("failed-delivery", FakeProducer(fail_keys=[2])),
+                           ("unflushed", FakeProducer(unflushed=1))]:
+            meta = tmp_path / f"{kind}-{fault}"
+            sink = _kafka_sink(kind, str(meta), KafkaTransport(bad, "ops"))
+            with pytest.raises(DeliveryError):
+                sink(env, 0)
+            # seq metadata must NOT commit -> Spark's retry of batch 0 reuses base 0
+            assert not (meta / "0.json").exists(), (kind, fault)
+            replayed = []
+            sink.produce = KafkaTransport(FakeProducer(replayed), "ops")
+            sink(env, 0)
+            assert replayed == clean, (kind, fault)
+            assert (meta / "0.json").read_text() == (clean_dir / "0.json").read_text()
 
 
 def test_resume_from_checkpoint_no_loss_no_dup(spark, tmp_path):
@@ -268,75 +256,94 @@ def test_rate_limited_source_bounds_batches(spark, tmp_path):
     assert len([b for b in batch_sizes if b]) >= 4
 
 
-def test_kafka_payload_decode_roundtrip(spark, tmp_path):
-    """Producer payload -> consumer decoder round-trip (the reference's
-    client decoder contract, decoder.go): identical envelope rows back,
-    duplicated transport messages collapsed by seq-dedup."""
-    from dolphinbeat_spark.sinks.ordered import (
-        SeqStampedSink,
-        decode_kafka_messages,
-        kafka_batch_payload,
-    )
+#: sha256 over (seq, message) of the JSON messages for the golden
+#: envelope (producer 7, base seq 0), as the window-ordered JSON sink
+#: produced them before the driver-side order replaced it
+_GOLDEN_JSON_DIGEST = "4134b0595b63d647b659046f0404f9f5da4b33764f0ebc4c3a989433d5638098"
+#: the same for test_wire_protocol's scrambled fixture envelope in three
+#: partitions (NULL coordinates, reversed order), producer 3, base 1000
+_SCRAMBLED_JSON_DIGEST = "2b7eacaeee335a1e42a4359dfdfa1e32c4ae70a813738a2026834687d0665e30"
 
-    env = golden_envelope_df(spark).filter(F.col("log_pos").isNotNull())
-    shaper = SeqStampedSink(str(tmp_path / "meta"), producer_id=9)
-    payload = kafka_batch_payload(env, 0, shaper, partition=0)
+
+def _digest(msgs) -> str:
+    import hashlib
+
+    h = hashlib.sha256()
+    for seq, value in msgs:
+        h.update(seq.to_bytes(8, "big") + value)
+    return h.hexdigest()
+
+
+def test_kafka_payload_decode_roundtrip(spark, tmp_path):
+    """JSON messages -> consumer decoder round-trip (the reference's
+    client decoder contract, decoder.go): byte-identical to the pinned
+    messages, identical envelope rows back, duplicated transport
+    messages collapsed by seq-dedup."""
+    import json as _json
+
+    from dolphinbeat_spark.envelope import ENVELOPE_SCHEMA
+    from dolphinbeat_spark.sinks.ordered import JsonKafkaSink, decode_kafka_messages
+    from test_wire_protocol import _fixture_envelope_rows
+
+    env = golden_envelope_df(spark)
+    msgs = []
+    JsonKafkaSink(str(tmp_path / "meta"), produce=lambda seq, v: msgs.append((seq, v)),
+                  producer_id=7)(env, 0)
+    assert _digest(msgs) == _GOLDEN_JSON_DIGEST
+
+    rows, _ = _fixture_envelope_rows()
+    scrambled = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), ENVELOPE_SCHEMA)
+    meta = tmp_path / "meta3"
+    meta.mkdir()
+    (meta / "41.json").write_text(_json.dumps({"base_seq": 1000, "n_rows": 0}))
+    got = []
+    JsonKafkaSink(str(meta), produce=lambda seq, v: got.append((seq, v)),
+                  producer_id=3)(scrambled, 42)
+    assert got[0][0] == 1001 and _digest(got) == _SCRAMBLED_JSON_DIGEST
+
     # simulate at-least-once transport: every message delivered twice
-    doubled = payload.unionByName(payload)
-    decoded = decode_kafka_messages(doubled)
+    values = spark.createDataFrame([(v,) for _, v in msgs * 2], "value binary")
+    decoded = decode_kafka_messages(values)
     assert decoded.count() == env.count()  # overlaps collapsed
-    seqs = [r["seq"] for r in decoded.collect()]
-    assert seqs == list(range(1, env.count() + 1))
+    back = decoded.collect()
+    assert [r["seq"] for r in back] == list(range(1, env.count() + 1))
     # envelope fields survive the JSON round-trip
     orig = {r["log_pos"]: r["op_type"] for r in env.collect()}
-    got = {r["log_pos"]: r["op_type"] for r in decoded.collect()}
-    assert got == orig
-    ins = decoded.filter(F.col("op_type") == "insert").orderBy("seq").first()
-    assert ins["after"]["id"] is not None and ins["producer_id"] == 9
+    assert {r["log_pos"]: r["op_type"] for r in back} == orig
+    ins = next(r for r in back if r["op_type"] == "insert")
+    assert ins["after"]["id"] is not None and ins["producer_id"] == 7
 
 
 def test_fragmentation_roundtrip(spark, tmp_path):
-    """K3/K4: oversized message values split into bounded fragments and
-    reassemble byte-identically — with duplicate fragment delivery
-    collapsed (at-least-once transport)."""
-    from dolphinbeat_spark.sinks.ordered import (
-        SeqStampedSink,
-        decode_kafka_messages,
-        defragment_messages,
-        fragment_messages,
-        kafka_batch_payload,
-    )
+    """K3/K4 through the sink: with a broker limit below the payload
+    size every message stays within it, and the client decoder
+    reassembles the fragments — each delivered twice — into the ops
+    of the unfragmented run."""
+    from dolphinbeat_spark.sinks import wire_protocol as wp
 
-    env = golden_envelope_df(spark).filter(F.col("log_pos").isNotNull())
-    shaper = SeqStampedSink(str(tmp_path / "meta"), producer_id=4)
-    payload = kafka_batch_payload(env, 0, shaper, partition=0)
-    orig = {bytes(r["key"]): bytes(r["value"]) for r in payload.collect()}
+    env = golden_envelope_df(spark)
 
-    frags = fragment_messages(payload, max_bytes=64)
-    fr = frags.collect()
-    assert all(len(bytes(r["value"])) <= 64 for r in fr)  # broker limit held
-    assert any(r["n_frags"] > 1 for r in fr)  # envelope JSON does exceed 64B
-    # fragment count matches the value sizes
-    import math
+    def produced(max_payload_size):
+        msgs = []
+        sink = _kafka_sink("protobuf", str(tmp_path / f"meta{max_payload_size}"),
+                           lambda seq, v: msgs.append((seq, v)),
+                           max_payload_size=max_payload_size)
+        sink(env, 0)
+        return msgs
 
-    per_key = {}
-    for r in fr:
-        base = bytes(r["key"]).decode().split(":")[0]
-        per_key.setdefault(base, set()).add((r["frag_idx"], r["n_frags"]))
-    for base, pairs in per_key.items():
-        n = next(iter(pairs))[1]
-        assert {i for i, _ in pairs} == set(range(n))
-        assert n == max(1, math.ceil(len(orig[base.encode()]) / 64))
+    def ops(msgs):
+        dec, out = wp.OperationDecoder(), []
+        for i, (_, value) in enumerate(msgs):
+            r = dec.feed(value, offset=i)
+            if r:
+                out.extend(r.ops)
+        return out
 
-    # duplicate delivery of every fragment, then reassemble
-    doubled = frags.unionByName(frags)
-    back = defragment_messages(doubled)
-    got = {bytes(r["key"]): bytes(r["value"]) for r in back.collect()}
-    assert got == orig  # byte-identical reassembly
-    # and the reassembled stream decodes like the unfragmented one
-    decoded = decode_kafka_messages(back)
-    assert decoded.count() == env.count()
-    assert [r["seq"] for r in decoded.collect()] == list(range(1, env.count() + 1))
+    whole, frags = produced(1 << 20), produced(64)
+    assert len(frags) > len(whole)
+    assert all(len(wp.decode_message(v)["payload"]) <= 64 for _, v in frags)
+    doubled = [m for m in frags for _ in range(2)]
+    assert ops(doubled) == ops(whole) and len(ops(whole)) == env.count()
 
 
 def test_protobuf_sink_under_writestream(spark, tmp_path):

@@ -20,7 +20,8 @@ Exits 0 with a skip message when MYSQL_DSN is unset (CI-safe). The
 MySQL half needs no extra package: statements, probes and the stream
 all ride the in-repo native replication client
 (`sources/repl_client.py`). The Kafka half needs `confluent_kafka`
-(import-gated by name).
+(import-gated by name) and runs the daemon's protobuf kafka path,
+`ProtobufKafkaSink` over a `KafkaTransport`.
 
 The MySQL user needs REPLICATION SLAVE, REPLICATION CLIENT and DDL
 rights on the smoke database; binlog_format=ROW and
@@ -158,20 +159,32 @@ def main() -> int:
         "ALTER must bump the registry schema_version between inserts"
     report["steps"].append(f"stream-verified ({len(rows)} ops)")
 
-    # 4. optional Kafka half: ordered produce (K1/K2 — real broker,
-    #    idempotent producer, acks=all) + consume back and check the
-    #    seq chain + payload fidelity on the JSON envelope path
+    # 4. optional Kafka half: the daemon's protobuf kafka path (K1/K2 —
+    #    real broker, idempotent producer, acks=all, the batch recorded
+    #    only after every delivery is confirmed) + consume back and
+    #    check the seq chain and the two inserts with the client
+    #    decoder port
     if bootstrap:
-        from dolphinbeat_spark.sinks.ordered import KafkaOrderedSink
-
-        n_sent = spark.sql("SELECT count(*) FROM live_smoke").first()[0]
-        topic = f"dolphinbeat_smoke_{int(time.time())}"
-        sink = KafkaOrderedSink(
-            topic=topic, bootstrap=bootstrap,
-            meta_dir=tempfile.mkdtemp(prefix="live_smoke_seq_"))
-        sink(spark.sql("SELECT * FROM live_smoke"), batch_id=0)
-
         from confluent_kafka import Consumer
+
+        from dolphinbeat_spark.sinks import wire_protocol as wp
+        from dolphinbeat_spark.sinks.ordered import (
+            KafkaTransport, ProtobufKafkaSink, _confluent_producer, op_row_tails,
+        )
+
+        # the driver's registry learns the stream's ALTER, so the
+        # post-ALTER insert carries the new column's TableDef
+        for d in ddls:
+            registry.apply_ddl(d.statement, default_db=d.db or cfg["db"],
+                               position=(d.log_name, d.log_pos))
+        topic = f"dolphinbeat_smoke_{int(time.time())}"
+        sink = ProtobufKafkaSink(
+            meta_dir=tempfile.mkdtemp(prefix="live_smoke_seq_"),
+            registry=registry,
+            produce=KafkaTransport(_confluent_producer(bootstrap), topic),
+        )
+        sink(spark.sql("SELECT * FROM live_smoke"), batch_id=0)
+        n_sent = json.loads((sink.meta_dir / "0.json").read_text())["n_rows"]
 
         cons = Consumer({"bootstrap.servers": bootstrap,
                          "group.id": f"{topic}_check",
@@ -181,15 +194,23 @@ def main() -> int:
         while len(got) < n_sent and time.time() < deadline:
             msg = cons.poll(1.0)
             if msg is not None and msg.error() is None:
-                got.append(msg)
+                got.append(msg.value())
         cons.close()
         assert len(got) == n_sent, \
             f"consumed {len(got)} of {n_sent} produced messages"
-        vals = [json.loads(m.value()) for m in got]
-        seqs = [v["seq"] for v in vals]
+        seqs = [wp.decode_message(v)["seq"] for v in got]
         assert seqs == list(range(seqs[0], seqs[0] + len(seqs))), \
             "sequence numbers must be contiguous in produce order (K2)"
-        assert sum(1 for v in vals if v.get("op_type") == "insert") == 2
+        dec, ops = wp.OperationDecoder(), []
+        for i, v in enumerate(got):
+            r = dec.feed(v, offset=i)
+            if r:
+                ops.extend(r.ops)
+        afters = [op_row_tails(o)[0][-2] for o in ops if o["op_type"] == "insert"
+                  and (o.get("table") or {}).get("name") == TABLE]
+        assert [a.get("name") for a in afters] == ["before-ddl", "after-ddl"]
+        assert afters[1].get("score") == "42", \
+            "the post-ALTER insert must carry the new column on the wire"
         report["steps"].append(f"kafka-roundtrip ({len(got)} msgs)")
     else:
         report["steps"].append("kafka skipped (KAFKA_BOOTSTRAP unset)")
