@@ -290,7 +290,7 @@ def run(cfg: DaemonConfig, spark=None, source_format: str = "dolphinbeat_binlog"
     from dolphinbeat_spark.sources.binlog_source import BinlogDataSource
     from dolphinbeat_spark.streaming.http_server import ControlServer
     from dolphinbeat_spark.streaming.metrics import PipelineMetrics
-    from dolphinbeat_spark.streaming.pipeline import SinkSpec, build_pipeline
+    from dolphinbeat_spark.streaming.pipeline import SinkSpec, build_pipeline, start_op_counts
 
     plan = resolve_plan(cfg)
     spark = spark or get_spark("dolphinbeat")
@@ -367,10 +367,11 @@ def run(cfg: DaemonConfig, spark=None, source_format: str = "dolphinbeat_binlog"
         elif s["type"] == "kafka":
             queries.append(_start_kafka_sink(stream, s, cfg, trigger_once))
     if file_specs:
-        queries += build_pipeline(
-            stream, file_specs, trigger_once=trigger_once, metrics=metrics,
-            metrics_checkpoint=str(Path(cfg.checkpoint_dir) / "_metrics"),
-        )
+        queries += build_pipeline(stream, file_specs, trigger_once=trigger_once)
+    if plan["sinks"]:
+        # one counting query for any mix of sinks (kafka-only included)
+        queries.append(start_op_counts(
+            stream, metrics, str(Path(cfg.checkpoint_dir) / "_metrics"), trigger_once))
 
     snap = Path(cfg.tracker_dir) / "schema_snapshot.json"
     registry = SchemaRegistry.load(str(snap)) if snap.exists() else SchemaRegistry()

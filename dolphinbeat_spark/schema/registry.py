@@ -38,6 +38,11 @@ class DdlError(ValueError):
     """DDL could not be parsed/applied — dead-letter it (reference C5)."""
 
 
+class SchemaDriftError(ValueError):
+    """A row names a column its resolved TableDef lacks: the row was
+    decoded under a newer schema than this registry holds."""
+
+
 # MySQL type name → Spark type, per SURVEY.md §1.2 inventory
 _TYPE_MAP: list[tuple[re.Pattern, object]] = [
     (re.compile(r"^tinyint\(1\)$"), T.BooleanType()),

@@ -42,6 +42,8 @@ from __future__ import annotations
 import zlib
 from dataclasses import dataclass, field
 
+from dolphinbeat_spark.schema.registry import SchemaDriftError
+
 # ---------------------------------------------------------------------------
 # proto3 wire primitives (public encoding spec)
 # ---------------------------------------------------------------------------
@@ -277,11 +279,21 @@ def _as_map(x) -> dict:
     return x if isinstance(x, dict) else dict(x)
 
 
-def _image(row: dict, image: str, col_names: list[str]):
+def _image(row: dict, image: str, col_names: list[str], op: dict):
+    """``row``'s ``image`` columns in TableDef order (``op`` is the
+    Operation's envelope row); raises SchemaDriftError rather than drop
+    a column the TableDef lacks."""
     vals = _as_map(row.get(image))
     nulls = _as_map(row.get(f"{image}_null"))
     if not vals and not nulls:
         return None
+    unknown = (vals.keys() | nulls.keys()).difference(col_names)
+    if unknown:
+        raise SchemaDriftError(
+            f"{image} image of a {op['op_type']} on {op.get('db')}.{op.get('table')} "
+            f"(schema_version {op.get('schema_version')}) has columns {sorted(unknown)} "
+            f"that its TableDef {col_names} lacks"
+        )
     return [(vals.get(c), bool(nulls.get(c))) for c in col_names]
 
 
@@ -374,13 +386,13 @@ def _encode_operation(row: dict, table_def: tuple | None) -> bytes:
                 r = r if isinstance(r, dict) else r.asDict()
                 out += f_bytes(
                     14,
-                    encode_row(_image(r, "before", cols), _image(r, "after", cols)),
+                    encode_row(_image(r, "before", cols, row), _image(r, "after", cols, row)),
                     emit_empty=True,
                 )
         else:
             out += f_bytes(
                 14,
-                encode_row(_image(row, "before", cols), _image(row, "after", cols)),
+                encode_row(_image(row, "before", cols, row), _image(row, "after", cols, row)),
                 emit_empty=True,
             )
     if op_type in ("commit", "ddl"):

@@ -17,7 +17,6 @@ windows over the envelope stream.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,17 +42,9 @@ def build_pipeline(
     envelope_stream: DataFrame,
     sinks: list[SinkSpec],
     trigger_once: bool = True,
-    metrics=None,
-    metrics_checkpoint: str | None = None,
 ) -> list[StreamingQuery]:
     """Fan one envelope stream out to N ordered sinks (R1 + F2 + K1).
-
-    ``metrics`` (a PipelineMetrics) receives per-op-type counts once
-    per batch of the UNFILTERED stream, via a dedicated counting query
-    — daemon-level counters like the reference's (metrics.go:21-51
-    count at the canal, before any sink filter), so fanning out to N
-    sinks does NOT multiply trx_total/iud_total by N.
-    ``metrics_checkpoint`` defaults to ``<first sink ckp>_metrics``."""
+    The op counters are :func:`start_op_counts`' own query."""
     queries = []
     for spec in sinks:
         filtered = filter_tables(envelope_stream, spec.include, spec.exclude)
@@ -67,36 +58,43 @@ def build_pipeline(
         if trigger_once:
             writer = writer.trigger(availableNow=True)
         queries.append(writer.start())
-    if metrics is not None and sinks:
-        def count_ops(batch_df, batch_id) -> None:
-            # one tiny agg per batch: op-type counts → counter families
-            metrics.record_ops(
-                {
-                    r["op_type"]: r["n"]
-                    for r in batch_df.groupBy("op_type")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-            )
-
-        mw = (
-            envelope_stream.writeStream.foreachBatch(count_ops)
-            .option(
-                "checkpointLocation",
-                # default: a SIBLING of the sink checkpoints, named
-                # independently of any sink — reordering/renaming the
-                # [[sink]] blocks must not relocate this checkpoint
-                # (that would recount retained history into the
-                # counters on restart)
-                metrics_checkpoint
-                or str(Path(sinks[0].checkpoint_dir).parent / "_pipeline_metrics"),
-            )
-            .queryName("pipeline_metrics")
-        )
-        if trigger_once:
-            mw = mw.trigger(availableNow=True)
-        queries.append(mw.start())
     return queries
+
+
+def start_op_counts(
+    envelope_stream: DataFrame,
+    metrics,
+    checkpoint_dir: str,
+    trigger_once: bool = True,
+) -> StreamingQuery:
+    """The one op-counting query of a pipeline: ``metrics`` (a
+    PipelineMetrics) receives per-op-type counts once per batch of the
+    UNFILTERED stream — daemon-level counters like the reference's
+    (metrics.go:21-51 count at the canal, before any sink filter), so
+    N sinks of any kind do NOT multiply trx_total/iud_total by N.
+    ``checkpoint_dir`` should be named independently of any sink:
+    reordering or renaming sinks must not relocate it (that would
+    recount retained history into the counters on restart)."""
+
+    def count_ops(batch_df, batch_id) -> None:
+        # one tiny agg per batch: op-type counts → counter families
+        metrics.record_ops(
+            {
+                r["op_type"]: r["n"]
+                for r in batch_df.groupBy("op_type")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+        )
+
+    writer = (
+        envelope_stream.writeStream.foreachBatch(count_ops)
+        .option("checkpointLocation", checkpoint_dir)
+        .queryName("pipeline_metrics")
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def windowed_op_counts(

@@ -1441,6 +1441,8 @@ def test_file_replay_encodes_on_one_task_per_file(spark, tmp_path):
     registry = SchemaRegistry()
     registry.apply_ddl("CREATE TABLE test.a (id INT PRIMARY KEY, v VARCHAR(40))")
     registry.apply_ddl("CREATE TABLE test.b (id INT PRIMARY KEY, n BIGINT)")
+    # the series' mid-file ALTER: its later rows carry column w
+    registry.apply_ddl("ALTER TABLE test.a ADD COLUMN w INT")
     messages, tasks = [], []
     sink = ProtobufKafkaSink(meta_dir=str(tmp_path / "meta"), registry=registry,
                              produce=lambda seq, v: messages.append(v))

@@ -365,36 +365,53 @@ def test_dry_run_rejects_bad_kafka_encoder_and_compression(tmp_path, capsys, cfg
     assert main(["--config", str(ok), "--dry-run"]) == 0
 
 
-def _run_kafka_daemon(spark, tmp_path, monkeypatch, producer, encoder):
-    """run() with one kafka block over the fixture source, the producer
-    client replaced by ``producer``; returns the query."""
+@pytest.fixture
+def kafka_daemon(spark, tmp_path, monkeypatch):
+    """``start(producer, encoder)``: run() with one kafka block over the
+    fixture source, the producer client replaced by ``producer`` and the
+    control server on an ephemeral port; returns (kafka query, op-count
+    query, control server), all stopped at teardown."""
     from dolphinbeat_spark.daemon import run
     from dolphinbeat_spark.schema.registry import SchemaRegistry
     from dolphinbeat_spark.sinks import ordered
     from dolphinbeat_spark.sources.fixture_source import register_fixture_source
 
-    register_fixture_source(spark)
-    reg = SchemaRegistry()
-    reg.apply_ddl(
-        "CREATE TABLE test.canal_test (id INT PRIMARY KEY, name VARCHAR(100), content BLOB)"
-    )
-    (tmp_path / "schema").mkdir()
-    reg.save(tmp_path / "schema" / "schema_snapshot.json")
-    compression = "zlib" if encoder == "protobuf" else "none"
-    cfg = DaemonConfig.from_toml(_kafka_toml(tmp_path, encoder=encoder, compression=compression))
-    assert cfg.validate() == []
-    monkeypatch.setattr(ordered, "_confluent_producer", lambda bootstrap: producer)
-    _, queries, _ = run(cfg, spark, source_format="dolphinbeat_fixture",
-                        source_options_extra={"batch_size": "100"}, trigger_once=True)
-    assert len(queries) == 1
-    return queries[0]
+    started = []
+
+    def start(producer, encoder):
+        register_fixture_source(spark)
+        reg = SchemaRegistry()
+        reg.apply_ddl(
+            "CREATE TABLE test.canal_test (id INT PRIMARY KEY, name VARCHAR(100), content BLOB)"
+        )
+        (tmp_path / "schema").mkdir()
+        reg.save(tmp_path / "schema" / "schema_snapshot.json")
+        compression = "zlib" if encoder == "protobuf" else "none"
+        cfg = DaemonConfig.from_toml(
+            _kafka_toml(tmp_path, encoder=encoder, compression=compression))
+        cfg.http_addr = "127.0.0.1:0"
+        assert cfg.validate() == []
+        monkeypatch.setattr(ordered, "_confluent_producer", lambda bootstrap: producer)
+        _, queries, server = run(cfg, spark, source_format="dolphinbeat_fixture",
+                                 source_options_extra={"batch_size": "100"},
+                                 trigger_once=True)
+        started.append((queries, server))
+        assert [q.name for q in queries] == ["k", "pipeline_metrics"]
+        return queries[0], queries[1], server
+
+    yield start
+    for queries, server in started:
+        server.stop()
+        for q in queries:
+            q.stop()
 
 
 @pytest.mark.parametrize("encoder", ["protobuf", "json"])
-def test_daemon_kafka_sink_delivers_source_ops_in_seq_order(spark, tmp_path, monkeypatch, encoder):
+def test_daemon_kafka_sink_delivers_source_ops_in_seq_order(spark, tmp_path, kafka_daemon, encoder):
     """The daemon's kafka block end to end: the fixture source's ops
     reach the producer as seq-keyed messages on one topic-partition,
-    and decode back to the source's ops in total order."""
+    and decode back to the source's ops in total order; the daemon's
+    op counters (``/metrics``) count them too."""
     from conftest import FakeProducer
 
     from dolphinbeat_spark.sinks import wire_protocol as wp
@@ -402,9 +419,10 @@ def test_daemon_kafka_sink_delivers_source_ops_in_seq_order(spark, tmp_path, mon
     from dolphinbeat_spark.sources.fixture_source import golden_envelope_df
 
     producer = FakeProducer()
-    q = _run_kafka_daemon(spark, tmp_path, monkeypatch, producer, encoder)
+    q, counts_q, server = kafka_daemon(producer, encoder)
     q.awaitTermination(120)
-    assert q.exception() is None
+    counts_q.awaitTermination(120)
+    assert q.exception() is None and counts_q.exception() is None
     src = sorted(
         golden_envelope_df(spark).collect(),
         key=lambda r: (r["log_name"] or "", r["log_pos"], OP_RANK.get(r["op_type"], 3),
@@ -429,15 +447,21 @@ def test_daemon_kafka_sink_delivers_source_ops_in_seq_order(spark, tmp_path, mon
         assert [(r["op_type"], r["log_pos"], r["row_index"]) for r in back] == \
             [(r["op_type"], r["log_pos"], r["row_index"]) for r in src]
     assert (tmp_path / "ckp" / "k" / "_seq_meta" / "0.json").exists()
+    counters = server.metrics.counters()
+    assert counters["trx_total"] == sum(r["op_type"] == "commit" for r in src)
+    assert counters["iud_total"] == sum(r["op_type"] in ("insert", "update", "delete")
+                                        for r in src)
+    assert counters["trx_total"] > 0 and counters["iud_total"] > 0
+    code, text = server.handle("GET", "/metrics")
+    assert code == 200 and f"trx_total {counters['trx_total']}" in text
 
 
-def test_daemon_kafka_sink_failed_delivery_commits_nothing(spark, tmp_path, monkeypatch):
+def test_daemon_kafka_sink_failed_delivery_commits_nothing(tmp_path, kafka_daemon):
     """A message the broker rejects fails the daemon's batch with
     DeliveryError, and the batch's seq meta is not recorded."""
     from conftest import FakeProducer
 
-    q = _run_kafka_daemon(spark, tmp_path, monkeypatch, FakeProducer(fail_keys=[1]),
-                          "protobuf")
+    q, _, _ = kafka_daemon(FakeProducer(fail_keys=[1]), "protobuf")
     with pytest.raises(Exception, match="DeliveryError"):
         q.awaitTermination(120)
     assert not list((tmp_path / "ckp" / "k" / "_seq_meta").glob("*.json"))

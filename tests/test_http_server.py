@@ -149,12 +149,13 @@ def test_debug_pprof_routes(server):
 
 def test_pipeline_feeds_metrics_counters_once(spark, tmp_path):
     """End-to-end: build_pipeline over the golden envelope stream with
-    TWO sinks feeds the op counters EXACTLY ONCE — daemon-level
-    counters like the reference's, not once per sink."""
+    TWO sinks, plus its start_op_counts query, feeds the op counters
+    EXACTLY ONCE — daemon-level counters like the reference's, not once
+    per sink."""
     from dolphinbeat_spark.envelope import golden_sequences
     from dolphinbeat_spark.sources.fixture_source import register_fixture_source
     from dolphinbeat_spark.streaming.metrics import PipelineMetrics
-    from dolphinbeat_spark.streaming.pipeline import SinkSpec, build_pipeline
+    from dolphinbeat_spark.streaming.pipeline import SinkSpec, build_pipeline, start_op_counts
 
     register_fixture_source(spark)
     stream = spark.readStream.format("dolphinbeat_fixture").option(
@@ -166,7 +167,9 @@ def test_pipeline_feeds_metrics_counters_once(spark, tmp_path):
                  checkpoint_dir=str(tmp_path / f"ckp{i}"))
         for i in (1, 2)
     ]
-    for q in build_pipeline(stream, specs, trigger_once=True, metrics=m):
+    queries = build_pipeline(stream, specs, trigger_once=True)
+    queries.append(start_op_counts(stream, m, str(tmp_path / "_metrics")))
+    for q in queries:
         q.awaitTermination(120)
 
     got = m.counters()

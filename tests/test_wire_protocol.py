@@ -805,20 +805,22 @@ def test_operation_encoder_keys_table_defs_by_schema_version(spark, tmp_path):
     reg = _registry()
     v1 = reg.version
     enc = wp.OperationEncoder(reg)
-    row = dict(op_type="insert", db="test", table="canal_test", log_pos=10,
-               after={"id": "1", "name": "a", "content": "x", "age": "7"},
-               after_null={"id": False, "name": False, "content": False, "age": False})
+    row1 = dict(op_type="insert", db="test", table="canal_test", log_pos=10,
+                after={"id": "1", "name": "a", "content": "x"},
+                after_null={"id": False, "name": False, "content": False})
+    row2 = dict(row1, after=dict(row1["after"], age="7"),
+                after_null=dict(row1["after_null"], age=False))
 
     def columns(op_bytes):
         return [c["name"] for c in wp.decode_operation(op_bytes)["table"]["columns"]]
 
-    assert columns(enc(dict(row, schema_version=v1))) == ["id", "name", "content"]
-    assert columns(enc(dict(row, schema_version=None))) == ["id", "name", "content"]
+    assert columns(enc(dict(row1, schema_version=v1))) == ["id", "name", "content"]
+    assert columns(enc(dict(row1, schema_version=None))) == ["id", "name", "content"]
     v2 = reg.apply_ddl("ALTER TABLE test.canal_test ADD COLUMN age INT")
     # the same encoder: a new version is a new key, never a stale hit
-    assert columns(enc(dict(row, schema_version=v2))) == ["id", "name", "content", "age"]
-    assert columns(enc(dict(row, schema_version=None))) == ["id", "name", "content", "age"]
-    assert columns(enc(dict(row, schema_version=v1))) == ["id", "name", "content"]
+    assert columns(enc(dict(row2, schema_version=v2))) == ["id", "name", "content", "age"]
+    assert columns(enc(dict(row2, schema_version=None))) == ["id", "name", "content", "age"]
+    assert columns(enc(dict(row1, schema_version=v1))) == ["id", "name", "content"]
 
     # and through the sink: batch 0 before the ALTER, batch 1 after it
     reg = _registry()
@@ -826,14 +828,14 @@ def test_operation_encoder_keys_table_defs_by_schema_version(spark, tmp_path):
     sink = ProtobufKafkaSink(meta_dir=str(tmp_path / "meta"), registry=reg,
                              produce=lambda seq, v: captured.append(v))
 
-    def batch(version):
+    def batch(row, version):
         op = empty_op(**dict(row, schema_version=version))
         return spark.createDataFrame(
             [tuple(op[f.name] for f in ENVELOPE_SCHEMA.fields)], ENVELOPE_SCHEMA)
 
-    sink(batch(reg.version), batch_id=0)
+    sink(batch(row1, reg.version), batch_id=0)
     v2 = reg.apply_ddl("ALTER TABLE test.canal_test ADD COLUMN age INT")
-    sink(batch(v2), batch_id=1)
+    sink(batch(row2, v2), batch_id=1)
     got = []
     for v in captured:
         m = wp.decode_message(v)
@@ -844,3 +846,44 @@ def test_operation_encoder_keys_table_defs_by_schema_version(spark, tmp_path):
         ["id", "name", "content"], ["1", "a", "x"],
         ["id", "name", "content", "age"], ["1", "a", "x", "7"],
     ]
+
+
+def _drifted_insert(reg: SchemaRegistry) -> dict:
+    """An insert decoded under ``reg.version + 1`` (``score`` added)
+    while ``reg`` is still at its version."""
+    reg.apply_ddl("CREATE TABLE d.t (id INT PRIMARY KEY, name VARCHAR(20))")
+    return dict(op_type="insert", db="d", table="t", log_name="binlog.000001",
+                log_pos=10, row_index=0, schema_version=reg.version + 1,
+                after={"id": "1", "name": "a", "score": "9"},
+                after_null={"id": False, "name": False, "score": False})
+
+
+def test_encoding_a_column_the_table_def_lacks_raises():
+    """A row image naming a column its TableDef lacks raises
+    SchemaDriftError instead of dropping the column from the wire."""
+    from dolphinbeat_spark.schema.registry import SchemaDriftError
+
+    reg = SchemaRegistry()
+    row = _drifted_insert(reg)
+    with pytest.raises(SchemaDriftError, match=r"\['score'\]"):
+        wp.OperationEncoder(reg)(row)
+    packed = dict(row, __rows=[{"after": row["after"], "after_null": row["after_null"]}])
+    with pytest.raises(SchemaDriftError, match="d.t"):
+        wp.OperationEncoder(reg)(packed)
+
+
+def test_protobuf_sink_fails_a_drifted_batch_and_records_no_meta(spark, tmp_path):
+    from dolphinbeat_spark.envelope import ENVELOPE_SCHEMA, empty_op
+    from dolphinbeat_spark.sinks.ordered import ProtobufKafkaSink
+
+    reg = SchemaRegistry()
+    op = empty_op(**_drifted_insert(reg))
+    df = spark.createDataFrame([tuple(op[f.name] for f in ENVELOPE_SCHEMA.fields)],
+                               ENVELOPE_SCHEMA)
+    captured = []
+    sink = ProtobufKafkaSink(meta_dir=str(tmp_path / "_seq_meta"), registry=reg,
+                             produce=lambda seq, v: captured.append(v))
+    with pytest.raises(Exception, match="SchemaDriftError"):
+        sink(df, batch_id=0)
+    assert captured == []
+    assert not list((tmp_path / "_seq_meta").glob("*.json"))
