@@ -9,7 +9,8 @@ increasing ``seq`` per producer; consumers dedup on seq gaps
 Every sink here is one :class:`SeqStampedSink` pipeline per batch:
 
 1. ``_base_seq``: the persisted base of the batch id (a replay reuses
-   it), else the next seq after the highest committed one;
+   it), else the next seq after the highest committed one (the sink's
+   in-memory high-water mark: the meta dir is scanned once per sink);
 2. encode, in the batch's own partitions, to an Arrow table of the
    four sort keys plus a payload;
 3. :func:`total_order`: one stable driver-side sort by (log_name,
@@ -66,6 +67,9 @@ class SeqStampedSink:
         self.meta_dir = Path(meta_dir)
         self.meta_dir.mkdir(parents=True, exist_ok=True)
         self.producer_id = producer_id
+        #: the base after every committed batch; None until the first
+        #: ``_base_seq`` scans the meta dir
+        self._high: int | None = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         base = self._base_seq(batch_id)
@@ -84,10 +88,18 @@ class SeqStampedSink:
 
     def _base_seq(self, batch_id: int) -> int:
         """Deterministic base: replayed batches reuse their recorded
-        base; new batches start after the highest committed seq."""
+        base; new batches start after the highest committed seq. The
+        meta dir is read whole only on the first call of a sink; its
+        one writer (this sink) keeps the high-water mark after that."""
+        if self._high is None:
+            self._high = self._scan_high()
         mine = self.meta_dir / f"{batch_id}.json"
         if mine.exists():
             return json.loads(mine.read_text())["base_seq"]
+        return self._high
+
+    def _scan_high(self) -> int:
+        """The base after every batch the meta dir records."""
         best = 0
         for p in self.meta_dir.glob("*.json"):
             m = json.loads(p.read_text())
@@ -104,6 +116,7 @@ class SeqStampedSink:
         tmp = self.meta_dir / f".{batch_id}.tmp"
         tmp.write_text(json.dumps({"base_seq": base_seq, "n_rows": n_rows}))
         os.replace(tmp, self.meta_dir / f"{batch_id}.json")
+        self._high = max(self._high, base_seq + n_rows)
         metas = sorted(
             (p for p in self.meta_dir.glob("*.json")), key=lambda p: int(p.stem)
         )

@@ -10,7 +10,12 @@ from conftest import FakeProducer
 from pyspark.sql import functions as F
 
 from dolphinbeat_spark.envelope import golden_sequences
-from dolphinbeat_spark.sinks.ordered import OrderedFileSink, read_with_consumer_dedup
+from dolphinbeat_spark.sinks.ordered import (
+    DeliveryError,
+    OrderedFileSink,
+    SeqStampedSink,
+    read_with_consumer_dedup,
+)
 from dolphinbeat_spark.sources.fixture_source import golden_envelope_df, register_fixture_source
 from dolphinbeat_spark.streaming.pipeline import SinkSpec, build_pipeline, windowed_op_counts
 
@@ -165,6 +170,61 @@ def test_kafka_ordered_sink_failed_delivery_aborts(spark, tmp_path):
             sink(env, 0)
             assert replayed == clean, (kind, fault)
             assert (meta / "0.json").read_text() == (clean_dir / "0.json").read_text()
+
+
+class _ListSink(SeqStampedSink):
+    """A ``SeqStampedSink`` over plain lists of op types: each batch is
+    its ops at consecutive log positions, delivered by recording the
+    seqs it was given (``fail`` makes the next delivery raise)."""
+
+    def __init__(self, meta_dir):
+        super().__init__(meta_dir)
+        self.fail, self.delivered, self.scans = False, {}, 0
+
+    def _scan_high(self):
+        self.scans += 1
+        return super()._scan_high()
+
+    def _encode(self, ops):
+        import pyarrow as pa
+
+        return pa.table({
+            "log_name": ["mysql-bin.000001"] * len(ops),
+            "log_pos": list(range(4, 4 + len(ops))),
+            "op_type": ops,
+            "row_index": [0] * len(ops),
+        })
+
+    def _deliver(self, ordered, base, batch_id):
+        if self.fail:
+            self.fail = False
+            raise DeliveryError("broker rejected the batch")
+        self.delivered[batch_id] = list(range(base + 1, base + ordered.num_rows + 1))
+        return ordered.num_rows
+
+
+def test_seq_base_is_kept_in_memory_and_matches_a_directory_scan(tmp_path):
+    """The sink reads its meta dir once, then serves every new batch's
+    base from its high-water mark; after committed batches, retention,
+    a failed delivery and replays, that mark is the base a fresh sink
+    reads from the directory."""
+    meta = tmp_path / "_seq_meta"
+    sink = _ListSink(meta)
+    sink.META_RETENTION = 2
+    for batch_id, n in enumerate([3, 1, 4, 2]):
+        sink(["insert"] * n, batch_id)
+    assert sink.delivered[3] == [9, 10]
+    sink.fail = True
+    with pytest.raises(DeliveryError):
+        sink(["update"] * 5, 4)
+    assert not (meta / "4.json").exists()
+    sink(["update"] * 5, 4)  # the replay reuses the base the failure got
+    assert sink.delivered[4] == list(range(11, 16))
+    sink(["insert"] * 2, 3)  # a replay of a committed batch keeps its base
+    assert sink.delivered[3] == [9, 10]
+    assert sink._base_seq(5) == _ListSink(meta)._base_seq(5) == 15
+    assert sink.scans == 1
+    assert sorted(p.name for p in meta.glob("*.json")) == ["3.json", "4.json"]
 
 
 def test_resume_from_checkpoint_no_loss_no_dup(spark, tmp_path):

@@ -1,9 +1,10 @@
-"""Per-task fixed cost of a PySpark Python worker in a ``get_spark`` session.
+"""Per-task and per-batch fixed costs of a ``get_spark`` session.
 
     python tools/worker_overhead.py [--jobs 20] [--master local[2]]
 
-Runs ``--jobs`` one-row ``mapInArrow`` jobs, one after another, and
-prints one JSON line of medians over them:
+Runs ``--jobs`` one-row ``mapInArrow`` jobs, one after another, then a
+``rate-micro-batch`` → ``foreachBatch`` stream for :data:`STREAM_BATCHES` micro-batches, and
+prints one JSON line of medians over them. Per task:
 
 - ``job_ms``: the job's wall on the driver;
 - ``setup_spark_files_ms``: one call of
@@ -15,6 +16,15 @@ prints one JSON line of medians over them:
 The last job's worker also names the ``zipimporter.invalidate_caches``
 its process runs (``guard``). A worker-bootstrap regression shows up
 as ``setup_spark_files_ms`` and ``zip_reads`` rising.
+
+Per micro-batch (``stream``), from the query's progress reports and
+``/proc/stat``: the medians of ``walCommit`` and ``commitOffsets`` (the
+offset and commit log writes) and of ``triggerExecution``, and
+``machine_process_creations_per_batch``, the processes created on the
+whole machine (every process, not only this session's) divided by the
+batches run. A checkpoint writer that forks per status check, as
+Hadoop's local filesystem does without its native library, shows up
+as both rising.
 """
 
 from __future__ import annotations
@@ -23,10 +33,14 @@ import argparse
 import json
 import statistics
 import sys
+import tempfile
 import time
 from pathlib import Path
 
 PROBE_SCHEMA = "pid long, guard string, zip_reads long, setup_spark_files_ms double"
+
+#: micro-batches the stream probe measures
+STREAM_BATCHES = 20
 
 
 def make_probe():
@@ -83,6 +97,54 @@ def run_probe(spark):
     return (time.perf_counter() - t) * 1e3, row
 
 
+def machine_processes() -> int:
+    """Processes created on this machine since boot (``/proc/stat``)."""
+    with open("/proc/stat") as f:
+        for line in f:
+            if line.startswith("processes "):
+                return int(line.split()[1])
+    raise RuntimeError("/proc/stat has no processes line")
+
+
+def run_stream(spark, warmup: int = 3) -> dict:
+    """A ``rate-micro-batch`` → no-op ``foreachBatch`` stream, batches
+    back to back (that source has new rows for every trigger),
+    for ``warmup +`` :data:`STREAM_BATCHES` micro-batches; the
+    per-batch medians of the batches after the warm-up."""
+    seen: list[tuple[int, int]] = []
+
+    def on_batch(_df, batch_id):
+        seen.append((batch_id, machine_processes()))
+
+    with tempfile.TemporaryDirectory(prefix="worker_overhead_ckpt_") as ckpt:
+        q = (
+            spark.readStream.format("rate-micro-batch").option("rowsPerBatch", 100).load()
+            .writeStream.foreachBatch(on_batch)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            while len(seen) <= warmup + STREAM_BATCHES:
+                if q.exception() is not None:
+                    raise RuntimeError(f"probe stream failed: {q.exception()}")
+                time.sleep(0.05)
+        finally:
+            q.stop()
+        progress = [p for p in q.recentProgress if p["batchId"] > warmup]
+    (first, p0), (last, p1) = seen[warmup], seen[-1]
+
+    def median_ms(key):
+        return statistics.median(p["durationMs"].get(key, 0) for p in progress)
+
+    return {
+        "batches": last - first,
+        "wal_commit_ms": median_ms("walCommit"),
+        "commit_offsets_ms": median_ms("commitOffsets"),
+        "trigger_ms": median_ms("triggerExecution"),
+        "machine_process_creations_per_batch": round((p1 - p0) / (last - first), 1),
+    }
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--jobs", type=int, default=20)
@@ -95,6 +157,7 @@ def main(argv: list[str] | None = None) -> int:
     try:
         run_probe(spark)  # worker start-up is not a per-task cost
         samples = [run_probe(spark) for _ in range(args.jobs)]
+        stream = run_stream(spark)
     finally:
         spark.stop()
     rows = [r for _, r in samples]
@@ -106,6 +169,7 @@ def main(argv: list[str] | None = None) -> int:
         "zip_reads": statistics.median(r["zip_reads"] for r in rows),
         "guard": rows[-1]["guard"],
         "worker_pids": len({r["pid"] for r in rows}),
+        "stream": stream,
     }))
     return 0
 
