@@ -54,6 +54,7 @@ from dolphinbeat_spark.envelope import ENVELOPE_SCHEMA
 from dolphinbeat_spark.sources.binlog_file import ABSENT
 from dolphinbeat_spark.schema.registry import (
     DdlError,
+    SchemaDriftError,
     SchemaRegistry,
     is_ddl,
     normalize_statement,
@@ -203,6 +204,7 @@ def decode_event(ev: object, ctx: DecodeContext) -> list[dict]:
         out = []
         td = ctx.registry.get(ev.schema, ev.table)
         names = td.column_names() if td else None
+        _check_width(ev, names, ev.rows)
         json_cols = _json_columns(td)
         labels = _label_maps(td)
         for ri, row in enumerate(ev.rows):
@@ -218,6 +220,7 @@ def decode_event(ev: object, ctx: DecodeContext) -> list[dict]:
         out = []
         td = ctx.registry.get(ev.schema, ev.table)
         names = td.column_names() if td else None
+        _check_width(ev, names, (img for pair in ev.rows for img in pair))
         json_cols = _json_columns(td)
         labels = _label_maps(td)
         for ri, (before_row, after_row) in enumerate(ev.rows):
@@ -229,6 +232,22 @@ def decode_event(ev: object, ctx: DecodeContext) -> list[dict]:
                             **{**base, "row_index": ri}))
         return out
     return []
+
+
+def _check_width(ev, names: list[str] | None, images) -> None:
+    """Raise :class:`SchemaDriftError` when a positional row image is
+    not as wide as the resolved TableDef: ``_stringify`` pairs the two
+    by position, so a column added or dropped since the registry last
+    saw the table would shift values under the wrong names. MINIMAL
+    images stay full width (``ABSENT`` placeholders); named (dict)
+    images carry their own names."""
+    if names is None:
+        return
+    for row in images:
+        if not isinstance(row, dict) and len(row) != len(names):
+            raise SchemaDriftError(
+                f"{ev.schema}.{ev.table}: a {ev.kind} row image has {len(row)} "
+                f"columns, the registry's table has {len(names)} ({', '.join(names)})")
 
 
 def _format_mysql_time(td: _timedelta) -> str:

@@ -180,3 +180,43 @@ def test_parse_labels_backslash_escapes():
     assert _parse_labels("set('a\\\\b','c')") == ["a\\b", "c"]
     # mixed in one definition; escape as the label's last char
     assert _parse_labels("enum('q\\'','\\\\','d''d')") == ["q'", "\\", "d'd"]
+
+
+def _drift_ctx() -> DecodeContext:
+    ctx = _ctx()
+    decode_event(NS(kind="query", query="CREATE TABLE test.t (id INT PRIMARY KEY, name VARCHAR(20), qty INT)",
+                    schema="test", log_pos=100, timestamp=1), ctx)
+    return ctx
+
+
+@pytest.mark.parametrize("kind,rows", [
+    ("insert", [(1, "a", 2), (1, 3)]),
+    ("delete", [(1, "a", 2, "new")]),
+    ("update", [((1, "a", 2), (1, 3))]),
+    ("update", [((1, 3), (1, "a", 2))]),
+])
+def test_row_image_narrower_or_wider_than_the_registry_raises(kind, rows):
+    """A positional image is named by position; one that is not as
+    wide as the TableDef would shift or drop values silently (``(1, 3)``
+    against ``[id, name, qty]`` read as ``{'id': '1', 'name': '3'}``)."""
+    from dolphinbeat_spark.schema.registry import SchemaDriftError
+
+    ctx = _drift_ctx()
+    with pytest.raises(SchemaDriftError, match=r"test\.t: a \w+ row image has [24] columns"):
+        decode_event(NS(kind=kind, schema="test", table="t", rows=rows, log_pos=200, timestamp=2), ctx)
+
+
+def test_minimal_image_placeholders_and_named_rows_pass_the_width_check():
+    from dolphinbeat_spark.sources.binlog_file import ABSENT
+
+    ctx = _drift_ctx()
+    ops = decode_event(NS(kind="update", schema="test", table="t", log_pos=200, timestamp=2,
+                          rows=[((1, ABSENT, ABSENT), (1, ABSENT, 5))]), ctx)
+    assert ops[0]["before"] == {"id": "1"} and ops[0]["after"] == {"id": "1", "qty": "5"}
+    ops = decode_event(NS(kind="insert", schema="test", table="t", log_pos=300, timestamp=3,
+                          rows=[{"id": 2, "qty": 4}]), ctx)
+    assert ops[0]["after"] == {"id": "2", "qty": "4"}
+    # a table the registry does not know is named col_<i>, unchecked
+    ops = decode_event(NS(kind="insert", schema="test", table="unknown", log_pos=400,
+                          timestamp=4, rows=[(1, 2)]), ctx)
+    assert ops[0]["after"] == {"col_0": "1", "col_1": "2"}

@@ -1477,3 +1477,57 @@ def test_file_replay_encodes_on_one_task_per_file(spark, tmp_path):
     want = [o for o in ref if o.get("table") != "b"]
     assert [(o["op_type"], o["log_pos"]) for o in ops] == [
         (o["op_type"], o["log_pos"]) for o in want]
+
+
+# --- a stale registry: row images narrower than the TableDef ----------------
+
+
+def _write_drifted(d: Path) -> str:
+    """One file whose DDL declares test.t (id, name, qty) but whose
+    rows events carry two columns, as after a ``DROP COLUMN`` the
+    registry never saw: an insert, then an update. Returns the file
+    name."""
+    import sys
+
+    sys.path.insert(0, str(Path(__file__).parent.parent))
+    from tools.make_binlog_fixture import Writer
+
+    from dolphinbeat_spark.sources import binlog_file as B
+
+    sid = "d41f7d41f7d41f7d41f7d41f7d41f7d4"
+    cols = [(B.T_LONG, 0), (B.T_LONG, 0)]
+    w = Writer()
+    w.fde()
+    w.previous_gtids([])
+    w.gtid(sid, 1)
+    w.query("test", "CREATE TABLE test.t (id INT PRIMARY KEY, name VARCHAR(20), qty INT)")
+    for gno, (ev, rows) in enumerate([(B.EV_WRITE_ROWS_V2, [(1, 3)]),
+                                      (B.EV_UPDATE_ROWS_V2, [((1, 3), (1, 4))])], start=2):
+        w.gtid(sid, gno)
+        w.query("test", "BEGIN")
+        w.table_map(9, "test", "t", cols)
+        w.rows(ev, 9, cols, rows)
+        w.xid(gno)
+    d.mkdir()
+    name = "mysql-bin.000001"
+    (d / name).write_bytes(bytes(w.buf))
+    return name
+
+
+def test_arrow_reader_refuses_a_row_narrower_than_its_table(tmp_path):
+    """The parent decoded ``(1, 3)`` as ``{'id': '1', 'name': '3'}``."""
+    from dolphinbeat_spark.schema.registry import SchemaDriftError
+
+    d = tmp_path / "drift"
+    name = _write_drifted(d)
+    with pytest.raises(SchemaDriftError, match=r"test\.t: a insert row image has 2 columns"):
+        _arrow_read(d, ("", 4), (name, (d / name).stat().st_size))
+
+
+def test_file_source_refuses_a_row_narrower_than_its_table(spark, tmp_path):
+    from dolphinbeat_spark.sources.binlog_file import read_binlog_files
+
+    d = tmp_path / "drift"
+    _write_drifted(d)
+    with pytest.raises(Exception, match="SchemaDriftError"):
+        read_binlog_files(spark, str(d)).collect()

@@ -11,11 +11,26 @@ prints one JSON line of medians over them. Per task:
   ``pyspark.worker_util.setup_spark_files`` (the start of every task,
   whose ``importlib.invalidate_caches()`` re-reads zip directories)
   timed by the task's own clock, inside the task;
-- ``zip_reads``: ``zipimport._read_directory`` calls in that call.
+- ``zip_reads``: ``zipimport._read_directory`` calls in that call;
+- ``input_wait_ms``: from the UDF's entry to its first input batch
+  (a delayed ACK holds the input about 40 ms);
+- ``worker_cpu_ms``: the worker's CPU time (``time.process_time``)
+  from one task's UDF entry to the next task's in the same process,
+  less the probe's own counting: the task, its plumbing and the
+  ``gc.collect()`` the worker-reuse loop runs after it;
+- ``gc_ms_per_task`` and ``gen2_collections_per_task``: the garbage
+  collector's time (timed by a ``gc.callbacks`` hook the probe
+  installs once per worker) and its full collections over the same
+  span.
 
 The last job's worker also names the ``zipimporter.invalidate_caches``
-its process runs (``guard``). A worker-bootstrap regression shows up
-as ``setup_spark_files_ms`` and ``zip_reads`` rising.
+its process runs (``guard``), the ``pyspark.daemon.worker`` its reuse
+loop calls (``task_worker``), the objects its daemon froze before
+forking (``freeze_count``) and the objects a full collection still
+scans (``gen2_objects``). A worker-bootstrap regression shows up as
+``setup_spark_files_ms`` and ``zip_reads`` rising, a lost
+``TCP_QUICKACK`` as ``input_wait_ms`` near 40, a lost freeze as
+``worker_cpu_ms`` and ``gc_ms_per_task`` rising by about 35.
 
 Per micro-batch (``stream``), from the query's progress reports and
 ``/proc/stat``: the medians of ``walCommit`` and ``commitOffsets`` (the
@@ -37,20 +52,27 @@ import tempfile
 import time
 from pathlib import Path
 
-PROBE_SCHEMA = "pid long, guard string, zip_reads long, setup_spark_files_ms double"
+PROBE_SCHEMA = (
+    "pid long, guard string, zip_reads long, setup_spark_files_ms double, "
+    "task_worker string, input_wait_ms double, cpu_s double, probe_cpu_s double, "
+    "gc_s double, gen2_collections long, freeze_count long, gen2_objects long, "
+    "tracked_objects long"
+)
 
 #: micro-batches the stream probe measures
 STREAM_BATCHES = 20
 
 
 def make_probe():
-    """A ``mapInArrow`` function: each task runs the worker's per-task
-    ``setup_spark_files`` once more, on an empty include list, and
-    yields one row of what that cost in its process. Built as a
+    """A ``mapInArrow`` function: each task reads its process's CPU
+    and GC counters at entry, times the wait for its first input batch,
+    runs the worker's per-task ``setup_spark_files`` once more, on an
+    empty include list, and yields one row of what it saw. Built as a
     closure, so it is shipped by value and needs no import on the
     worker."""
 
     def probe(batches):
+        import gc
         import io
         import os
         import struct
@@ -58,11 +80,36 @@ def make_probe():
         import zipimport
 
         import pyarrow as pa
-        from pyspark import worker_util
+        from pyspark import daemon, worker_util
         from pyspark.core.files import SparkFiles
 
-        for _ in batches:
+        cpu = time.process_time()
+        timer = next((cb for cb in gc.callbacks
+                      if getattr(cb, "__name__", "") == "worker_overhead_gc_timer"), None)
+        if timer is None:
+            state = {"start": 0.0, "total": 0.0}
+
+            def worker_overhead_gc_timer(phase, _info):
+                if phase == "start":
+                    state["start"] = time.perf_counter()
+                else:
+                    state["total"] += time.perf_counter() - state["start"]
+
+            worker_overhead_gc_timer.state = state
+            timer = worker_overhead_gc_timer
+            gc.callbacks.append(timer)
+        gc_s = timer.state["total"]
+        gen2_collections = gc.get_stats()[2]["collections"]
+        it = iter(batches)
+        t = time.perf_counter()
+        next(it, None)
+        wait_ms = (time.perf_counter() - t) * 1e3
+        for _ in it:
             pass
+        counted = time.process_time()
+        # outside the task's CPU: each walks its generation (~8 ms the frozen one)
+        frozen, gen2_objects = gc.get_freeze_count(), len(gc.get_objects(2))
+        tracked = len(gc.get_objects())
         root = (SparkFiles._root_directory or "").encode()
         frame = struct.pack(">i", len(root)) + root + struct.pack(">i", 0)
         stock_read, reads = zipimport._read_directory, []
@@ -84,6 +131,15 @@ def make_probe():
             "guard": f"{guard.__module__}.{guard.__qualname__}",
             "zip_reads": len(reads),
             "setup_spark_files_ms": setup_ms,
+            "task_worker": f"{daemon.worker.__module__}.{daemon.worker.__qualname__}",
+            "input_wait_ms": wait_ms,
+            "cpu_s": cpu,
+            "probe_cpu_s": time.process_time() - counted,
+            "gc_s": gc_s,
+            "gen2_collections": gen2_collections,
+            "freeze_count": frozen,
+            "gen2_objects": gen2_objects,
+            "tracked_objects": tracked,
         }])
 
     return probe
@@ -95,6 +151,24 @@ def run_probe(spark):
     t = time.perf_counter()
     row = df.collect()[0]
     return (time.perf_counter() - t) * 1e3, row
+
+
+def per_task_deltas(rows) -> list[dict]:
+    """Consecutive tasks of one worker process, in job order: the
+    worker CPU (less the probe's own counting), GC time and full
+    collections of each span from one task's entry to the next's."""
+    last: dict[int, object] = {}
+    out = []
+    for r in rows:
+        prev = last.get(r["pid"])
+        if prev is not None:
+            out.append({
+                "cpu_ms": (r["cpu_s"] - prev["cpu_s"] - prev["probe_cpu_s"]) * 1e3,
+                "gc_ms": (r["gc_s"] - prev["gc_s"]) * 1e3,
+                "gen2_collections": r["gen2_collections"] - prev["gen2_collections"],
+            })
+        last[r["pid"]] = r
+    return out
 
 
 def machine_processes() -> int:
@@ -161,6 +235,7 @@ def main(argv: list[str] | None = None) -> int:
     finally:
         spark.stop()
     rows = [r for _, r in samples]
+    deltas = per_task_deltas(rows)
     print(json.dumps({
         "jobs": args.jobs,
         "job_ms": round(statistics.median(ms for ms, _ in samples), 1),
@@ -168,6 +243,14 @@ def main(argv: list[str] | None = None) -> int:
             statistics.median(r["setup_spark_files_ms"] for r in rows), 1),
         "zip_reads": statistics.median(r["zip_reads"] for r in rows),
         "guard": rows[-1]["guard"],
+        "input_wait_ms": round(statistics.median(r["input_wait_ms"] for r in rows), 1),
+        "worker_cpu_ms": round(statistics.median(d["cpu_ms"] for d in deltas), 1),
+        "gc_ms_per_task": round(statistics.median(d["gc_ms"] for d in deltas), 1),
+        "gen2_collections_per_task": round(
+            statistics.mean(d["gen2_collections"] for d in deltas), 2),
+        "task_worker": rows[-1]["task_worker"],
+        "freeze_count": rows[-1]["freeze_count"],
+        "gen2_objects": rows[-1]["gen2_objects"],
         "worker_pids": len({r["pid"] for r in rows}),
         "stream": stream,
     }))
