@@ -3,8 +3,9 @@
     python tools/worker_overhead.py [--jobs 20] [--master local[2]]
 
 Runs ``--jobs`` one-row ``mapInArrow`` jobs, one after another, then a
-``rate-micro-batch`` → ``foreachBatch`` stream for :data:`STREAM_BATCHES` micro-batches, and
-prints one JSON line of medians over them. Per task:
+``rate-micro-batch`` → ``foreachBatch`` stream for :data:`STREAM_BATCHES` micro-batches,
+then :data:`RUNNER_STARTS` query starts, and prints one JSON line of
+medians over them. Per task:
 
 - ``job_ms``: the job's wall on the driver;
 - ``setup_spark_files_ms``: one call of
@@ -40,6 +41,19 @@ whole machine (every process, not only this session's) divided by the
 batches run. A checkpoint writer that forks per status check, as
 Hadoop's local filesystem does without its native library, shows up
 as both rising.
+
+Per query start (``source_runner``): :data:`RUNNER_STARTS`
+``availableNow`` queries over a one-row streaming Python data source
+(:func:`make_origin_source`), each on a new checkpoint, so each starts
+Spark's streaming source runner, a fresh Python process outside the
+worker daemon. ``query_start_ms`` is the median from ``start()`` to the
+query's end; from the last start's runner, its ``pyspark`` origin, its
+command line, the zip archives whose directory it read and the modules
+it imported from a zip, and ``runner_ready_ms`` (median over the
+starts), the runner's age at the reader's ``initialOffset``, from
+``/proc/self/stat``. A runner compiling pyspark from ``pyspark.zip``
+again shows as ``pyspark`` pointing into the zip, ``zip_modules`` near
+100 and both times rising by about a second.
 """
 
 from __future__ import annotations
@@ -61,6 +75,9 @@ PROBE_SCHEMA = (
 
 #: micro-batches the stream probe measures
 STREAM_BATCHES = 20
+
+#: query starts the source-runner probe measures
+RUNNER_STARTS = 5
 
 
 def make_probe():
@@ -219,6 +236,109 @@ def run_stream(spark, warmup: int = 3) -> dict:
     }
 
 
+def make_origin_source():
+    """A streaming Python data source, ``worker_origin``, of one row.
+    Its reader's ``initialOffset``, which Spark calls in the streaming
+    source runner, writes what that process runs to
+    ``<option out>/runner-<pid>.json``: ``pyspark.__file__``,
+    ``sys.orig_argv``, the archives in ``zipimport``'s directory cache,
+    the modules loaded from a zip, and ``ready_ms``, the process's age
+    (``/proc/self/stat``). Built in a function, so it is pickled by
+    value and the runner needs no import from this file."""
+    from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
+
+    class OriginReader(DataSourceStreamReader):
+        def __init__(self, out):
+            self.out = out
+
+        def initialOffset(self):
+            import json
+            import os
+            import sys
+            import zipimport
+
+            import pyspark
+
+            with open("/proc/self/stat") as f:
+                started = int(f.read().rsplit(")", 1)[1].split()[19])
+            with open("/proc/uptime") as f:
+                uptime = float(f.read().split()[0])
+            ready_ms = (uptime - started / os.sysconf("SC_CLK_TCK")) * 1e3
+            zip_modules = sum(
+                1 for m in list(sys.modules.values())
+                if isinstance(getattr(m, "__loader__", None), zipimport.zipimporter))
+            record = {
+                "pyspark": pyspark.__file__,
+                "argv": sys.orig_argv,
+                "zip_directories": sorted(
+                    os.path.basename(a) for a in zipimport._zip_directory_cache),
+                "zip_modules": zip_modules,
+                "ready_ms": round(ready_ms),
+            }
+            with open(os.path.join(self.out, f"runner-{os.getpid()}.json"), "w") as f:
+                json.dump(record, f)
+            return {"offset": 0}
+
+        def latestOffset(self):
+            return {"offset": 1}
+
+        def partitions(self, start, end):
+            return [InputPartition(0)]
+
+        def read(self, partition):
+            yield (1,)
+
+    class OriginSource(DataSource):
+        @classmethod
+        def name(cls):
+            return "worker_origin"
+
+        def schema(self):
+            return "id int"
+
+        def streamReader(self, schema):
+            return OriginReader(self.options["out"])
+
+    return OriginSource
+
+
+def start_origin_query(spark, out: str, ckpt: str) -> tuple[float, dict]:
+    """One ``availableNow`` query over :func:`make_origin_source` into
+    the ``noop`` sink; (start() → end ms, the runner's record)."""
+    spark.dataSource.register(make_origin_source())
+    before = set(Path(out).glob("runner-*.json"))
+    t = time.perf_counter()
+    q = (
+        spark.readStream.format("worker_origin").option("out", out).load()
+        .writeStream.format("noop").trigger(availableNow=True)
+        .option("checkpointLocation", ckpt).start()
+    )
+    q.awaitTermination()
+    ms = (time.perf_counter() - t) * 1e3
+    if q.exception() is not None:
+        raise RuntimeError(f"probe query failed: {q.exception()}")
+    (new,) = set(Path(out).glob("runner-*.json")) - before
+    return ms, json.loads(new.read_text())
+
+
+def run_source_runner(spark) -> dict:
+    """:data:`RUNNER_STARTS` starts of :func:`start_origin_query`, after
+    one unmeasured start; the medians and the last runner's record."""
+    with tempfile.TemporaryDirectory(prefix="worker_overhead_runner_") as tmp:
+        starts = [start_origin_query(spark, tmp, f"{tmp}/ckpt-{i}")
+                  for i in range(RUNNER_STARTS + 1)][1:]
+    last = starts[-1][1]
+    return {
+        "starts": RUNNER_STARTS,
+        "query_start_ms": round(statistics.median(ms for ms, _ in starts)),
+        "runner_ready_ms": round(statistics.median(r["ready_ms"] for _, r in starts)),
+        "pyspark": last["pyspark"],
+        "argv": last["argv"],
+        "zip_directories": last["zip_directories"],
+        "zip_modules": last["zip_modules"],
+    }
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--jobs", type=int, default=20)
@@ -232,6 +352,7 @@ def main(argv: list[str] | None = None) -> int:
         run_probe(spark)  # worker start-up is not a per-task cost
         samples = [run_probe(spark) for _ in range(args.jobs)]
         stream = run_stream(spark)
+        source_runner = run_source_runner(spark)
     finally:
         spark.stop()
     rows = [r for _, r in samples]
@@ -253,6 +374,7 @@ def main(argv: list[str] | None = None) -> int:
         "gen2_objects": rows[-1]["gen2_objects"],
         "worker_pids": len({r["pid"] for r in rows}),
         "stream": stream,
+        "source_runner": source_runner,
     }))
     return 0
 
