@@ -71,32 +71,23 @@ def cmd_schema(args) -> int:
 
 
 def cmd_demo_pipeline(args) -> int:
+    from dolphinbeat_spark.sinks.ordered import OrderedFileSink
     from dolphinbeat_spark.sources.fixture_source import register_fixture_source
-    from dolphinbeat_spark.streaming.pipeline import SinkSpec, build_pipeline
+    from dolphinbeat_spark.streaming.pipeline import build_pipeline
 
     spark = _spark()
     register_fixture_source(spark)
     out = args.out or tempfile.mkdtemp(prefix="dolphinbeat_demo_")
     stream = spark.readStream.format("dolphinbeat_fixture").option("batch_size", "4").load()
-    queries = build_pipeline(
+    build_pipeline(
         stream,
         [
-            SinkSpec(
-                name="all_ops",
-                out_dir=f"{out}/all_ops",
-                checkpoint_dir=f"{out}/ckp/all_ops",
-            ),
-            SinkSpec(
-                name="canal_only",
-                out_dir=f"{out}/canal_only",
-                checkpoint_dir=f"{out}/ckp/canal_only",
-                include=[r".*\.canal_test"],
-                producer_id=2,
-            ),
+            ("all_ops", [], [], OrderedFileSink(f"{out}/all_ops")),
+            ("canal_only", [r".*\.canal_test"], [],
+             OrderedFileSink(f"{out}/canal_only", producer_id=2)),
         ],
-    )
-    for q in queries:
-        q.awaitTermination(120)
+        f"{out}/ckp",
+    ).awaitTermination(120)
     print(f"demo output under {out}")
     return 0
 

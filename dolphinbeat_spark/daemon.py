@@ -11,9 +11,14 @@ port.
   engine's throughput option beyond the reference);
 - the schema registry from ``[schema_tracker] dir`` (JSON snapshot,
   replaces boltdb);
-- one streaming query per enabled ``[[sink]]`` block with its
-  include/exclude regexes (F1/F2) and a per-sink checkpoint under
-  ``[checkpoint] dir`` (replaces the reference's checkpoint manager);
+- ONE streaming query that reads the source once per micro-batch and
+  hands the batch to every enabled ``[[sink]]`` block in config order,
+  each through its include/exclude regexes (F1/F2)
+  (``streaming/pipeline.build_pipeline``). Under ``[checkpoint] dir``
+  the query's Spark checkpoint is ``_stream`` and each sink's own
+  state (a kafka block's ``_seq_meta``) is ``<sink name>``; a root
+  holding an older per-query checkpoint is refused
+  (:class:`CheckpointLayoutError`);
 - the HTTP control surface on ``[http_server] addr`` (/status,
   /schema, /ddl/*, /metrics, /debug/pprof);
 - ``[election]``: refused with a pointer — driver supervision belongs
@@ -43,6 +48,15 @@ import json
 import sys
 from dataclasses import dataclass, field
 from pathlib import Path
+
+#: the one Spark checkpoint's directory under ``[checkpoint] dir``
+STREAM_CHECKPOINT = "_stream"
+
+
+class CheckpointLayoutError(RuntimeError):
+    """The checkpoint root holds a per-query checkpoint of the older
+    one-query-per-sink layout, which the one daemon query cannot
+    resume from without skipping or replaying data."""
 
 
 @dataclass
@@ -144,6 +158,11 @@ class DaemonConfig:
         for s in self.sinks:
             if not s.enabled:
                 continue
+            # the name is the sink's state directory under [checkpoint] dir
+            if s.name in ("", ".", "..", STREAM_CHECKPOINT) or Path(s.name).name != s.name:
+                errors.append(
+                    f"sink {s.name!r}: name must be one non-empty path component, "
+                    f"not {STREAM_CHECKPOINT!r}")
             if s.type not in ("stdout", "kafka"):
                 errors.append(f"sink {s.name!r}: unknown type {s.type!r}")
             if s.type == "kafka" and not s.cfg.get("broker_list"):
@@ -204,6 +223,7 @@ def resolve_plan(cfg: DaemonConfig) -> dict:
         "sinks": [],
         "http": {"addr": cfg.http_addr or None},
         "checkpoint_root": cfg.checkpoint_dir,
+        "stream_checkpoint": str(Path(cfg.checkpoint_dir) / STREAM_CHECKPOINT),
         # the startup probe sequence the live readers run against the
         # server BEFORE consuming events (RUNBOOK.md §2) — printed by
         # --dry-run so the first real deployment reviews the exact
@@ -275,9 +295,12 @@ def resolve_plan(cfg: DaemonConfig) -> dict:
 
 def run(cfg: DaemonConfig, spark=None, source_format: str = "dolphinbeat_binlog",
         source_options_extra: dict | None = None, trigger_once: bool = False):
-    """Start the daemon: source stream(s) → per-sink queries + control
-    server. Returns (spark, queries, control_server). Blocking is the
-    caller's choice (``spark.streams.awaitAnyTermination()``).
+    """Start the daemon: source stream(s) → one query fanning out to
+    every sink + control server. Returns (spark, query,
+    control_server). Blocking is the caller's choice
+    (``spark.streams.awaitAnyTermination()``). Raises
+    :class:`CheckpointLayoutError`, before anything starts, when the
+    checkpoint root holds an older per-query checkpoint.
 
     ``source_format``/``source_options_extra``/``trigger_once`` let
     the integration tests drive the EXACT runtime wiring against a
@@ -290,9 +313,15 @@ def run(cfg: DaemonConfig, spark=None, source_format: str = "dolphinbeat_binlog"
     from dolphinbeat_spark.sources.binlog_source import BinlogDataSource
     from dolphinbeat_spark.streaming.http_server import ControlServer
     from dolphinbeat_spark.streaming.metrics import PipelineMetrics
-    from dolphinbeat_spark.streaming.pipeline import SinkSpec, build_pipeline, start_op_counts
+    from dolphinbeat_spark.streaming.pipeline import build_pipeline
 
     plan = resolve_plan(cfg)
+    old = sorted(str(p.parent) for p in Path(cfg.checkpoint_dir).glob("*/offsets")
+                 if p.parent.name != STREAM_CHECKPOINT)
+    if old:
+        raise CheckpointLayoutError(
+            f"{old[0]} is a per-query checkpoint of the one-query-per-sink layout; "
+            f"see RUNBOOK.md §4 to migrate (all found: {old})")
     spark = spark or get_spark("dolphinbeat")
     if cfg.reader == "arrow" and source_format == "dolphinbeat_binlog":
         source_format = "dolphinbeat_binlog_arrow"
@@ -353,25 +382,9 @@ def run(cfg: DaemonConfig, spark=None, source_format: str = "dolphinbeat_binlog"
         )
     stream = reduce(lambda a, b: a.unionByName(b), shards)
 
-    queries = []
-    file_specs = []
-    for s in plan["sinks"]:
-        if s["type"] == "stdout":
-            file_specs.append(
-                SinkSpec(
-                    name=s["name"], out_dir=s["out_dir"],
-                    checkpoint_dir=s["checkpoint"],
-                    include=s["include"], exclude=s["exclude"],
-                )
-            )
-        elif s["type"] == "kafka":
-            queries.append(_start_kafka_sink(stream, s, cfg, trigger_once))
-    if file_specs:
-        queries += build_pipeline(stream, file_specs, trigger_once=trigger_once)
-    if plan["sinks"]:
-        # one counting query for any mix of sinks (kafka-only included)
-        queries.append(start_op_counts(
-            stream, metrics, str(Path(cfg.checkpoint_dir) / "_metrics"), trigger_once))
+    sinks = [(s["name"], s["include"], s["exclude"], _make_sink(s, cfg))
+             for s in plan["sinks"]]
+    query = build_pipeline(stream, sinks, plan["stream_checkpoint"], metrics, trigger_once)
 
     snap = Path(cfg.tracker_dir) / "schema_snapshot.json"
     registry = SchemaRegistry.load(str(snap)) if snap.exists() else SchemaRegistry()
@@ -382,42 +395,35 @@ def run(cfg: DaemonConfig, spark=None, source_format: str = "dolphinbeat_binlog"
             registry=registry, metrics=metrics, host=host, port=port,
         )
         server.serve()
-    return spark, queries, server
+    return spark, query, server
 
 
-def _start_kafka_sink(stream, s: dict, cfg: DaemonConfig, trigger_once: bool = False):
-    """One [[sink]] kafka block → a streaming query: the block's
+def _make_sink(s: dict, cfg: DaemonConfig):
+    """One resolved [[sink]] block → its ``(batch_df, batch_id)``
+    callable: ``OrderedFileSink`` for stdout; for kafka, the block's
     encoder (``ProtobufKafkaSink`` with in-band compression and
     fragmentation at ``max_payload_size``, or ``JsonKafkaSink``) over a
-    ``KafkaTransport`` on a confluent producer."""
-    from dolphinbeat_spark.operators.filters import filter_tables
+    ``KafkaTransport`` on a confluent producer, recording its
+    ``_seq_meta`` in the block's state directory."""
     from dolphinbeat_spark.schema.registry import SchemaRegistry
     from dolphinbeat_spark.sinks import ordered
 
-    filtered = filter_tables(stream, s["include"], s["exclude"])
-    meta_dir = str(Path(cfg.checkpoint_dir) / s["name"] / "_seq_meta")
+    if s["type"] == "stdout":
+        return ordered.OrderedFileSink(s["out_dir"])
+    meta_dir = str(Path(s["checkpoint"]) / "_seq_meta")
     transport = ordered.KafkaTransport(
         ordered._confluent_producer(s["bootstrap"]), s["topic"], s["partition"]
     )
     if s["encoder"] == "json":
-        sink = ordered.JsonKafkaSink(meta_dir, produce=transport)
-    else:
-        snap = Path(cfg.tracker_dir) / "schema_snapshot.json"
-        sink = ordered.ProtobufKafkaSink(
-            meta_dir=meta_dir,
-            registry=SchemaRegistry.load(str(snap)) if snap.exists() else SchemaRegistry(),
-            produce=transport,
-            compression=s["compression"],
-            max_payload_size=s["max_payload_size"],
-        )
-    writer = (
-        filtered.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", s["checkpoint"])
-        .queryName(s["name"])
+        return ordered.JsonKafkaSink(meta_dir, produce=transport)
+    snap = Path(cfg.tracker_dir) / "schema_snapshot.json"
+    return ordered.ProtobufKafkaSink(
+        meta_dir=meta_dir,
+        registry=SchemaRegistry.load(str(snap)) if snap.exists() else SchemaRegistry(),
+        produce=transport,
+        compression=s["compression"],
+        max_payload_size=s["max_payload_size"],
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _split_addr(addr: str) -> tuple[str, int]:
@@ -444,7 +450,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.dry_run:
         print(json.dumps(plan, indent=2))
         return 0
-    spark, queries, _server = run(cfg)  # pragma: no cover - needs live MySQL
+    spark, _query, _server = run(cfg)  # pragma: no cover - needs live MySQL
     spark.streams.awaitAnyTermination()
     return 0
 

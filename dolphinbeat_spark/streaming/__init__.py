@@ -1,1 +1,1 @@
-from dolphinbeat_spark.streaming.pipeline import SinkSpec, build_pipeline  # noqa: F401
+from dolphinbeat_spark.streaming.pipeline import build_pipeline  # noqa: F401

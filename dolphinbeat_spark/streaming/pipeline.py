@@ -1,13 +1,16 @@
 """The CDC streaming pipeline: source → filters → fan-out → sinks.
 
 Spark restatement of the reference's daemon path (SURVEY.md §3.1):
-the handler mux (R1) becomes N streaming queries over one source,
-each with its own checkpointLocation (so each sink resumes from its
-own progress — replaces the reference's checkpoint manager C1-C3 and
-per-sink dedup F3); per-sink include/exclude filters (F2) are plain
-``filter_tables`` calls; ordered delivery is ``sinks/ordered.py``'s
-one ``SeqStampedSink`` path (``OrderedFileSink`` here; the daemon's
-kafka blocks run its Kafka encoders on the same path).
+the handler mux (R1, one event loop broadcasting each event to N
+sinks) becomes ONE streaming query over the source whose
+``foreachBatch`` hands the same micro-batch to every sink in turn
+(SURVEY §2.4). The source is read and decoded once per batch, and the
+query's one checkpoint replaces the reference's checkpoint manager
+(C1-C3). Per-sink include/exclude filters (F2) are plain
+``filter_tables`` calls; resume dedup (F3) is each sink's own replay
+record (``sinks/ordered.py``'s ``_seq_meta``: a replayed batch id
+reuses its base seq, so a batch replayed after sink k of N committed
+re-delivers identical output to sinks 1..k).
 
 Event-time operators (absent in the reference, SURVEY.md §2.8 —
 north-star additions): watermarked tumbling windows and session
@@ -16,81 +19,56 @@ windows over the envelope stream.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dolphinbeat_spark.operators.filters import filter_tables
-from dolphinbeat_spark.sinks.ordered import OrderedFileSink
 
-
-@dataclass
-class SinkSpec:
-    """One [[sink]] block (reference config, cmd/dolphinbeat/config.go)."""
-
-    name: str
-    out_dir: str
-    checkpoint_dir: str
-    include: list[str] = field(default_factory=list)
-    exclude: list[str] = field(default_factory=list)
-    producer_id: int = 1
+#: ``(name, include, exclude, sink)``: one [[sink]] block; ``sink`` is
+#: any ``(batch_df, batch_id)`` callable
+Sink = tuple[str, list[str], list[str], Callable[[DataFrame, int], None]]
 
 
 def build_pipeline(
     envelope_stream: DataFrame,
-    sinks: list[SinkSpec],
-    trigger_once: bool = True,
-) -> list[StreamingQuery]:
-    """Fan one envelope stream out to N ordered sinks (R1 + F2 + K1).
-    The op counters are :func:`start_op_counts`' own query."""
-    queries = []
-    for spec in sinks:
-        filtered = filter_tables(envelope_stream, spec.include, spec.exclude)
-        writer = (
-            filtered.writeStream.foreachBatch(
-                OrderedFileSink(spec.out_dir, spec.producer_id)
-            )
-            .option("checkpointLocation", spec.checkpoint_dir)
-            .queryName(spec.name)
-        )
-        if trigger_once:
-            writer = writer.trigger(availableNow=True)
-        queries.append(writer.start())
-    return queries
-
-
-def start_op_counts(
-    envelope_stream: DataFrame,
-    metrics,
+    sinks: list[Sink],
     checkpoint_dir: str,
+    metrics=None,
     trigger_once: bool = True,
 ) -> StreamingQuery:
-    """The one op-counting query of a pipeline: ``metrics`` (a
-    PipelineMetrics) receives per-op-type counts once per batch of the
-    UNFILTERED stream — daemon-level counters like the reference's
-    (metrics.go:21-51 count at the canal, before any sink filter), so
-    N sinks of any kind do NOT multiply trx_total/iud_total by N.
-    ``checkpoint_dir`` should be named independently of any sink:
-    reordering or renaming sinks must not relocate it (that would
-    recount retained history into the counters on restart)."""
+    """Fan one envelope stream out to N sinks from one query (R1 + F2).
 
-    def count_ops(batch_df, batch_id) -> None:
-        # one tiny agg per batch: op-type counts → counter families
-        metrics.record_ops(
-            {
+    Per batch: persist it, count its op types on the UNFILTERED batch
+    (the count also fills the cache), call each sink in order on its
+    filtered view with the same ``batch_id``, and only after every sink
+    returned fold the counts into ``metrics`` (a PipelineMetrics), so
+    its trx_total/iud_total are what the sinks committed — counted once
+    per batch, like the reference's counters at the canal
+    (metrics.go:21-51), however many sinks there are. A sink that
+    raises fails the batch for every sink; Structured Streaming then
+    replays it under the same id."""
+
+    def fan_out(batch_df: DataFrame, batch_id: int) -> None:
+        batch = batch_df.persist()
+        try:
+            counts = {
                 r["op_type"]: r["n"]
-                for r in batch_df.groupBy("op_type")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
+                for r in batch.groupBy("op_type").agg(F.count(F.lit(1)).alias("n")).collect()
             }
-        )
+            for _name, include, exclude, sink in sinks:
+                sink(filter_tables(batch, include, exclude), batch_id)
+            if metrics is not None:
+                metrics.record_ops(counts)
+        finally:
+            batch.unpersist()
 
     writer = (
-        envelope_stream.writeStream.foreachBatch(count_ops)
+        envelope_stream.writeStream.foreachBatch(fan_out)
         .option("checkpointLocation", checkpoint_dir)
-        .queryName("pipeline_metrics")
+        .queryName("dolphinbeat")
     )
     if trigger_once:
         writer = writer.trigger(availableNow=True)

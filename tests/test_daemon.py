@@ -39,7 +39,9 @@ def test_resolved_plan_maps_reference_keys():
     assert kafka["max_payload_size"] == 1 << 20
     # include/exclude regexes flow through to the sink spec (F1/F2)
     assert kafka["exclude"] == ["test\\.scratch_.*"]
-    # per-sink checkpoint under [checkpoint] dir
+    # one Spark checkpoint for the daemon's one query; each sink keeps
+    # its own state directory under [checkpoint] dir
+    assert plan["stream_checkpoint"].endswith("ckp/_stream")
     assert kafka["checkpoint"].endswith("ckp/main_topic")
 
 
@@ -83,15 +85,29 @@ def test_gtid_enabled_flows_to_source_options(tmp_path):
     assert source_options(DaemonConfig.from_toml(SAMPLE))["gtid_enabled"] == "true"
 
 
-def test_daemon_run_end_to_end_on_fake_binlog(spark, tmp_path):
+def test_daemon_run_end_to_end_on_fake_binlog(spark, tmp_path, monkeypatch):
     """run() drives the EXACT runtime wiring — sharded-or-single
-    source, fan-out file sinks, once-only metrics, control server —
-    against the scripted fake-binlog source; only the MySQL socket
-    goes unexecuted."""
+    source, one query fanning out to both file sinks, once-only
+    metrics, control server — against the scripted fake-binlog source;
+    only the MySQL socket goes unexecuted."""
     import urllib.request
 
+    from dolphinbeat_spark import daemon
     from dolphinbeat_spark.daemon import run
     from dolphinbeat_spark.sources.binlog_fake import register_fake_binlog_source
+
+    before, active = {q.id for q in spark.streams.active}, []
+    make_sink = daemon._make_sink
+
+    def counting_sink(s, cfg):
+        sink = make_sink(s, cfg)
+
+        def call(batch_df, batch_id):
+            active.append({q.id for q in spark.streams.active} - before)
+            sink(batch_df, batch_id)
+        return call
+
+    monkeypatch.setattr(daemon, "_make_sink", counting_sink)
 
     register_fake_binlog_source(spark)
     toml = f"""
@@ -121,7 +137,7 @@ server_id = 77
     p.write_text(toml)
     cfg = DaemonConfig.from_toml(p)
     assert cfg.validate() == []
-    sparksess, queries, server = run(
+    sparksess, query, server = run(
         cfg, spark,
         source_format="dolphinbeat_binlog_fake",
         source_options_extra={"schema_snapshot": "", "n_trx": "6",
@@ -132,8 +148,11 @@ server_id = 77
         trigger_once=True,
     )
     try:
-        for q in queries:
-            q.awaitTermination(120)
+        query.awaitTermination(120)
+        # two sinks, one streaming query while they run
+        assert len(active) == 2 and all(a == {query.id} for a in active)
+        assert not (tmp_path / "ckp" / "all").exists()
+        assert (tmp_path / "ckp" / "_stream" / "offsets").is_dir()
         all_ops = spark.read.parquet(f"{tmp_path}/out/all/batch=*")
         by_op = {r["op_type"]: r["n"] for r in
                  all_ops.groupBy("op_type").count()
@@ -148,9 +167,6 @@ server_id = 77
         assert rows_only.filter("table <> 'fake_t'").count() == 0
 
         # daemon-level counters: counted ONCE despite two sinks
-        # (run() starts the dedicated metrics query)
-        from dolphinbeat_spark.streaming.metrics import PipelineMetrics
-
         # the metrics listener instance is attached inside run(); read
         # through the control server instead (the operator's view)
         port = server._httpd.server_address[1]
@@ -234,7 +250,7 @@ shard_count = 3
     assert plan["source"]["mode"] == "arrow-executor-shards(3)"
     assert plan["source"]["readers"] == 1  # one stream, N executor tasks
 
-    _, queries, server = run(
+    _, query, server = run(
         cfg, spark,
         source_format="dolphinbeat_binlog_fake_arrow",
         source_options_extra={"schema_snapshot": "", "n_trx": "5",
@@ -242,8 +258,7 @@ shard_count = 3
         trigger_once=True,
     )
     try:
-        for q in queries:
-            q.awaitTermination(120)
+        query.awaitTermination(120)
         all_ops = spark.read.parquet(f"{tmp_path}/out/all/batch=*")
         by_op = {r["op_type"]: r["n"] for r in
                  all_ops.groupBy("op_type").count()
@@ -254,8 +269,7 @@ shard_count = 3
     finally:
         if server:
             server.stop()
-        for q in queries:
-            q.stop()
+        query.stop()
 
 
 def test_daemon_file_reader_backfill(spark, tmp_path):
@@ -281,9 +295,8 @@ def test_daemon_file_reader_backfill(spark, tmp_path):
     plan = resolve_plan(cfg)
     assert plan["source"]["mode"].startswith("file-replay(")
     assert plan["source"]["readers"] == 1
-    spark_, queries, server = run(cfg, spark=spark, trigger_once=True)
-    for q in queries:
-        q.awaitTermination(120)
+    spark_, query, server = run(cfg, spark=spark, trigger_once=True)
+    query.awaitTermination(120)
     out = spark.read.parquet(str(tmp_path / "out" / "batch=*"))
     ops = {r["op_type"] for r in out.select("op_type").distinct().collect()}
     assert {"insert", "update", "delete", "ddl"} <= ops
@@ -365,12 +378,48 @@ def test_dry_run_rejects_bad_kafka_encoder_and_compression(tmp_path, capsys, cfg
     assert main(["--config", str(ok), "--dry-run"]) == 0
 
 
+@pytest.mark.parametrize("name", ["", "../x", "a/b", "_stream"],
+                         ids=["empty", "parent", "nested", "reserved"])
+def test_dry_run_rejects_sink_names_that_are_not_one_state_dir(tmp_path, capsys, name):
+    """A sink name is its state directory under [checkpoint] dir, so it
+    must be one non-empty path component and not the daemon query's
+    ``_stream`` checkpoint."""
+    from dolphinbeat_spark.daemon import main
+
+    p = tmp_path / "d.toml"
+    p.write_text(f'mysql_addr = "127.0.0.1:3306"\nserver_id = 9\n'
+                 f'[[sink]]\ntype = "stdout"\nname = "{name}"\n')
+    assert main(["--config", str(p), "--dry-run"]) == 1
+    assert f"sink {name!r}: name must be one non-empty path component" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("old", ["all", "_metrics"])
+def test_run_refuses_an_old_per_query_checkpoint(spark, tmp_path, old):
+    """A checkpoint root from the one-query-per-sink layout (a sink's
+    or the op-count query's own ``offsets``) stops run() with a typed
+    error naming the directory, before any query starts."""
+    from dolphinbeat_spark.daemon import CheckpointLayoutError, SinkBlock, run
+
+    (tmp_path / "ckp" / old / "offsets").mkdir(parents=True)
+    cfg = DaemonConfig(reader="file", binlog_file_path=str(tmp_path / "x.binlog"),
+                       checkpoint_dir=str(tmp_path / "ckp"),
+                       tracker_dir=str(tmp_path / "schema"),
+                       sinks=[SinkBlock(type="stdout", name="all",
+                                        cfg={"out_dir": str(tmp_path / "out")})])
+    assert cfg.validate() == []
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(CheckpointLayoutError, match=str(tmp_path / "ckp" / old)):
+        run(cfg, spark, trigger_once=True)
+    assert {q.id for q in spark.streams.active} == before
+    assert not (tmp_path / "out").exists()
+
+
 @pytest.fixture
 def kafka_daemon(spark, tmp_path, monkeypatch):
     """``start(producer, encoder)``: run() with one kafka block over the
     fixture source, the producer client replaced by ``producer`` and the
-    control server on an ephemeral port; returns (kafka query, op-count
-    query, control server), all stopped at teardown."""
+    control server on an ephemeral port; returns (the daemon's one
+    query, control server), both stopped at teardown."""
     from dolphinbeat_spark.daemon import run
     from dolphinbeat_spark.schema.registry import SchemaRegistry
     from dolphinbeat_spark.sinks import ordered
@@ -392,18 +441,20 @@ def kafka_daemon(spark, tmp_path, monkeypatch):
         cfg.http_addr = "127.0.0.1:0"
         assert cfg.validate() == []
         monkeypatch.setattr(ordered, "_confluent_producer", lambda bootstrap: producer)
-        _, queries, server = run(cfg, spark, source_format="dolphinbeat_fixture",
-                                 source_options_extra={"batch_size": "100"},
-                                 trigger_once=True)
-        started.append((queries, server))
-        assert [q.name for q in queries] == ["k", "pipeline_metrics"]
-        return queries[0], queries[1], server
+        before = {q.id for q in spark.streams.active}
+        _, query, server = run(cfg, spark, source_format="dolphinbeat_fixture",
+                               source_options_extra={"batch_size": "100"},
+                               trigger_once=True)
+        started.append((query, server))
+        # one query delivers the kafka block AND counts the ops
+        assert query.name == "dolphinbeat"
+        assert {q.id for q in spark.streams.active} - before <= {query.id}
+        return query, server
 
     yield start
-    for queries, server in started:
+    for query, server in started:
         server.stop()
-        for q in queries:
-            q.stop()
+        query.stop()
 
 
 @pytest.mark.parametrize("encoder", ["protobuf", "json"])
@@ -419,10 +470,9 @@ def test_daemon_kafka_sink_delivers_source_ops_in_seq_order(spark, tmp_path, kaf
     from dolphinbeat_spark.sources.fixture_source import golden_envelope_df
 
     producer = FakeProducer()
-    q, counts_q, server = kafka_daemon(producer, encoder)
+    q, server = kafka_daemon(producer, encoder)
     q.awaitTermination(120)
-    counts_q.awaitTermination(120)
-    assert q.exception() is None and counts_q.exception() is None
+    assert q.exception() is None
     src = sorted(
         golden_envelope_df(spark).collect(),
         key=lambda r: (r["log_name"] or "", r["log_pos"], OP_RANK.get(r["op_type"], 3),
@@ -461,7 +511,7 @@ def test_daemon_kafka_sink_failed_delivery_commits_nothing(tmp_path, kafka_daemo
     DeliveryError, and the batch's seq meta is not recorded."""
     from conftest import FakeProducer
 
-    q, _, _ = kafka_daemon(FakeProducer(fail_keys=[1]), "protobuf")
+    q, _ = kafka_daemon(FakeProducer(fail_keys=[1]), "protobuf")
     with pytest.raises(Exception, match="DeliveryError"):
         q.awaitTermination(120)
     assert not list((tmp_path / "ckp" / "k" / "_seq_meta").glob("*.json"))

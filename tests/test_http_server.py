@@ -149,28 +149,21 @@ def test_debug_pprof_routes(server):
 
 def test_pipeline_feeds_metrics_counters_once(spark, tmp_path):
     """End-to-end: build_pipeline over the golden envelope stream with
-    TWO sinks, plus its start_op_counts query, feeds the op counters
-    EXACTLY ONCE — daemon-level counters like the reference's, not once
-    per sink."""
+    TWO sinks feeds the op counters EXACTLY ONCE — daemon-level
+    counters like the reference's, not once per sink."""
     from dolphinbeat_spark.envelope import golden_sequences
+    from dolphinbeat_spark.sinks.ordered import OrderedFileSink
     from dolphinbeat_spark.sources.fixture_source import register_fixture_source
     from dolphinbeat_spark.streaming.metrics import PipelineMetrics
-    from dolphinbeat_spark.streaming.pipeline import SinkSpec, build_pipeline, start_op_counts
+    from dolphinbeat_spark.streaming.pipeline import build_pipeline
 
     register_fixture_source(spark)
     stream = spark.readStream.format("dolphinbeat_fixture").option(
         "batch_size", "6"
     ).load()
     m = PipelineMetrics()
-    specs = [
-        SinkSpec(name=f"s{i}", out_dir=str(tmp_path / f"out{i}"),
-                 checkpoint_dir=str(tmp_path / f"ckp{i}"))
-        for i in (1, 2)
-    ]
-    queries = build_pipeline(stream, specs, trigger_once=True)
-    queries.append(start_op_counts(stream, m, str(tmp_path / "_metrics")))
-    for q in queries:
-        q.awaitTermination(120)
+    sinks = [(f"s{i}", [], [], OrderedFileSink(str(tmp_path / f"out{i}"))) for i in (1, 2)]
+    build_pipeline(stream, sinks, str(tmp_path / "ckp"), m, trigger_once=True).awaitTermination(120)
 
     got = m.counters()
     golden = golden_sequences()

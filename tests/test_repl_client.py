@@ -534,35 +534,44 @@ def test_arrow_live_reader_starts_from_now_and_never_clamps(master):
     assert f.latestOffset()["pos"] == 104
 
 
-@pytest.mark.parametrize("reader", ["simple", "arrow"])
-def test_daemon_live_readers_over_socket(spark, tmp_path, master, reader):
+@pytest.mark.parametrize(
+    "reader,n_sinks",
+    [("simple", 1), ("arrow", 1), ("simple", 2), ("arrow", 2)],
+    ids=["simple", "arrow", "simple-2sinks", "arrow-2sinks"],
+)
+def test_daemon_live_readers_over_socket(spark, tmp_path, master, reader, n_sinks):
     """daemon.run with ``reader = "simple"`` / ``"arrow"`` and no
     injected source: the registered live source reaches the master
-    through the native client, and the stdout sink commits exactly the
-    row ops the file provider decodes from the same fixture."""
+    through the native client, and every stdout sink commits exactly
+    the row ops the file provider decodes from the same fixture. The
+    daemon reads the binlog once, however many sinks it has: one
+    replica registration and one dump (MySQL kills the older dump of a
+    second connection that reuses the replica id)."""
     from dolphinbeat_spark.daemon import DaemonConfig, SinkBlock, run
     from dolphinbeat_spark.schema.registry import SchemaRegistry
 
     (tmp_path / "schema").mkdir()
     SchemaRegistry().save(tmp_path / "schema" / "schema_snapshot.json")
+    names = ["all", "again"][:n_sinks]
     cfg = DaemonConfig(
         mysql_addr=f"127.0.0.1:{master.port}", mysql_user=master.user,
         mysql_password=master.password, server_id=7, reader=reader,
         checkpoint_dir=str(tmp_path / "ckp"),
         tracker_dir=str(tmp_path / "schema"),
-        sinks=[SinkBlock(type="stdout", name="all",
-                         cfg={"out_dir": str(tmp_path / "out")})],
+        sinks=[SinkBlock(type="stdout", name=n, cfg={"out_dir": str(tmp_path / n)})
+               for n in names],
     )
     assert cfg.validate() == []
-    _, queries, _server = run(
+    _, query, _server = run(
         cfg, spark, trigger_once=True,
         source_options_extra={"file": "replay.binlog", "pos": "4"})
     try:
-        for q in queries:
-            q.awaitTermination(120)
+        query.awaitTermination(120)
     finally:
-        for q in queries:
-            q.stop()
-    out = spark.read.parquet(str(tmp_path / "out" / "batch=*"))
-    assert _row_ops(r.asDict() for r in out.collect()) == _file_row_ops()
-    assert master.dumps and all(d["kind"] == "pos" for d in master.dumps)
+        query.stop()
+    for n in names:
+        out = spark.read.parquet(str(tmp_path / n / "batch=*"))
+        assert _row_ops(r.asDict() for r in out.collect()) == _file_row_ops()
+    # the replica id is the source's client_server_id (default 1001)
+    assert master.registered == [1001]
+    assert len(master.dumps) == 1 and master.dumps[0]["kind"] == "pos"

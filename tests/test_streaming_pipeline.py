@@ -17,12 +17,8 @@ from dolphinbeat_spark.sinks.ordered import (
     read_with_consumer_dedup,
 )
 from dolphinbeat_spark.sources.fixture_source import golden_envelope_df, register_fixture_source
-from dolphinbeat_spark.streaming.pipeline import SinkSpec, build_pipeline, windowed_op_counts
-
-
-def _run_all(queries, timeout=120):
-    for q in queries:
-        q.awaitTermination(timeout)
+from dolphinbeat_spark.streaming.metrics import PipelineMetrics
+from dolphinbeat_spark.streaming.pipeline import build_pipeline, windowed_op_counts
 
 
 def test_fixture_source_streams_all_ops(spark, tmp_path):
@@ -46,22 +42,21 @@ def test_fixture_source_streams_all_ops(spark, tmp_path):
 def test_pipeline_fanout_filters_and_order(spark, tmp_path):
     register_fixture_source(spark)
     stream = spark.readStream.format("dolphinbeat_fixture").option("batch_size", "3").load()
+    before, active = {q.id for q in spark.streams.active}, []
+
+    def all_ops_sink(batch_df, batch_id):
+        active.append({q.id for q in spark.streams.active} - before)
+        OrderedFileSink(str(tmp_path / "all"), producer_id=1)(batch_df, batch_id)
+
     sinks = [
-        SinkSpec(
-            name="all_ops",
-            out_dir=str(tmp_path / "all"),
-            checkpoint_dir=str(tmp_path / "ckp_all"),
-            producer_id=1,
-        ),
-        SinkSpec(
-            name="filtered",
-            out_dir=str(tmp_path / "filt"),
-            checkpoint_dir=str(tmp_path / "ckp_filt"),
-            include=[r"nomatch\..*"],
-            producer_id=2,
-        ),
+        ("all_ops", [], [], all_ops_sink),
+        ("filtered", [r"nomatch\..*"], [],
+         OrderedFileSink(str(tmp_path / "filt"), producer_id=2)),
     ]
-    _run_all(build_pipeline(stream, sinks))
+    query = build_pipeline(stream, sinks, str(tmp_path / "ckp"))
+    assert query.awaitTermination(120)
+    # both sinks ride one query: one source read per batch
+    assert active and all(a == {query.id} for a in active)
 
     all_ops = read_with_consumer_dedup(spark, str(tmp_path / "all")).collect()
     # duplicate retry op collapses under (log_name, log_pos)-ordered seq?
@@ -76,6 +71,54 @@ def test_pipeline_fanout_filters_and_order(spark, tmp_path):
     filt = read_with_consumer_dedup(spark, str(tmp_path / "filt")).collect()
     kinds = {r["op_type"] for r in filt}
     assert "insert" not in kinds and "begin" in kinds  # markers flow, rows filtered
+
+
+def test_crash_between_two_sinks_commits_replays_to_clean_outputs(spark, tmp_path):
+    """A batch that fails after sink 1 of 2 committed is replayed under
+    the same id on restart: sink 1 re-delivers identical rows (its
+    ``_seq_meta`` keeps the base), sink 2 delivers for the first time,
+    and both outputs equal a clean run's. The op counters move only
+    after every sink returned, so the failed attempt adds nothing."""
+    register_fixture_source(spark)
+
+    def run(root, second, metrics):
+        stream = spark.readStream.format("dolphinbeat_fixture").option("batch_size", "4").load()
+        return build_pipeline(stream, [
+            ("one", [], [], OrderedFileSink(str(root / "one"), producer_id=1)),
+            ("two", [r"test\.canal_test"], [], second),
+        ], str(root / "ckp"), metrics)
+
+    def outputs(root):
+        return [read_with_consumer_dedup(spark, str(root / n)).drop("batch").collect()
+                for n in ("one", "two")]
+
+    clean = tmp_path / "clean"
+    clean_metrics = PipelineMetrics()
+    assert run(clean, OrderedFileSink(str(clean / "two"), producer_id=2),
+               clean_metrics).awaitTermination(120)
+
+    crashed, m = tmp_path / "crashed", PipelineMetrics()
+
+    def broken(batch_df, batch_id):
+        assert (crashed / "one" / "_seq_meta" / f"{batch_id}.json").exists()
+        raise OSError("sink two is down")
+
+    with pytest.raises(Exception, match="sink two is down"):
+        run(crashed, broken, m).awaitTermination(120)
+    assert m.counters()["trx_total"] == 0
+    assert run(crashed, OrderedFileSink(str(crashed / "two"), producer_id=2),
+               m).awaitTermination(120)
+
+    got, want = outputs(crashed), outputs(clean)
+    assert got == want and all(want)
+    all_ops = want[0]
+    assert m.counters() == clean_metrics.counters()
+    assert m.counters()["trx_total"] == sum(r["op_type"] == "commit" for r in all_ops) > 0
+    assert m.counters()["iud_total"] == sum(
+        r["op_type"] in ("insert", "update", "delete") for r in all_ops) > 0
+    text = m.prometheus_text()
+    assert f"trx_total {m.counters()['trx_total']}\n" in text
+    assert f"iud_total {m.counters()['iud_total']}\n" in text
 
 
 def test_ordered_sink_replay_is_idempotent(spark, tmp_path):
